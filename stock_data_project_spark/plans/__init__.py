@@ -26,73 +26,71 @@ from stock_data_project_spark.plans import llm, olap, sql_api, stock, stream
 # set is reviewable as one diff. Keys beyond the list follow in module
 # order. New keys MUST debut inside the list in their round.
 #
-# r14 window (50), per the SURVEY §5 r14 commitment and the r13
-# verdict (item 8): lead with the four named r13→r14 deferrals (the
-# only keys whose driver evidence predates r9 — the staleness
-# contract's offenders after CORRECTNESS_r13 landed), then the three
-# r13-built staged debuts (fully oracled, sf0.001/0.01 parity +
-# semantic pins in tests/test_next15_staged.py /
-# test_next16_staged.py), then knn_graph KEPT in-window (r13 verdict
-# item 8: its output memo is removed this round — the fix needs
-# fresh driver verification), then re-grades oldest-evidence-first
-# from the r9-evidence cohort (42 of its 56 keys, module order;
-# the remainder carries r9 evidence, age 4 ≤ MAX_AGE at newest=13).
+# r15 window (50), per the r14 verdict (item 9): lead with the eight
+# r9-evidence keys — the staleness contract's offenders after
+# CORRECTNESS_r14 landed (age 5 > MAX_AGE) — then tfidf_retrieval KEPT
+# in-window (its r14 fan-out regression fix needs fresh driver
+# verification), then re-grades oldest-evidence-first from the
+# r10-evidence cohort (41 of its 49 keys, module order). The eight
+# r10 keys that do not fit — customers_with_orders,
+# distinct_parts_per_supplier, winsorized_stats, sql_decayed_revenue,
+# stream_anomaly, stream_scd2, scd2_late_gate, stream_dedup_watermark —
+# reach age 4 = MAX_AGE at newest=14 and MUST lead the r16 window.
 _GRADE_ORDER = [
-    # r13→r14 deferrals (r8 evidence; rows-only, pandas/parity-pinned)
-    "wilder_rsi",
-    "ann_ivfpq",
-    "hll_rollup",
-    "stream_running_stats",
-    # r13 staged debuts (never driver-graded, by window mechanics)
-    "graph_ann_search",
-    "classifier_calibration",
-    "stream_ingest_neardup",
-    # r13 verdict item 8: memo removal needs fresh driver evidence
-    "knn_graph",
-    # r9-evidence cohort (42 of 56; module order: stock, llm, olap,
-    # sql_api, stream)
-    "daily_return",
-    "log_return",
-    "rolling_volatility",
-    "filter_range",
-    "annual_join",
-    "ohlc_daily",
-    "sma_cross",
-    "cumulative_return",
-    "drawdown",
-    "bollinger",
-    "rsi",
-    "incremental_watermark",
-    "mfi",
-    "ulcer_index",
-    "linear_interp",
-    "aroon",
-    "cmf",
-    "keltner",
-    "trix",
-    "adx",
-    "frequent_tokens",
-    "contamination_flags",
-    "bigram_logprob",
-    "token_entropy",
-    "ann_range_search",
-    "quality_percentile_gate",
-    "bm25_rank",
-    "doc_compression_ratio",
-    "ngram_novelty",
+    # r9 evidence (age 5 at newest=14; module order: olap, stream)
+    "cumulative_distinct_users",
+    "rfm_segmentation",
+    "pareto_revenue",
+    "basket_lift",
+    "mad_outliers",
+    "stream_distinct_users",
+    "stream_sliding_avg",
+    "stream_funnel_state",
+    # r14 verdict item 9: the fan-out regression fix needs fresh
+    # driver evidence
     "tfidf_retrieval",
-    "embedding_dim_stats",
-    "scd2_dim",
-    "scd2_asof",
-    "session_concurrency",
-    "data_quality_audit",
-    "expectation_gate",
-    "user_influence",
-    "snapshot_delta",
-    "salted_join_revenue",
-    "quantile_rollup",
-    "skew_salted_revenue",
-    "order_gap_stats",
+    # r10-evidence cohort (41 of 49; module order: stock, llm, olap)
+    "macd",
+    "dim_country",
+    "williams_r",
+    "cci",
+    "force_index",
+    "ease_of_movement",
+    "tfidf_top_terms",
+    "clean_corpus",
+    "embedding_dedup",
+    "embedding_dedup_ivf",
+    "media_pipeline",
+    "dedup_exact",
+    "dedup_minhash",
+    "dedup_simhash",
+    "ngram_jaccard",
+    "ann_cosine_topk",
+    "ann_lsh",
+    "ann_ivf",
+    "lang_id",
+    "text_quality",
+    "token_count",
+    "doc_fingerprint",
+    "doc_winnow",
+    "gopher_quality",
+    "ngram_repetition",
+    "capped_counts",
+    "split_counts",
+    "bpe_token_count",
+    "pack_stats",
+    "remix_counts",
+    "image_phash_dedup",
+    "audio_spectral",
+    "audio_fingerprint_dedup",
+    "video_scene_cuts",
+    "chunk_documents",
+    "approx_stats",
+    "tpch_q12",
+    "tpch_q13",
+    "tpch_q17",
+    "rollup_sales",
+    "customers_no_orders",
 ]
 
 # Keys built THIS round that debut in the NEXT round's committed
@@ -101,10 +99,8 @@ _GRADE_ORDER = [
 # every never-graded key to be either in _GRADE_ORDER or listed here
 # — a key can't sit ungraded silently (the stream_incremental_star
 # class); the next rotation MUST pull these into _GRADE_ORDER.
-# r14: empty — all three r13 builds (graph_ann_search,
-# classifier_calibration, stream_ingest_neardup) debuted into
-# _GRADE_ORDER above; r14 is an optimization round and builds no
-# new keys.
+# r15: empty — the round builds no new keys; the window above is
+# filled entirely by re-grades.
 STAGED_DEBUTS: frozenset[str] = frozenset()
 
 _MODULES = (stock, llm, olap, sql_api, stream)
