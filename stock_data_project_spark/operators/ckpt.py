@@ -15,10 +15,11 @@ store), at the cost of a write+read per round.
 (r13 verdict item 7): local default unchanged (localCheckpoint);
 set ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1`` to switch every loop site
 to reliable checkpoints. When the switch is on and no checkpoint
-directory is configured, a local fallback under the JVM's temp dir
-is installed so the mode is testable without a cluster — real
-deployments must point ``spark.sparkContext.setCheckpointDir`` at
-shared storage (a driver-local fallback is NOT executor-loss-safe).
+directory is configured, a local fallback under the driver's temp
+dir (``tempfile.gettempdir()``) is installed so the mode is testable
+without a cluster — real deployments must point
+``spark.sparkContext.setCheckpointDir`` at shared storage (a
+driver-local fallback is NOT executor-loss-safe).
 
 Scope: the ITERATIVE loop sites only. Single-shot materializations
 (rank.py's ranged frame, cache.checkpoint_release, the dedup
@@ -30,6 +31,7 @@ mid-recursion loss wedges minutes of progress.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame
 
@@ -55,6 +57,8 @@ def loop_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
         # testable-without-a-cluster fallback; deployments must set a
         # shared-storage dir themselves (see module docstring)
         sc.setCheckpointDir(
-            os.path.join("/tmp", f"spark-reliable-ckpt-{sc.applicationId}")
+            os.path.join(
+                tempfile.gettempdir(), f"spark-reliable-ckpt-{sc.applicationId}"
+            )
         )
     return df.checkpoint(eager=eager)

@@ -85,11 +85,11 @@ def run_daily_pipeline(spark, stocks_csv_path: str, out_dir: str) -> None:
             .select(surrogate_key("entity_name").alias("entity_key"), "entity_name")
         )
         dim.write.mode("overwrite").parquet(os.path.join(out_dir, "dim_entity"))
-        # dim_date reads back the fact parquet just written instead of
-        # re-running the whole window pipeline a second time
-        written = spark.read.parquet(os.path.join(out_dir, "fact_market"))
+        # dim_date from the cached rows with the fact's own date cast
+        # (bars_from_stocks_csv), instead of re-running the window
+        # pipeline or listing and re-reading the fact just written
         dates = (
-            written.select("date")
+            good.select(F.col("Date").cast("timestamp").alias("date"))
             .distinct()
             .select(
                 F.col("date").alias("date_key"),

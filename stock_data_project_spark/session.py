@@ -51,6 +51,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
+        # delete reliable-checkpoint files (operators/ckpt.py) once
+        # their RDD is garbage-collected; a context conf, ignored if
+        # set on a running session
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # local mode runs all executor threads inside the driver JVM,
         # so this is the WHOLE heap: size it for the 32-way scale
         # smokes (36M-row shuffles spill under 8g); cluster deployments

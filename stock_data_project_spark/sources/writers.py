@@ -89,15 +89,25 @@ def write_partitioned(
     mode: str = "overwrite",
     max_records_per_file: int = 5_000_000,
 ) -> None:
-    """Partitioned parquet write. ``maxRecordsPerFile`` caps file size
-    so a skewed partition value can't produce a multi-GB file; at
-    100 TB pair this with a repartition on the partition columns so
-    each task writes few files (avoids the many-small-files problem).
+    """Partitioned parquet write, one file per partition value.
+
+    A write task emits one file per partition value it holds, so
+    writing the frame as it arrives costs (tasks × values) small
+    files, more on wider machines. With ``partition_cols`` the frame
+    is first rebalanced on them (the ``rebalance`` hint): rows are
+    hash-grouped by partition value, so each value lands in one task
+    and is written as one file. The hint rather than
+    ``repartition(*cols)``: under AQE (always on, see session.py)
+    ``OptimizeSkewInRebalancePartitions`` splits a value larger than
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` into
+    advisory-sized files, where a plain repartition would write a
+    skewed value from a single task. ``maxRecordsPerFile`` still caps
+    any one file.
     """
-    w = df.write.mode(mode).option("maxRecordsPerFile", max_records_per_file)
+    w = df.write
     if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(path)
+        w = df.hint("rebalance", *partition_cols).write.partitionBy(*partition_cols)
+    w.mode(mode).option("maxRecordsPerFile", max_records_per_file).parquet(path)
 
 
 def compact_parquet(

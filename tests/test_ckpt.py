@@ -12,6 +12,7 @@ checkpoint directory.
 from __future__ import annotations
 
 import os
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -70,6 +71,14 @@ def test_reliable_mode_writes_checkpoint_dir(spark, monkeypatch):
     assert not jdir.isEmpty()
     path = jdir.get().replace("file:", "")
     assert os.path.isdir(path) and os.listdir(path)
+    # no directory was configured, so the fallback sits under the
+    # platform temp dir
+    assert os.path.realpath(path).startswith(
+        os.path.realpath(tempfile.gettempdir()) + os.sep
+    )
+    # and its files are deleted once their RDD is garbage-collected
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
 
 
 def test_local_mode_is_default(spark, monkeypatch):

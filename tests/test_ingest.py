@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from stock_data_project_spark.operators.ingest import stocks_csv_to_fact
 from stock_data_project_spark.sources import read_csv, stocks_csv_schema
+from tests.conftest import assert_one_file_per_month
 
 
 def _reference_csv(path: str) -> pd.DataFrame:
@@ -49,9 +50,14 @@ def test_run_daily_pipeline_end_to_end(spark):
         _reference_csv(csv_path)
         out = os.path.join(d, "star")
         run_daily_pipeline(spark, csv_path, out)
-        fact = spark.read.parquet(os.path.join(out, "fact_market"))
+        fact_dir = os.path.join(out, "fact_market")
+        fact = spark.read.parquet(fact_dir)
         dim = spark.read.parquet(os.path.join(out, "dim_entity"))
         assert fact.count() == 50
+        assert_one_file_per_month(fact_dir)
+        dates = spark.read.parquet(os.path.join(out, "dim_date"))
+        assert dates.count() == 25
+        assert dates.join(fact, dates.date_key == fact.date).count() == 50
         assert dim.count() == 2
         # the Streamlit charts query shape (app.py:106-110) on the output
         one = (

@@ -64,21 +64,53 @@ def test_read_json_with_schema(spark):
         assert df.filter(F.col("tag") == "t1").count() == 2
 
 
+def _parquet_files(d: str) -> list[str]:
+    return [f for f in os.listdir(d) if f.endswith(".parquet")]
+
+
 def test_write_partitioned_roundtrip(spark):
+    # every one of the 8 input partitions holds all 3 values
     df = spark.createDataFrame(
         [(i, ["a", "b", "c"][i % 3], float(i)) for i in range(300)],
         "id long, part string, v double",
-    )
+    ).repartition(8)
     with tempfile.TemporaryDirectory() as d:
         out = os.path.join(d, "t")
         write_partitioned(df, out, partition_cols=["part"])
         # hive-style partition dirs exist -> partition pruning works
-        assert sorted(p for p in os.listdir(out) if p.startswith("part=")) == [
-            "part=a", "part=b", "part=c",
-        ]
+        parts = sorted(p for p in os.listdir(out) if p.startswith("part="))
+        assert parts == ["part=a", "part=b", "part=c"]
+        # rebalanced on the partition column: one file per value, not
+        # one per (input partition x value)
+        for p in parts:
+            assert len(_parquet_files(os.path.join(out, p))) == 1, p
         back = spark.read.parquet(out)
         assert back.count() == 300
         assert back.filter(F.col("part") == "a").count() == 100
+
+
+def test_write_partitioned_splits_skewed_value(spark, tmp_path):
+    """A value larger than AQE's advisory partition size is split into
+    several files instead of being written by one task."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "256k")
+    try:
+        df = spark.range(0, 200_000, numPartitions=8).select(
+            "id",
+            F.when(F.col("id") < 180_000, "hot")
+            .otherwise(F.concat(F.lit("c"), (F.col("id") % 4).cast("string")))
+            .alias("part"),
+            (F.col("id") * 1.5).alias("v"),
+        )
+        out = str(tmp_path / "t")
+        write_partitioned(df, out, partition_cols=["part"])
+    finally:
+        spark.conf.set(key, old)
+    assert len(_parquet_files(os.path.join(out, "part=hot"))) > 1
+    back = spark.read.parquet(out)
+    assert back.count() == 200_000
+    assert back.filter(F.col("part") == "hot").count() == 180_000
 
 
 def test_ts_layout_normalization_nanos_and_ntz_micros(spark, tmp_path):
