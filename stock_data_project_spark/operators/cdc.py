@@ -4,7 +4,7 @@
 of a keyed table — the primitive behind incremental replication,
 audit trails, and MERGE-less upsert pipelines (this repo's
 transactional MERGE stand-in: diff → append the delta → pointer
-commit, see streaming/pipeline.py's snapshot-commit protocol).
+commit, see the epoch-commit protocol in sources/commit.py).
 
 Scale shape: ONE full-outer hash join on the key columns — both
 sides shuffle once on the same uniform key — with change detection

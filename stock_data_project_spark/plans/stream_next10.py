@@ -36,63 +36,50 @@ for unbounded sources; no per-row state anywhere.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stock_data_project_spark.catalog import load_table
+from stock_data_project_spark.streaming.feeder import feed_drops
 
 _SCA_DELAY = "90 minutes"
 _SCA_DELAY_SQL = "INTERVAL 90 MINUTE"
 _SCA_BUCKET_US = 300_000_000  # 5 minutes
 _SCA_HOUR_US = 3_600_000_000
+_SCA_DROPS = 4  # event-time-ordered drops, one micro-batch each
 
 
 def stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stock_data_project_spark.plans.stream_next6 import _feed, _ordered_drops
-
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
-    root = tempfile.mkdtemp(prefix="sca_")
-    try:
-        stages = _ordered_drops(spark, ev, root)
 
-        def build(stream):
-            buckets = (
-                stream.withWatermark("ts", _SCA_DELAY)
-                .groupBy(F.window("ts", "5 minutes").alias("w5"), "event_type")
-                .agg(F.count(F.lit(1)).alias("n5"))
-            )
-            hourly = (
-                buckets.groupBy(
-                    F.window(F.window_time("w5"), "1 hour").alias("wh"),
-                    "event_type",
-                )
-                .agg(
-                    F.sum("n5").alias("n_events"),
-                    F.count(F.lit(1)).alias("n_buckets"),
-                    F.max("n5").alias("max_bucket"),
-                )
-            )
-            return hourly, "append"
-
-        sunk = _feed(
-            spark, stages, os.path.join(root, "drops"), build, "stream_chained_agg"
+    def writer(stream):
+        buckets = (
+            stream.withWatermark("ts", _SCA_DELAY)
+            .groupBy(F.window("ts", "5 minutes").alias("w5"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n5"))
         )
-        rows = [
-            (
-                r["wh"]["start"],
-                r["event_type"],
-                int(r["n_events"]),
-                int(r["n_buckets"]),
-                int(r["max_bucket"]),
-            )
-            for r in sunk.collect()
-        ]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        hourly = buckets.groupBy(
+            F.window(F.window_time("w5"), "1 hour").alias("wh"), "event_type"
+        ).agg(
+            F.sum("n5").alias("n_events"),
+            F.count(F.lit(1)).alias("n_buckets"),
+            F.max("n5").alias("max_bucket"),
+        )
+        return hourly.writeStream.outputMode("append").format("memory").queryName(
+            "stream_chained_agg"
+        )
+
+    feed_drops(ev, _SCA_DROPS, writer)
+    rows = [
+        (
+            r["wh"]["start"],
+            r["event_type"],
+            int(r["n_events"]),
+            int(r["n_buckets"]),
+            int(r["max_bucket"]),
+        )
+        for r in spark.table("stream_chained_agg").collect()
+    ]
     return spark.createDataFrame(
         rows,
         "window_start timestamp, event_type string, n_events long,"

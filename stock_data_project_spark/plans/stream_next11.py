@@ -3,9 +3,9 @@
 ``stream_incremental_star`` was the registry's one side-effecting §2
 row (foreachBatch parquet upsert — no DataFrame to hand the driver).
 The r10 verdict asked for its observable to be graded: run the real
-streaming pipeline (``streaming/pipeline.run_incremental_star`` —
-availableNow trigger, checkpoint, crash-safe pointer commit, stable
-symlink) into a process-scoped scratch dir, then return the COMMITTED
+streaming pipeline (``streaming/pipeline.run_incremental_star``, an
+availableNow query committing through ``sources/commit.py``) into a
+process-scoped scratch dir, then return the COMMITTED
 fact table. Because the upsert's merge state is associative and the
 replay guard makes redeliveries no-ops, the committed table equals
 the batch daily bars exactly — so the key is FULLY oracled against
@@ -17,8 +17,7 @@ because testdata ts is unique per (event_type, ts) — probed r11).
 Scale: the per-batch work is one groupBy rollup + one merge groupBy
 over the committed table — at 100 TB the read-merge-rewrite becomes
 a table format's MERGE/snapshot commit (documented seam in
-streaming/pipeline.py); the graded observable is unchanged by that
-swap.
+sources/commit.py); the graded observable is unchanged by that swap.
 """
 
 from __future__ import annotations

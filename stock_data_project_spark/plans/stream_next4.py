@@ -7,7 +7,7 @@
   until the final drop, arriving ~20 days late against a 2-hour
   watermark); ONE long-lived watermarked hourly tumbling-count query
   consumes the drops as one micro-batch each
-  (``maxFilesPerTrigger=1`` + per-drop ``processAllAvailable``), and
+  (``streaming/feeder.feed_drops``), and
   the graded output is the append-mode sink itself — the finalized
   windows WITH the late rows excluded by the engine's state gate.
 
@@ -41,14 +41,11 @@
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stock_data_project_spark.catalog import load_table
+from stock_data_project_spark.streaming.feeder import feed_drops
 
 _SLD_MOD = 23
 _SLD_DELAY = "2 hours"
@@ -67,51 +64,24 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("event_id") < b2, 1)
         .otherwise(2)
     )
-    tagged = ev.withColumn("_drop", drop_of)
-    root = tempfile.mkdtemp(prefix="late_data_")
-    try:
-        in_dir = os.path.join(root, "drops")
-        os.makedirs(in_dir)
-        stages = []
-        for k in range(3):
-            stage = os.path.join(root, f"stage_{k}")
-            tagged.filter(F.col("_drop") == k).drop("_drop").coalesce(
-                1
-            ).write.parquet(stage)
-            part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-            stages.append(os.path.join(stage, part))
-        schema = spark.read.parquet(stages[0]).schema
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(in_dir)
-        )
+
+    def writer(stream):
         agg = (
             stream.withWatermark("ts", _SLD_DELAY)
             .groupBy(F.window("ts", "1 hour").alias("win"))
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("stream_late_data")
-            .start()
+        return agg.writeStream.outputMode("append").format("memory").queryName(
+            "stream_late_data"
         )
-        try:
-            for k in range(3):
-                shutil.copy(stages[k], os.path.join(in_dir, f"drop_{k}.parquet"))
-                q.processAllAvailable()
-        finally:
-            q.stop()
-        # literal data out of the sink (the temp inputs are deleted on
-        # return, so no lineage may reach them)
-        rows = [
-            (r["win"]["start"], int(r["n"]))
-            for r in spark.table("stream_late_data").collect()
-        ]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    feed_drops(ev, 3, writer, drop_of=drop_of)
+    # literal data out of the sink (the temp inputs are deleted, so no
+    # lineage may reach them)
+    rows = [
+        (r["win"]["start"], int(r["n"]))
+        for r in spark.table("stream_late_data").collect()
+    ]
     return spark.createDataFrame(rows, "window_start timestamp, n long")
 
 

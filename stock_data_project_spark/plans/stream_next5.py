@@ -29,14 +29,11 @@
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stock_data_project_spark.catalog import load_table
+from stock_data_project_spark.streaming.feeder import feed_drops
 
 _SDU_DELAY = "90 minutes"
 _SDU_DELAY_SQL = "INTERVAL 90 MINUTE"
@@ -44,38 +41,9 @@ _SDU_DROPS = 4
 
 
 def stream_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    # persist BEFORE branching: the 4 per-drop filters re-execute the
-    # global ntile sort otherwise, and tied timestamps could land in
-    # different quartiles across re-executions — a row duplicated into
-    # (or missing from) the feed. Same class as the CLAUDE.md range-
-    # exchange rule; the harness sort is single-partition but the tie
-    # hazard is identical (rank.py).
-    ranked = (
-        ev.select("user_id", "ts")
-        .withColumn("_q", F.ntile(_SDU_DROPS).over(Window.orderBy("ts")))
-        .persist()
-    )
-    root = tempfile.mkdtemp(prefix="sdu_")
-    try:
-        ranked.count()  # materialize the cache before the branches
-        in_dir = os.path.join(root, "drops")
-        os.makedirs(in_dir)
-        stages = []
-        for k in range(1, _SDU_DROPS + 1):
-            stage = os.path.join(root, f"stage_{k}")
-            ranked.filter(F.col("_q") == k).drop("_q").coalesce(1).write.parquet(
-                stage
-            )
-            part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-            stages.append(os.path.join(stage, part))
-        schema = spark.read.parquet(stages[0]).schema
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(in_dir)
-        )
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
+
+    def writer(stream):
         dedup = (
             stream.withColumn("win_start", F.date_trunc("hour", F.col("ts")))
             .withWatermark("win_start", _SDU_DELAY)
@@ -84,25 +52,15 @@ def stream_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = dedup.groupBy(F.window("win_start", "1 hour").alias("win")).agg(
             F.count(F.lit(1)).alias("n_users")
         )
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("stream_distinct_users")
-            .start()
+        return agg.writeStream.outputMode("append").format("memory").queryName(
+            "stream_distinct_users"
         )
-        try:
-            for k in range(_SDU_DROPS):
-                shutil.copy(stages[k], os.path.join(in_dir, f"drop_{k}.parquet"))
-                q.processAllAvailable()
-        finally:
-            q.stop()
-        rows = [
-            (r["win"]["start"], int(r["n_users"]))
-            for r in spark.table("stream_distinct_users").collect()
-        ]
-    finally:
-        ranked.unpersist()
-        shutil.rmtree(root, ignore_errors=True)
+
+    feed_drops(ev, _SDU_DROPS, writer)
+    rows = [
+        (r["win"]["start"], int(r["n_users"]))
+        for r in spark.table("stream_distinct_users").collect()
+    ]
     return spark.createDataFrame(rows, "window_start timestamp, n_users long")
 
 

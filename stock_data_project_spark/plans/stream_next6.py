@@ -25,24 +25,22 @@
   invariant to the processing order of equal-ts events (the only
   rows whose cross-batch order the ts-ordered feed doesn't pin).
 
-Harness (both keys): the events table is split into 4 event-time-
-ordered drops (ntile over ts, persisted before branching per the
-range-exchange rule) consumed one micro-batch each — an in-order
-feed, so no row is ever late and the only engine recurrence the
-oracle must replay is the final-watermark cut.
+Harness (both keys): ``streaming/feeder.feed_drops`` splits the
+events table into 4 event-time-ordered drops (ntile over ts,
+persisted before branching per the range-exchange rule) consumed
+one micro-batch each — an in-order feed, so no row is ever late and
+the only engine recurrence the oracle must replay is the
+final-watermark cut.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stock_data_project_spark.catalog import load_table
 from stock_data_project_spark.operators.rounding import exact_avg6_expr, exact_avg6_sql
+from stock_data_project_spark.streaming.feeder import feed_drops
 
 _DROPS = 4
 _SLIDE_DELAY = "47 minutes"
@@ -50,76 +48,28 @@ _SLIDE_DELAY_SQL = "INTERVAL 47 MINUTE"
 _HOP_US = 1_800_000_000  # 30 minutes
 
 
-def _ordered_drops(spark: SparkSession, df: DataFrame, root: str) -> list[str]:
-    """Write ``df`` as _DROPS event-time-ordered parquet files.
-    Persist BEFORE branching: the per-drop filters would re-execute
-    the harness sort otherwise and tied timestamps could migrate
-    between quartiles across re-executions (rank.py / CLAUDE.md)."""
-    ranked = df.withColumn("_q", F.ntile(_DROPS).over(Window.orderBy("ts"))).persist()
-    try:
-        ranked.count()
-        stages = []
-        for k in range(1, _DROPS + 1):
-            stage = os.path.join(root, f"stage_{k}")
-            ranked.filter(F.col("_q") == k).drop("_q").coalesce(1).write.parquet(stage)
-            part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-            stages.append(os.path.join(stage, part))
-    finally:
-        # release even when a stage write fails (exception-path
-        # variant of the r12 persist-leak class)
-        ranked.unpersist()
-    return stages
-
-
-def _feed(spark: SparkSession, stages: list[str], in_dir: str, build, name: str):
-    """readStream over ``in_dir``, one drop per micro-batch, through
-    ``build(stream)`` into a memory sink named ``name``."""
-    os.makedirs(in_dir)
-    schema = spark.read.parquet(stages[0]).schema
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(in_dir)
-    )
-    out, mode = build(stream)
-    q = out.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    try:
-        for k, stage in enumerate(stages):
-            shutil.copy(stage, os.path.join(in_dir, f"drop_{k}.parquet"))
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
-
-
 def stream_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("ts", "value")
-    root = tempfile.mkdtemp(prefix="ssa_")
-    try:
-        stages = _ordered_drops(spark, ev, root)
 
-        def build(stream):
-            agg = (
-                stream.withWatermark("ts", _SLIDE_DELAY)
-                .groupBy(F.window("ts", "2 hours", "30 minutes").alias("win"))
-                .agg(
-                    F.count(F.lit(1)).alias("n_events"),
-                    F.count("value").alias("_nv"),
-                    F.sum(F.col("value").cast("decimal(18,6)")).alias("_sum_d"),
-                )
+    def writer(stream):
+        agg = (
+            stream.withWatermark("ts", _SLIDE_DELAY)
+            .groupBy(F.window("ts", "2 hours", "30 minutes").alias("win"))
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.count("value").alias("_nv"),
+                F.sum(F.col("value").cast("decimal(18,6)")).alias("_sum_d"),
             )
-            return agg, "append"
-
-        sunk = _feed(
-            spark, stages, os.path.join(root, "drops"), build, "stream_sliding_avg"
         )
-        rows = [
-            (r["win"]["start"], int(r["n_events"]), int(r["_nv"]), r["_sum_d"])
-            for r in sunk.collect()
-        ]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return agg.writeStream.outputMode("append").format("memory").queryName(
+            "stream_sliding_avg"
+        )
+
+    feed_drops(ev, _DROPS, writer)
+    rows = [
+        (r["win"]["start"], int(r["n_events"]), int(r["_nv"]), r["_sum_d"])
+        for r in spark.table("stream_sliding_avg").collect()
+    ]
     out = spark.createDataFrame(
         rows, "window_start timestamp, n_events long, _nv long, _sum_d decimal(18,6)"
     )
@@ -206,39 +156,34 @@ def stream_funnel_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    root = tempfile.mkdtemp(prefix="sfs_")
-    try:
-        stages = _ordered_drops(spark, ev, root)
-
-        def build(stream):
-            out = stream.groupBy("user_id").applyInPandasWithState(
-                update,
-                outputStructType=(
-                    "user_id long, funnel_stage int, stage_ts timestamp, updates long"
-                ),
-                stateStructType="stage int, anchor_us long, updates long",
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            return out, "update"
-
-        sunk = _feed(
-            spark, stages, os.path.join(root, "drops"), build, "stream_funnel_state"
+    def writer(stream):
+        out = stream.groupBy("user_id").applyInPandasWithState(
+            update,
+            outputStructType=(
+                "user_id long, funnel_stage int, stage_ts timestamp, updates long"
+            ),
+            stateStructType="stage int, anchor_us long, updates long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        # update-mode sink appends one row per (user, batch-seen);
-        # the final state is the row with the highest update counter
-        w = Window.partitionBy("user_id").orderBy(F.desc("updates"))
-        final = (
-            sunk.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("user_id", "funnel_stage", "stage_ts")
+        return out.writeStream.outputMode("update").format("memory").queryName(
+            "stream_funnel_state"
         )
-        rows = [
-            (int(r["user_id"]), int(r["funnel_stage"]), r["stage_ts"])
-            for r in final.collect()
-        ]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    feed_drops(ev, _DROPS, writer)
+    # update-mode sink appends one row per (user, batch-seen); the
+    # final state is the row with the highest update counter
+    w = Window.partitionBy("user_id").orderBy(F.desc("updates"))
+    final = (
+        spark.table("stream_funnel_state")
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("user_id", "funnel_stage", "stage_ts")
+    )
+    rows = [
+        (int(r["user_id"]), int(r["funnel_stage"]), r["stage_ts"])
+        for r in final.collect()
+    ]
     return spark.createDataFrame(
         rows, "user_id long, funnel_stage int, stage_ts timestamp"
     )

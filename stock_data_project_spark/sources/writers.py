@@ -126,7 +126,7 @@ def compact_parquet(
     Writes to a NEW directory and returns stats; it deliberately does
     NOT mutate ``src`` in place — swap visibility with whatever
     commit mechanism owns the table (a metastore location update, or
-    the pointer-file snapshot commit in ``streaming/pipeline.py``).
+    the pointer-file epoch commit in ``sources/commit.py``).
     In-place swaps are where readers observe half-states; keeping
     this function pure makes the crash story the caller's single
     concern.

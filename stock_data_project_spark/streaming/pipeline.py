@@ -4,19 +4,30 @@ The reference's ingest is a daily Airflow batch (fetch_stocks.py
 DAG); its streaming-equivalent capabilities here use the Spark
 file-stream source over the same parquet, so the identical logical
 plans run unbounded: watermarked tumbling windows, session windows,
-and an incremental star-schema upsert via ``foreachBatch``.
+and the ``foreachBatch`` sinks that keep a store current (the
+incremental star upsert, incremental SCD2 and the exact and near-dup
+ingest gates). Every such sink commits through
+``sources/commit.py`` (epoch dirs, one pointer rename, loud failure
+on stale state), and every one is driven by ``_run_sink``.
 
 Local tests drive each query to completion with
 ``processAllAvailable()`` on the bounded testdata — semantically the
-"stream caught up" state — then read the memory sink.
+"stream caught up" state — then read the memory sink. Multi-drop
+scenarios go through ``streaming/feeder.feed_drops``.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from stock_data_project_spark.sources import commit
+from stock_data_project_spark.streaming.feeder import drop_stream, feed_drops
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream source over the events table.
@@ -290,96 +301,19 @@ def combine_bars(parts: DataFrame) -> DataFrame:
     )
 
 
-_POINTER = "_last_epoch"
 _LINK = "fact_bars"
 
 
-def _committed(out_dir: str) -> tuple[int, str | None]:
-    """(epoch, data dir) of the last committed upsert; (-1, None)
-    before the first commit. The pointer file is the single source of
-    truth — data dirs not named by it are uncommitted garbage.
-
-    Stale or foreign state FAILS LOUDLY instead of parsing as 'no
-    commit' (r2 ADVICE): an unreadable pointer, a pointer naming a
-    missing dir, or a real (non-symlink) directory squatting on the
-    stable name would otherwise make the next epoch merge from
-    nothing and commit a pointer that permanently truncates history
-    to a single batch."""
-    ptr = os.path.join(out_dir, _POINTER)
-    link = os.path.join(out_dir, _LINK)
-    try:
-        with open(ptr) as fh:
-            raw = fh.read()
-    except FileNotFoundError:
-        # no pointer is legal only on a FRESH out_dir; a real dir at
-        # the stable name means a previous (pre-pointer) layout
-        if os.path.exists(link) and not os.path.islink(link):
-            raise RuntimeError(
-                f"{link} exists but is not a symlink: out_dir holds state "
-                "from another layout; reset pointer+checkpoint+data dirs "
-                "together or none"
-            )
-        return -1, None
-    try:
-        epoch_s, dirname = raw.strip().split("\t")
-        epoch = int(epoch_s)
-    except ValueError as exc:
-        raise RuntimeError(
-            f"unparseable commit pointer {ptr} ({raw!r}): refusing to "
-            "treat unknown state as 'no commit'; reset "
-            "pointer+checkpoint+data dirs together or none"
-        ) from exc
-    data_dir = os.path.join(out_dir, dirname)
-    if not os.path.isdir(data_dir):
-        raise RuntimeError(
-            f"commit pointer names missing data dir {data_dir}: out_dir "
-            "is corrupt; reset pointer+checkpoint+data dirs together"
-        )
-    return epoch, data_dir
-
-
-def _refresh_link(out_dir: str, data_dir: str) -> None:
-    """Point the stable-name symlink at the committed dir via create
-    + rename (atomic replace): readers of out_dir/fact_bars never see
-    a missing or half-written table."""
-    link = os.path.join(out_dir, _LINK)
-    tmp_link = os.path.join(out_dir, f".{_LINK}.tmp")
-    if os.path.islink(tmp_link) or os.path.exists(tmp_link):
-        os.remove(tmp_link)
-    os.symlink(os.path.basename(data_dir), tmp_link)
-    os.rename(tmp_link, link)
-
-
 def upsert_bars_batch(batch: DataFrame, epoch_id: int, out_dir: str) -> None:
-    """One micro-batch of the incremental star upsert. Commit
-    protocol (crash-safe at every point):
-
-    1. read the pointer file -> last committed (epoch, dir);
-       replayed epochs (foreachBatch is at-least-once) are no-ops, or
-       their events would double-count into volume/sum_value;
-    2. merge the batch's bars with the committed dir's contents and
-       write to a NEW epoch-named dir (never in place);
-    3. commit = write pointer tmp + one ``os.rename`` — a single
-       atomic step, so a crash anywhere leaves the pointer naming a
-       fully-written dir: before the rename the old epoch stays
-       committed and the replay simply redoes the merge from it;
-       after, the replay guard makes the redelivery a no-op. (The
-       previous two-rename dir swap had a window where the target was
-       missing and a replay would silently restart history from one
-       batch.)
-    4. refresh the stable-name symlink and sweep stale dirs — keeping
-       the PREVIOUS committed dir one extra commit cycle, so a reader
-       that resolved the symlink just before this commit can finish
-       its scan (r2 ADVICE: an immediate rmtree could delete parquet
-       files mid-read). The visibility guarantee is therefore: a
-       reader never sees a missing/half-written table, and its
-       resolved snapshot outlives it as long as it finishes within
-       one commit interval; slower readers must retry.
-    """
-    committed_epoch, committed_dir = _committed(out_dir)
+    """One micro-batch of the incremental star upsert: merge the
+    batch's bars with the committed table into a new
+    ``fact_bars_<epoch>`` dir, commit it behind the ``fact_bars``
+    stable symlink and sweep the stale dirs. Commit protocol, replay
+    guard and readers' grace window: ``sources/commit.py``."""
+    committed_epoch, committed_dir = commit.committed(out_dir, _LINK)
     if epoch_id <= committed_epoch:
-        if committed_dir:
-            _refresh_link(out_dir, committed_dir)  # crash after commit, before link
+        # replay: re-publishing heals a link lost after the commit
+        commit.publish(out_dir, committed_epoch, committed_dir, _LINK)
         return
     sp = batch.sparkSession
     # the pointer names only fully-committed dirs, so a read failure
@@ -390,19 +324,21 @@ def upsert_bars_batch(batch: DataFrame, epoch_id: int, out_dir: str) -> None:
     merged = combine_bars(existing.unionByName(bars)) if existing is not None else bars
     data_dir = os.path.join(out_dir, f"fact_bars_{epoch_id}")
     merged.write.mode("overwrite").parquet(data_dir)
-    ptr_tmp = os.path.join(out_dir, f".{_POINTER}.tmp")
-    with open(ptr_tmp, "w") as fh:
-        fh.write(f"{epoch_id}\t{os.path.basename(data_dir)}")
-    os.rename(ptr_tmp, os.path.join(out_dir, _POINTER))  # THE commit
-    _refresh_link(out_dir, data_dir)
-    import shutil
+    commit.publish(out_dir, epoch_id, data_dir, _LINK)
+    commit.sweep(out_dir, data_dir, committed_dir)
 
-    keep = {os.path.basename(data_dir)}
-    if committed_dir:
-        keep.add(os.path.basename(committed_dir))  # readers' grace window
-    for name in os.listdir(out_dir):
-        if name.startswith("fact_bars_") and name not in keep:
-            shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
+
+def _run_sink(stream: DataFrame, sink, checkpoint: str) -> None:
+    """The one driver of the ``foreachBatch`` sinks: run
+    ``sink(batch, epoch_id)`` over every micro-batch available now,
+    then return (a drop dir streams one file per micro-batch)."""
+    q = (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 def run_incremental_star(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
@@ -426,71 +362,26 @@ def run_incremental_star(spark: SparkSession, sf_dir: str, out_dir: str) -> None
     ``out_dir`` — reset all together or none. ``out_dir/fact_bars``
     is a stable symlink to the committed table.
     """
-    ev = read_events_stream(spark, sf_dir)
-
-    q = (
-        ev.writeStream.foreachBatch(
-            lambda batch, epoch_id: upsert_bars_batch(batch, epoch_id, out_dir)
-        )
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+    _run_sink(
+        read_events_stream(spark, sf_dir),
+        lambda batch, epoch_id: upsert_bars_batch(batch, epoch_id, out_dir),
+        os.path.join(out_dir, "_checkpoint"),
     )
-    q.awaitTermination()
 
 
 # --- streaming ingest gate: cross-run dedup at the door -------------
-
-_DEDUP_POINTER = "_dedup_last_epoch"
-
-
-def _dedup_committed(out_dir: str) -> int:
-    """Last committed ingest epoch; -1 on a fresh out_dir. Foreign or
-    unparseable state fails loudly (same rule as ``_committed``)."""
-    ptr = os.path.join(out_dir, _DEDUP_POINTER)
-    try:
-        with open(ptr) as fh:
-            raw = fh.read()
-    except FileNotFoundError:
-        return -1
-    try:
-        return int(raw.strip())
-    except ValueError as exc:
-        raise RuntimeError(
-            f"unparseable ingest pointer {ptr} ({raw!r}); reset "
-            "pointer+checkpoint+epoch dirs together or none"
-        ) from exc
-
-
-def _dedup_epoch_dirs(out_dir: str, prefix: str, upto: int) -> list[str]:
-    out = []
-    for name in sorted(os.listdir(out_dir) if os.path.isdir(out_dir) else []):
-        if name.startswith(prefix):
-            try:
-                epoch = int(name.rsplit("_", 1)[1])
-            except ValueError:
-                continue
-            if epoch <= upto:
-                out.append(os.path.join(out_dir, name))
-    return out
 
 
 def ingest_dedup_batch(batch: DataFrame, epoch_id: int, out_dir: str) -> None:
     """One micro-batch of the streaming ingest gate: admit only
     documents whose content fingerprint is NEW across every previous
     committed epoch (``operators.dedup.incremental_dedup``), then
-    commit. Crash/replay-safe at every point under foreachBatch's
-    at-least-once contract:
-
-    - survivors and their fingerprints land in EPOCH-NAMED dirs
-      (``docs_epoch_N`` / ``hashes_epoch_N``), written with overwrite
-      — a replayed half-written epoch rewrites the same dirs;
-    - the history read unions only hash dirs with epoch ≤ the
-      committed pointer, so a crash mid-write can never make this
-      batch's own (partial) hashes visible to its retry — which
-      would silently drop the batch's survivors on replay;
-    - commit = pointer tmp + one atomic rename AFTER both dirs are
-      fully written; replayed epochs ≤ pointer are no-ops.
+    commit. Survivors and their fingerprints land in ``docs_epoch_N``
+    / ``hashes_epoch_N`` and the pointer names ``docs_epoch_N``
+    (``sources/commit.py``). The history read unions only hash dirs
+    with epoch ≤ the committed pointer, so a crash mid-write can never
+    make this batch's own (partial) hashes visible to its retry —
+    which would silently drop the batch's survivors on replay.
 
     At scale the hash-dir family is exactly the append-only store
     ``incremental_dedup`` documents: periodically rewrite it with
@@ -500,102 +391,81 @@ def ingest_dedup_batch(batch: DataFrame, epoch_id: int, out_dir: str) -> None:
     """
     from stock_data_project_spark.operators.dedup import incremental_dedup
 
-    committed = _dedup_committed(out_dir)
-    if epoch_id <= committed:
+    committed_epoch, _ = commit.committed(out_dir)
+    if epoch_id <= committed_epoch:
         return
     os.makedirs(out_dir, exist_ok=True)
     sp = batch.sparkSession
-    hist_dirs = _dedup_epoch_dirs(out_dir, "hashes_epoch_", committed)
+    hist_dirs = commit.epoch_dirs(out_dir, "hashes_epoch_", committed_epoch)
     history = sp.read.parquet(*hist_dirs) if hist_dirs else None
     survivors, hashes = incremental_dedup(batch, history)
-    survivors.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"docs_epoch_{epoch_id}")
-    )
+    docs_dir = os.path.join(out_dir, f"docs_epoch_{epoch_id}")
+    survivors.write.mode("overwrite").parquet(docs_dir)
     hashes.write.mode("overwrite").parquet(
         os.path.join(out_dir, f"hashes_epoch_{epoch_id}")
     )
-    ptr_tmp = os.path.join(out_dir, f".{_DEDUP_POINTER}.tmp")
-    with open(ptr_tmp, "w") as fh:
-        fh.write(str(epoch_id))
-    os.rename(ptr_tmp, os.path.join(out_dir, _DEDUP_POINTER))  # THE commit
+    commit.publish(out_dir, epoch_id, docs_dir)
 
 
 def run_ingest_dedup(spark: SparkSession, in_dir: str, out_dir: str, checkpoint: str) -> None:
     """Streaming ingest gate over a documents drop directory: each
     new parquet file becomes a micro-batch, deduped against all
-    previously committed content before admission. Drive with
-    ``processAllAvailable`` + ``stop`` per drop (the test pattern) or
-    leave running against a live directory."""
-    schema = spark.read.parquet(in_dir).schema  # probe from existing drop
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(in_dir)
+    previously committed content before admission. Each call
+    processes the drops present and returns; the checkpoint carries
+    the position to the next call."""
+    _run_sink(
+        drop_stream(spark, in_dir),
+        lambda b, e: ingest_dedup_batch(b, e, out_dir),
+        checkpoint,
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, e: ingest_dedup_batch(b, e, out_dir)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
 
 
 def read_ingested(spark: SparkSession, out_dir: str) -> DataFrame:
     """Reader view of the admitted corpus: union of committed epoch
     dirs only (uncommitted partials are invisible)."""
-    dirs = _dedup_epoch_dirs(out_dir, "docs_epoch_", _dedup_committed(out_dir))
+    epoch, _ = commit.committed(out_dir)
+    dirs = commit.epoch_dirs(out_dir, "docs_epoch_", epoch)
     if not dirs:
         raise FileNotFoundError(f"no committed ingest epochs under {out_dir}")
     return spark.read.parquet(*dirs)
 
 
+def _feed_gate(spark: SparkSession, sf_dir: str, gate_batch, out_dir: str) -> int:
+    """Feed the documents table as three deterministic drops
+    (``doc_id % 3``, epoch k = drop k) through one ingest-gate sink
+    into ``out_dir``; returns the committed epoch."""
+    from stock_data_project_spark.catalog import load_table
+
+    feed_drops(
+        load_table(spark, sf_dir, "documents"),
+        3,
+        lambda s: s.writeStream.foreachBatch(lambda b, e: gate_batch(b, e, out_dir)),
+        drop_of=F.col("doc_id") % 3,
+    )
+    return commit.committed(out_dir)[0]
+
+
 def stream_ingest_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graded wrapper for the streaming ingest gate (r4): split the
     documents table into three deterministic drops (``doc_id % 3``),
-    stream each through ``run_ingest_dedup`` in order, and return the
-    committed per-epoch admitted counts — the pure observable of the
-    side-effecting pipeline (epoch dirs + pointer live in a temp dir
-    that is deleted before returning, so the result is literal data
-    with no lineage into the sink).
+    stream them in order through ``ingest_dedup_batch``, and return
+    the committed per-epoch admitted counts — the pure observable of
+    the side-effecting pipeline (epoch dirs + pointer live in a temp
+    dir that is deleted before returning, so the result is literal
+    data with no lineage into the sink).
 
     Epoch e's admitted count = distinct content fingerprints whose
     FIRST drop is e (within-batch collapsed, cross-batch anti-joined
     against the committed history) — exactly expressible in SQL, so
     unlike the library entry points this wrapper is fully oracled.
     """
-    import shutil
-    import tempfile
-
-    from stock_data_project_spark.catalog import load_table
-
     root = tempfile.mkdtemp(prefix="ingest_gate_")
     try:
-        in_dir = os.path.join(root, "drops")
         out_dir = os.path.join(root, "ingested")
-        ckpt = os.path.join(root, "ckpt")
-        os.makedirs(in_dir)
-        docs = load_table(spark, sf_dir, "documents")
-        for k in range(3):
-            stage = os.path.join(root, f"stage_{k}")
-            docs.filter(F.col("doc_id") % 3 == k).coalesce(1).write.parquet(stage)
-            part = next(
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            )
-            shutil.copy(
-                os.path.join(stage, part), os.path.join(in_dir, f"drop_{k}.parquet")
-            )
-            run_ingest_dedup(spark, in_dir, out_dir, ckpt)
+        epoch = _feed_gate(spark, sf_dir, ingest_dedup_batch, out_dir)
         counts = [
-            (
-                int(d.rsplit("_", 1)[1]),
-                spark.read.parquet(os.path.join(out_dir, d)).count(),
-            )
-            for d in sorted(os.listdir(out_dir))
-            if d.startswith("docs_epoch_")
+            (int(d.rsplit("_", 1)[1]), spark.read.parquet(d).count())
+            for d in commit.epoch_dirs(out_dir, "docs_epoch_", epoch)
         ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -609,38 +479,42 @@ def stream_ingest_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is rejected when any of its engine-neutral MinHash LSH bands
 # (operators/dedup.neutral_minhash_bands) collides with the
 # committed band store — the continuous corpus-ingest shape of the
-# batch dedup_minhash family (r12 verdict item 7). Same crash-safe
-# epoch-dir + pointer-rename commit as the exact gate; the band
-# store is the same append-only family incremental_dedup documents
-# (compact + bucket periodically at scale; the pointer swap stays
-# the commit).
+# batch dedup_minhash family (r12 verdict item 7). Same epoch-family
+# commit as the exact gate (sources/commit.py); the band store is the
+# same append-only family incremental_dedup documents (compact +
+# bucket periodically at scale; the pointer swap stays the commit).
+
+_NEARDUP_STATS = (
+    "epoch int, n_admitted bigint, n_rejected_history bigint, "
+    "n_rejected_batch bigint"
+)
 
 
 def ingest_neardup_batch(batch: DataFrame, epoch_id: int, out_dir: str) -> None:
     """One micro-batch of the near-dup gate: LSH-gate the batch
     against the committed band store (operators/dedup.lsh_gate —
     history rejection first, then deterministic min-id winner
-    election per band bucket WITHIN the batch), commit survivors +
-    their band rows + the epoch's gate stats behind one atomic
-    pointer rename. Replay-safe exactly like ``ingest_dedup_batch``:
-    epoch-named overwrite dirs, history reads only ≤ pointer,
-    replayed epochs ≤ pointer are no-ops."""
+    election per band bucket WITHIN the batch), then commit survivors
+    (``docs_epoch_N``, named by the pointer), their band rows and the
+    epoch's gate stats exactly like ``ingest_dedup_batch``
+    (``sources/commit.py``)."""
     from stock_data_project_spark.operators.dedup import lsh_gate
 
-    committed = _dedup_committed(out_dir)
-    if epoch_id <= committed:
+    committed_epoch, _ = commit.committed(out_dir)
+    if epoch_id <= committed_epoch:
         return
     os.makedirs(out_dir, exist_ok=True)
     sp = batch.sparkSession
-    hist_dirs = _dedup_epoch_dirs(out_dir, "bands_epoch_", committed)
+    hist_dirs = commit.epoch_dirs(out_dir, "bands_epoch_", committed_epoch)
     history = sp.read.parquet(*hist_dirs) if hist_dirs else None
     admitted, admitted_bands, rej_hist, rej_batch = lsh_gate(batch, history)
     # admitted feeds the doc filter, the band-store write AND the
     # stats count — one bounded (ids-only) materialization
     admitted = admitted.localCheckpoint(eager=True)
-    batch.join(admitted, "doc_id", "left_semi").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out_dir, f"docs_epoch_{epoch_id}"))
+    docs_dir = os.path.join(out_dir, f"docs_epoch_{epoch_id}")
+    batch.join(admitted, "doc_id", "left_semi").write.mode("overwrite").parquet(
+        docs_dir
+    )
     admitted_bands.write.mode("overwrite").parquet(
         os.path.join(out_dir, f"bands_epoch_{epoch_id}")
     )
@@ -652,17 +526,10 @@ def ingest_neardup_batch(batch: DataFrame, epoch_id: int, out_dir: str) -> None:
             int(rej_batch.count()),
         )
     ]
-    sp.createDataFrame(
-        stats,
-        "epoch int, n_admitted bigint, n_rejected_history bigint, "
-        "n_rejected_batch bigint",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"stats_epoch_{epoch_id}")
-    )
-    ptr_tmp = os.path.join(out_dir, f".{_DEDUP_POINTER}.tmp")
-    with open(ptr_tmp, "w") as fh:
-        fh.write(str(epoch_id))
-    os.rename(ptr_tmp, os.path.join(out_dir, _DEDUP_POINTER))  # THE commit
+    sp.createDataFrame(stats, _NEARDUP_STATS).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(out_dir, f"stats_epoch_{epoch_id}"))
+    commit.publish(out_dir, epoch_id, docs_dir)
 
 
 def run_ingest_neardup(
@@ -670,22 +537,11 @@ def run_ingest_neardup(
 ) -> None:
     """Streaming near-dup gate over a documents drop directory —
     the ``run_ingest_dedup`` driver with the LSH batch gate."""
-    schema = spark.read.parquet(in_dir).schema
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(in_dir)
+    _run_sink(
+        drop_stream(spark, in_dir),
+        lambda b, e: ingest_neardup_batch(b, e, out_dir),
+        checkpoint,
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, e: ingest_neardup_batch(b, e, out_dir)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
 
 
 def stream_ingest_neardup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -696,46 +552,17 @@ def stream_ingest_neardup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrapper. Every count is deterministic (md5-derived MinHash, fixed
     salts, min-id winner election), so the whole three-epoch replay
     is expressible in SQL and the key is FULLY oracled."""
-    import shutil
-    import tempfile
-
-    from stock_data_project_spark.catalog import load_table
-
     root = tempfile.mkdtemp(prefix="ingest_neardup_")
     try:
-        in_dir = os.path.join(root, "drops")
         out_dir = os.path.join(root, "ingested")
-        ckpt = os.path.join(root, "ckpt")
-        os.makedirs(in_dir)
-        docs = load_table(spark, sf_dir, "documents")
-        for k in range(3):
-            stage = os.path.join(root, f"stage_{k}")
-            docs.filter(F.col("doc_id") % 3 == k).coalesce(1).write.parquet(stage)
-            part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-            shutil.copy(
-                os.path.join(stage, part),
-                os.path.join(in_dir, f"drop_{k}.parquet"),
-            )
-            run_ingest_neardup(spark, in_dir, out_dir, ckpt)
-        rows = []
-        for d in sorted(os.listdir(out_dir)):
-            if d.startswith("stats_epoch_"):
-                r = spark.read.parquet(os.path.join(out_dir, d)).collect()[0]
-                rows.append(
-                    (
-                        int(r["epoch"]),
-                        int(r["n_admitted"]),
-                        int(r["n_rejected_history"]),
-                        int(r["n_rejected_batch"]),
-                    )
-                )
+        epoch = _feed_gate(spark, sf_dir, ingest_neardup_batch, out_dir)
+        rows = [
+            tuple(int(v) for v in spark.read.parquet(d).collect()[0])
+            for d in commit.epoch_dirs(out_dir, "stats_epoch_", epoch)
+        ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "epoch int, n_admitted bigint, n_rejected_history bigint, "
-        "n_rejected_batch bigint",
-    )
+    return spark.createDataFrame(rows, _NEARDUP_STATS)
 
 
 def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -866,35 +693,6 @@ def stream_anomaly_counts(
 
 # --- incremental SCD2 maintenance: the dimension stays current -----
 
-_SCD2_POINTER = "_scd2_last_epoch"
-
-
-def _scd2_committed(out_dir: str) -> tuple[int, str | None]:
-    """(epoch, data_dir) of the last committed SCD2 snapshot — same
-    loud-failure contract as ``_committed`` (an unreadable pointer is
-    corruption, never 'no data')."""
-    ptr = os.path.join(out_dir, _SCD2_POINTER)
-    if not os.path.exists(ptr):
-        return -1, None
-    with open(ptr) as fh:
-        raw = fh.read().strip()
-    try:
-        epoch_s, dirname = raw.split("\t")
-        epoch = int(epoch_s)
-    except ValueError:
-        raise RuntimeError(
-            f"unparseable scd2 pointer {ptr} ({raw!r}); reset "
-            "pointer+checkpoint+data dirs together or none"
-        ) from None
-    data_dir = os.path.join(out_dir, dirname)
-    if not os.path.isdir(data_dir):
-        raise RuntimeError(
-            f"scd2 pointer names missing data dir {data_dir}; out_dir "
-            "is corrupt — reset pointer+checkpoint+data dirs together"
-        )
-    return epoch, data_dir
-
-
 def scd2_upsert_batch(
     batch: DataFrame,
     epoch_id: int,
@@ -910,8 +708,9 @@ def scd2_upsert_batch(
     boundary that split a same-tier run in half heals, versions and
     valid_to re-chain. Untouched users' rows are carried over via
     anti join (at scale: partition the state by a user bucket and
-    rewrite only affected buckets). Same crash-safe pointer commit as
-    the star upsert; replayed epochs are no-ops.
+    rewrite only affected buckets). The new snapshot lands in
+    ``scd2_<epoch>`` and commits like the star upsert's, without a
+    stable link (``sources/commit.py``); replayed epochs are no-ops.
 
     Requires per-user event time non-decreasing across batches (an
     append-only log split on time); late data needs a per-user
@@ -929,7 +728,7 @@ def scd2_upsert_batch(
     """
     from stock_data_project_spark.operators.scd2 import merge_runs, scd2_runs
 
-    committed_epoch, committed_dir = _scd2_committed(out_dir)
+    committed_epoch, committed_dir = commit.committed(out_dir)
     if epoch_id <= committed_epoch:
         return
     sp = batch.sparkSession
@@ -1037,18 +836,8 @@ def scd2_upsert_batch(
         state.unpersist()  # all actions over the old state are done
     if tagged is not None:
         tagged.unpersist()  # gate counts + admitted batch consumed
-    ptr_tmp = os.path.join(out_dir, f".{_SCD2_POINTER}.tmp")
-    with open(ptr_tmp, "w") as fh:
-        fh.write(f"{epoch_id}\t{os.path.basename(data_dir)}")
-    os.rename(ptr_tmp, os.path.join(out_dir, _SCD2_POINTER))  # THE commit
-    import shutil
-
-    keep = {os.path.basename(data_dir)}
-    if committed_dir:
-        keep.add(os.path.basename(committed_dir))  # readers' grace window
-    for name in os.listdir(out_dir):
-        if name.startswith("scd2_") and name not in keep:
-            shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
+    commit.publish(out_dir, epoch_id, data_dir)
+    commit.sweep(out_dir, data_dir, committed_dir)
 
 
 def run_incremental_scd2(
@@ -1060,34 +849,22 @@ def run_incremental_scd2(
 ) -> None:
     """Incremental SCD2 over an event drop directory: each new
     parquet file becomes a micro-batch merged into the committed
-    dimension. Drive with ``processAllAvailable`` + ``stop`` per drop
-    (the test pattern) or leave running against a live directory.
+    dimension; each call processes the drops present and returns.
     ``quarantine_dir`` enables the late-data gate (see
     ``scd2_upsert_batch``)."""
-    schema = spark.read.parquet(in_dir).schema
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(in_dir)
+    _run_sink(
+        drop_stream(spark, in_dir),
+        lambda b, e: scd2_upsert_batch(b, e, out_dir, quarantine_dir),
+        checkpoint,
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, e: scd2_upsert_batch(b, e, out_dir, quarantine_dir)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graded wrapper for the incremental SCD2 maintainer: split the
     event log into three TIME-ordered drops (event-id thirds — the
     generator assigns ids in ts order, satisfying the
-    append-only-per-user contract), stream each through
-    ``run_incremental_scd2``, and return the final committed
+    append-only-per-user contract), stream them in order through
+    ``scd2_upsert_batch``, and return the final committed
     dimension as literal rows (the temp sink is deleted before
     returning; Python-scalar rows so the frame builds under the
     driver's Arrow-less session).
@@ -1098,21 +875,13 @@ def stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver comparison IS the streaming-equals-batch theorem at sf0.01
     (tests/test_scd2_stream.py pins it in-repo with drop-boundary
     assertions besides)."""
-    import shutil
-    import tempfile
-
     from stock_data_project_spark.catalog import load_table
 
     root = tempfile.mkdtemp(prefix="scd2_stream_")
     try:
-        in_dir = os.path.join(root, "drops")
         out_dir = os.path.join(root, "state")
-        ckpt = os.path.join(root, "ckpt")
-        os.makedirs(in_dir)
-        os.makedirs(out_dir)
         ev = load_table(spark, sf_dir, "events")
         n = ev.agg(F.max("event_id")).collect()[0][0] + 1
-        bounds = [(0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, n)]
         # The id-thirds split satisfies the maintainer's append-only-
         # per-user-time contract only while the generator assigns
         # event_ids in global ts order. Verify it on THIS data (one
@@ -1120,8 +889,8 @@ def stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         # regenerated testdata layout that breaks it would otherwise
         # fail parity with no diagnostic (r5 advisor finding).
         drop_of = (
-            F.when(F.col("event_id") < bounds[0][1], 0)
-            .when(F.col("event_id") < bounds[1][1], 1)
+            F.when(F.col("event_id") < n // 3, 0)
+            .when(F.col("event_id") < 2 * n // 3, 1)
             .otherwise(2)
         )
         spans = {
@@ -1130,7 +899,7 @@ def stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("ts").alias("lo"), F.max("ts").alias("hi"))
             .collect()
         }
-        for k in range(len(bounds) - 1):
+        for k in range(2):
             if k in spans and k + 1 in spans and spans[k][1] > spans[k + 1][0]:
                 raise RuntimeError(
                     "event_id order no longer tracks ts order: drop "
@@ -1139,18 +908,15 @@ def stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "the SCD2 maintainer's append-only-per-user-time "
                     "contract — re-split drops on ts, not event_id"
                 )
-        for k, (lo, hi) in enumerate(bounds):
-            stage = os.path.join(root, f"stage_{k}")
-            ev.filter(
-                (F.col("event_id") >= lo) & (F.col("event_id") < hi)
-            ).coalesce(1).write.parquet(stage)
-            part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-            shutil.copy(
-                os.path.join(stage, part),
-                os.path.join(in_dir, f"drop_{k}.parquet"),
-            )
-            run_incremental_scd2(spark, in_dir, out_dir, ckpt)
-        _, data_dir = _scd2_committed(out_dir)
+        feed_drops(
+            ev,
+            3,
+            lambda s: s.writeStream.foreachBatch(
+                lambda b, e: scd2_upsert_batch(b, e, out_dir)
+            ),
+            drop_of=drop_of,
+        )
+        _, data_dir = commit.committed(out_dir)
         # last_ts is maintainer-internal watermark state, not part of
         # the graded dimension schema
         final = spark.read.parquet(data_dir).drop("last_ts")
@@ -1185,19 +951,12 @@ def stream_scd2_late_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     as one window expression. The deeper theorem — final dimension ==
     batch build over ADMITTED events only — is pinned in
     tests/test_scd2_stream.py."""
-    import shutil
-    import tempfile
-
     from stock_data_project_spark.catalog import load_table
 
     root = tempfile.mkdtemp(prefix="scd2_late_")
     try:
-        in_dir = os.path.join(root, "drops")
         out_dir = os.path.join(root, "state")
         qdir = os.path.join(root, "quarantine")
-        ckpt = os.path.join(root, "ckpt")
-        os.makedirs(in_dir)
-        os.makedirs(out_dir)
         ev = load_table(spark, sf_dir, "events")
         n = ev.agg(F.max("event_id")).collect()[0][0] + 1
         b1, b2 = n // 3, 2 * n // 3
@@ -1210,22 +969,20 @@ def stream_scd2_late_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .when(F.col("event_id") < b2, 1)
             .otherwise(2)
         )
-        tagged = ev.withColumn("_drop", drop_of)
         delivered = {
             r["_drop"]: r["n"]
-            for r in tagged.groupBy("_drop").agg(F.count(F.lit(1)).alias("n")).collect()
+            for r in ev.groupBy(drop_of.alias("_drop"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
         }
-        for k in range(3):
-            stage = os.path.join(root, f"stage_{k}")
-            tagged.filter(F.col("_drop") == k).drop("_drop").coalesce(
-                1
-            ).write.parquet(stage)
-            part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-            shutil.copy(
-                os.path.join(stage, part),
-                os.path.join(in_dir, f"drop_{k}.parquet"),
-            )
-            run_incremental_scd2(spark, in_dir, out_dir, ckpt, quarantine_dir=qdir)
+        feed_drops(
+            ev,
+            3,
+            lambda s: s.writeStream.foreachBatch(
+                lambda b, e: scd2_upsert_batch(b, e, out_dir, qdir)
+            ),
+            drop_of=drop_of,
+        )
         rows = []
         for k in range(3):
             q_path = os.path.join(qdir, f"epoch_{k}")

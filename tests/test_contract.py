@@ -90,3 +90,28 @@ def test_every_graded_survey_row_has_a_query():
     qkeys = set(entrymod.queries())
     stale = in_survey - qkeys
     assert not stale, f"SURVEY §2 graded rows without a query: {sorted(stale)}"
+
+
+def test_commit_and_drop_feed_live_in_one_module():
+    """Rules CLAUDE.md states in prose, enforced on the package
+    sources: every atomic rename / symlink swap is the epoch commit of
+    ``sources/commit.py`` (one pointer reader, one writer, one
+    loud-failure rule), and every one-file-per-micro-batch drop stream
+    is built by ``streaming/feeder.py`` (multi-drop scenarios run as
+    ONE long-lived query)."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "stock_data_project_spark"
+    assert (pkg / "__init__.py").is_file(), pkg
+    homes = {
+        r"\bos\.(rename|replace|symlink)\b": "sources/commit.py",
+        r"maxFilesPerTrigger": "streaming/feeder.py",
+    }
+    offenders = sorted(
+        f"{path.relative_to(pkg).as_posix()}: {pattern}"
+        for path in pkg.rglob("*.py")
+        for pattern, home in homes.items()
+        if path.relative_to(pkg).as_posix() != home
+        and re.search(pattern, path.read_text())
+    )
+    assert not offenders, offenders

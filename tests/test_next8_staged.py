@@ -99,50 +99,36 @@ def test_dedup_watermark_no_watermark_ties(spark):
 # ---------------------------------------------------- engine-semantic pins
 
 
-def _feed_ddw(spark, tmp_path, drops, delay="30 minutes", name="ddw_pin"):
+def _feed_ddw(spark, drops, delay="30 minutes", name="ddw_pin"):
     """Tiny harness: feed crafted (key, ts) drops through ONE
     dropDuplicatesWithinWatermark query, one micro-batch per drop."""
-    import os
-    import shutil
-
     import pandas as pd
+    from pyspark.sql import functions as F
 
-    root = str(tmp_path)
-    in_dir = os.path.join(root, "in")
-    os.makedirs(in_dir)
-    stages = []
-    for i, d in enumerate(drops):
-        p = os.path.join(root, f"s{i}")
-        spark.createDataFrame(
-            [(k, pd.Timestamp(t).to_pydatetime()) for k, t in d],
-            "k string, ts timestamp",
-        ).coalesce(1).write.parquet(p)
-        stages.append(
-            os.path.join(p, next(f for f in os.listdir(p) if f.endswith(".parquet")))
-        )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(spark.read.parquet(stages[0]).schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(in_dir)
+    from stock_data_project_spark.streaming.feeder import feed_drops
+
+    frame = spark.createDataFrame(
+        [
+            (k, pd.Timestamp(t).to_pydatetime(), i)
+            for i, d in enumerate(drops)
+            for k, t in d
+        ],
+        "k string, ts timestamp, _drop int",
     )
-    out = stream.withWatermark("ts", delay).dropDuplicatesWithinWatermark(["k"])
-    q = (
-        out.writeStream.outputMode("append")
+    feed_drops(
+        frame,
+        len(drops),
+        lambda s: s.withWatermark("ts", delay)
+        .dropDuplicatesWithinWatermark(["k"])
+        .writeStream.outputMode("append")
         .format("memory")
-        .queryName(name)
-        .start()
+        .queryName(name),
+        drop_of=F.col("_drop"),
     )
-    try:
-        for i, s in enumerate(stages):
-            shutil.copy(s, os.path.join(in_dir, f"drop_{i}.parquet"))
-            q.processAllAvailable()
-    finally:
-        q.stop()
     return sorted((r["k"], str(r["ts"])) for r in spark.table(name).collect())
 
 
-def test_ddw_late_gate_precedes_dedup_and_eviction_is_inclusive(spark, tmp_path):
+def test_ddw_late_gate_precedes_dedup_and_eviction_is_inclusive(spark):
     """The r9 probe, pinned: (a) rows older than the batch-entry
     watermark are discarded even when their key's state is LIVE
     (k2); (b) an exact-boundary expiry (expireAt == wm) is evicted —
@@ -156,7 +142,7 @@ def test_ddw_late_gate_precedes_dedup_and_eviction_is_inclusive(spark, tmp_path)
          ("k2", "2024-01-01 00:05:00.5"),   # state live BUT late -> dropped
          ("k3", "2024-01-01 00:45:00.5")],  # on-time fresh -> admitted
     ]
-    got = _feed_ddw(spark, tmp_path, drops, name="ddw_pin_a")
+    got = _feed_ddw(spark, drops, name="ddw_pin_a")
     assert got == sorted(
         [
             ("adv1", "2024-01-01 01:00:00.500000"),
@@ -167,7 +153,7 @@ def test_ddw_late_gate_precedes_dedup_and_eviction_is_inclusive(spark, tmp_path)
     )
 
 
-def test_ddw_duplicate_does_not_extend_expiration(spark, tmp_path):
+def test_ddw_duplicate_does_not_extend_expiration(spark):
     """A non-late duplicate must NOT push out the first event's
     expiration: e1@00:00 is duplicated at 00:20 (state live, on
     time), the watermark then passes 00:30 (first-event expiry), and
@@ -179,7 +165,7 @@ def test_ddw_duplicate_does_not_extend_expiration(spark, tmp_path):
         [("adv3", "2024-01-01 01:05:00.5")],  # wm -> 00:35:00.5
         [("e1", "2024-01-01 00:45:00.5"), ("adv4", "2024-01-01 01:10:00.5")],
     ]
-    got = _feed_ddw(spark, tmp_path, drops, name="ddw_pin_b")
+    got = _feed_ddw(spark, drops, name="ddw_pin_b")
     e1_rows = [t for k, t in got if k == "e1"]
     assert e1_rows == [
         "2024-01-01 00:00:00.500000",

@@ -12,10 +12,9 @@ from pyspark.sql import functions as F
 
 from stock_data_project_spark.catalog import load_table
 from stock_data_project_spark.operators.scd2 import scd2_build
-from stock_data_project_spark.streaming.pipeline import (
-    _scd2_committed,
-    run_incremental_scd2,
-)
+from stock_data_project_spark.sources.commit import committed
+from stock_data_project_spark.streaming.feeder import stage_drops
+from stock_data_project_spark.streaming.pipeline import run_incremental_scd2
 from tests.conftest import SF_SMOKE
 
 
@@ -50,16 +49,18 @@ def test_incremental_scd2_equals_batch(spark):
             amax = a.agg(F.max("ts")).collect()[0][0]
             bmin = b.agg(F.min("ts")).collect()[0][0]
             assert amax <= bmin
-        for i, part in enumerate(splits):
-            # one file per drop; write to a tmp subdir then move the
-            # parquet in so the stream sees whole files only
-            tmp = os.path.join(d, f"w{i}")
-            part.coalesce(1).write.mode("overwrite").parquet(tmp)
-            src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            os.rename(os.path.join(tmp, src), os.path.join(drops, f"drop_{i}.parquet"))
+        drop_of = (
+            F.when(F.col("event_id") <= qs[0], 0)
+            .when(F.col("event_id") <= qs[1], 1)
+            .otherwise(2)
+        )
+        for i, stage in enumerate(stage_drops(ev, 3, d, drop_of)):
+            # one file per drop, staged outside the drop dir and moved
+            # in so the stream sees whole files only
+            os.rename(stage, os.path.join(drops, f"drop_{i}.parquet"))
             run_incremental_scd2(spark, drops, out, ck)
 
-        epoch, data_dir = _scd2_committed(out)
+        epoch, data_dir = committed(out)
         assert epoch >= 2 and data_dir
         final = spark.read.parquet(data_dir)
         expected = scd2_build(ev)
@@ -67,7 +68,7 @@ def test_incremental_scd2_equals_batch(spark):
 
         # replay: re-running with nothing new must not move the pointer
         run_incremental_scd2(spark, drops, out, ck)
-        assert _scd2_committed(out)[0] == epoch
+        assert committed(out)[0] == epoch
 
 
 def test_incremental_scd2_same_ts_boundary(spark):
@@ -91,7 +92,7 @@ def test_incremental_scd2_same_ts_boundary(spark):
     with tempfile.TemporaryDirectory() as out:
         scd2_upsert_batch(batch1, 0, out)
         scd2_upsert_batch(batch2, 1, out)
-        _, data_dir = _scd2_committed(out)
+        _, data_dir = committed(out)
         final = spark.read.parquet(data_dir)
         expected = scd2_build(batch1.unionByName(batch2))
         assert _sorted_rows(final) == _sorted_rows(expected)
@@ -132,7 +133,7 @@ def test_scd2_late_gate_quarantines_and_state_is_clean(spark):
         q1 = spark.read.parquet(os.path.join(qdir, "epoch_1"))
         assert q0.count() == 0
         assert [r["event_id"] for r in q1.collect()] == [3]
-        _, data_dir = _scd2_committed(out)
+        _, data_dir = committed(out)
         final = spark.read.parquet(data_dir)
         admitted = batch1.unionByName(
             batch2.filter(F.col("event_id") != 3)
@@ -140,7 +141,7 @@ def test_scd2_late_gate_quarantines_and_state_is_clean(spark):
         assert _sorted_rows(final) == _sorted_rows(scd2_build(admitted))
         # replay of epoch 1 is a no-op for state AND quarantine
         scd2_upsert_batch(batch2, 1, out, quarantine_dir=qdir)
-        assert _scd2_committed(out)[0] == 1
+        assert committed(out)[0] == 1
 
 
 def test_scd2_late_gate_null_user_group(spark):
@@ -187,7 +188,7 @@ def test_incremental_scd2_null_user_equals_batch(spark):
     with tempfile.TemporaryDirectory() as out:
         scd2_upsert_batch(batch1, 0, out)
         scd2_upsert_batch(batch2, 1, out)
-        _, data_dir = _scd2_committed(out)
+        _, data_dir = committed(out)
         final = spark.read.parquet(data_dir)
         expected = scd2_build(batch1.unionByName(batch2))
 
@@ -232,7 +233,7 @@ def test_scd2_late_gate_null_ts_is_admitted(spark):
         scd2_upsert_batch(batch2, 1, out, quarantine_dir=qdir)
         q1 = spark.read.parquet(os.path.join(qdir, "epoch_1"))
         assert q1.count() == 0  # NULL ts is NOT late
-        _, data_dir = _scd2_committed(out)
+        _, data_dir = committed(out)
         final = spark.read.parquet(data_dir)
         # all three events survive into the dimension's run counts
         assert final.agg(F.sum("n_events")).collect()[0][0] == 3

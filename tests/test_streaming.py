@@ -7,14 +7,18 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from stock_data_project_spark.catalog import load_table
 from stock_data_project_spark.operators.series import daily_bars
 from stock_data_project_spark.streaming.pipeline import (
     combine_bars,
+    ingest_dedup_batch,
     mergeable_bars,
+    read_ingested,
     run_incremental_star,
+    scd2_upsert_batch,
     upsert_bars_batch,
 )
 from tests.conftest import SF_SMOKE
@@ -90,36 +94,89 @@ def test_upsert_survives_crash_windows(spark):
         assert got.exceptAll(want).count() == 0
 
 
-def test_stale_state_fails_loudly_instead_of_truncating(spark):
+# every foreachBatch sink reads its pointer through sources/commit.py:
+# (sink, the epoch dir a well-formed pointer would name)
+_SINKS = {
+    "upsert_bars_batch": (upsert_bars_batch, "events", "fact_bars_3"),
+    "scd2_upsert_batch": (scd2_upsert_batch, "events", "scd2_3"),
+    "ingest_dedup_batch": (ingest_dedup_batch, "documents", "docs_epoch_3"),
+}
+_STALE = [
+    (sink, case)
+    for sink in _SINKS
+    for case in ("unparseable", "missing_dir")
+] + [("upsert_bars_batch", "not_a_symlink")]
+
+
+@pytest.mark.parametrize("sink,case", _STALE, ids=[f"{s}-{c}" for s, c in _STALE])
+def test_stale_state_fails_loudly_instead_of_truncating(spark, sink, case):
     """Unrecognizable commit state must raise, never parse as 'no
     commit' (which would merge the next epoch from nothing and
-    permanently truncate history — r2 ADVICE)."""
+    permanently truncate history — r2 ADVICE). Holds for every sink:
+    an old-format pointer (no tab), a pointer naming a dir that does
+    not exist, and (for the star's stable name) a REAL directory
+    squatting on the symlink name with no pointer."""
     import os
 
-    import pytest
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    b0 = ev.filter(F.col("event_id") % 2 == 0)
-
-    # old-format pointer (no tab)
+    batch_fn, table, dirname = _SINKS[sink]
+    batch = load_table(spark, SF_SMOKE, table)
     with tempfile.TemporaryDirectory() as out:
-        with open(f"{out}/_last_epoch", "w") as fh:
-            fh.write("3")
-        with pytest.raises(RuntimeError, match="unparseable commit pointer"):
-            upsert_bars_batch(b0, 4, out)
+        if case == "not_a_symlink":
+            os.makedirs(f"{out}/fact_bars")
+            match = "not a symlink"
+        else:
+            with open(f"{out}/_last_epoch", "w") as fh:
+                fh.write("3" if case == "unparseable" else f"3\t{dirname}")
+            match = (
+                "unparseable commit pointer"
+                if case == "unparseable"
+                else "missing data dir"
+            )
+        with pytest.raises(RuntimeError, match=match):
+            batch_fn(batch, 4, out)
 
-    # pointer names a dir that does not exist
-    with tempfile.TemporaryDirectory() as out:
-        with open(f"{out}/_last_epoch", "w") as fh:
-            fh.write("3\tfact_bars_3")
-        with pytest.raises(RuntimeError, match="missing data dir"):
-            upsert_bars_batch(b0, 4, out)
 
-    # a REAL directory squatting on the stable symlink name, no pointer
-    with tempfile.TemporaryDirectory() as out:
-        os.makedirs(f"{out}/fact_bars")
-        with pytest.raises(RuntimeError, match="not a symlink"):
-            upsert_bars_batch(b0, 0, out)
+def test_ingest_gate_replay_is_noop_and_crash_is_invisible(spark, tmp_path):
+    """The exact ingest gate's commit under foreachBatch's
+    at-least-once contract: a replayed epoch <= the pointer is a
+    no-op, and the docs/hashes dirs an uncommitted epoch left behind
+    are invisible to ``read_ingested`` AND to the retried epoch's
+    history — were its own partial hashes visible, the retry would
+    reject every one of its documents."""
+    import os
+
+    from stock_data_project_spark.operators.dedup import incremental_dedup
+    from stock_data_project_spark.operators.textops import normalized
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    b0 = docs.filter(F.col("doc_id") % 2 == 0)
+    b1 = docs.filter(F.col("doc_id") % 2 == 1)
+    out = str(tmp_path / "ingested")
+
+    ingest_dedup_batch(b0, 0, out)
+    n0 = read_ingested(spark, out).count()
+    ingest_dedup_batch(b1, 0, out)  # replay with other content
+    assert read_ingested(spark, out).count() == n0
+    assert sorted(os.listdir(out)) == ["_last_epoch", "docs_epoch_0", "hashes_epoch_0"]
+
+    # crash in epoch 1 after both writes, before the pointer rename;
+    # the partial hashes hold every fingerprint of b1
+    survivors, hashes = incremental_dedup(b1)
+    survivors.write.parquet(f"{out}/docs_epoch_1")
+    hashes.write.parquet(f"{out}/hashes_epoch_1")
+    assert read_ingested(spark, out).count() == n0
+
+    ingest_dedup_batch(b1, 1, out)  # the redelivery
+    want = (
+        docs.filter(F.col("text").isNotNull())
+        .select(F.md5(normalized("text")))
+        .distinct()
+        .count()
+    )
+    assert want > n0  # b1 brings new content, so the retry must admit some
+    got = read_ingested(spark, out)
+    assert got.count() == want
+    assert got.select("content_hash").distinct().count() == want
 
 
 def test_partial_batches_merge_losslessly(spark):
