@@ -253,13 +253,13 @@ def main() -> None:
     # "the bench should also report a cold-fit number so the
     # steady-state claim is checkable"). Each listed key memoizes a
     # metadata-sized MODEL artifact (IVF centroids / PQ codebook /
-    # k-means assignment / Bloom bitmap) per session; the warm
-    # numbers above measure the steady state. Here the model memos
+    # Bloom bitmap) per session; the warm numbers above measure the
+    # steady state. Here the model memos
     # are cleared before EVERY run, so `<key>_coldfit` = search+fit
     # from the parquet inputs. They go in their own ``coldfit`` map,
     # outside the headline total: ``value``/``total_sec`` stay the
     # warm total of queries() keys, comparable round over round.
-    COLD_FIT = ("ann_ivf", "ann_pq", "embedding_kmeans", "bloom_join_prune")
+    COLD_FIT = ("ann_ivf", "ann_pq", "bloom_join_prune")
 
     def _clear_model_memos() -> None:
         from stock_data_project_spark.operators import bloom, memo

@@ -96,36 +96,39 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# footer metadata memo: (sf_dir, table) -> num_rows. A parquet footer
-# read is driver-side milliseconds and never a Spark job.
-_ROWS_MEMO: dict[tuple[str, str], int] = {}
+# footer metadata memo: table path -> (files signature, num_rows). A
+# parquet footer read is driver-side milliseconds and never a Spark job.
+_ROWS_MEMO: dict[str, tuple[tuple, int]] = {}
 
 
 def table_rows(sf_dir: str, name: str) -> int:
     """Exact row count from the parquet FOOTER — a driver-side
     metadata read (no Spark job), for data-derived sizing decisions
     (guide §2.2: derive partitioning from the data, never from a
-    deployment constant). The testdata snapshots are immutable per
-    sf_dir, so the memo can never go stale within a process."""
+    deployment constant). The memo holds the count with the (path,
+    size, mtime) of every footer file it summed, so a table rewritten
+    in place (a test fixture, a refreshed snapshot) is recounted
+    rather than served a stale count."""
     import glob
 
     import pyarrow.parquet as pq
 
-    key = (os.path.abspath(sf_dir), name)
-    hit = _ROWS_MEMO.get(key)
-    if hit is None:
-        path = table_path(sf_dir, name)
-        # testdata snapshots are single files; Spark-written fixtures
-        # (tests) are directories of part files — sum their footers
-        files = (
-            sorted(glob.glob(os.path.join(path, "*.parquet")))
-            if os.path.isdir(path)
-            else [path]
+    path = os.path.abspath(table_path(sf_dir, name))
+    # testdata snapshots are single files; Spark-written fixtures
+    # (tests) are directories of part files — sum their footers
+    files = (
+        sorted(glob.glob(os.path.join(path, "*.parquet")))
+        if os.path.isdir(path)
+        else [path]
+    )
+    sig = tuple((f, st.st_size, st.st_mtime_ns) for f in files for st in [os.stat(f)])
+    hit = _ROWS_MEMO.get(path)
+    if hit is None or hit[0] != sig:
+        hit = _ROWS_MEMO[path] = (
+            sig,
+            sum(pq.ParquetFile(f).metadata.num_rows for f in files),
         )
-        hit = _ROWS_MEMO[key] = sum(
-            pq.ParquetFile(f).metadata.num_rows for f in files
-        )
-    return hit
+    return hit[1]
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -12,14 +12,15 @@ composed into one deterministic pipeline.
       → per-source cap                   (k-row count + map-only keeps)
       → train/val/test hash split       (map-only)
       → token counts                     (map-only)
-      → per-split sequence packing       (per-hash-group FFD)
-      → parquet partitioned by split
+      → sequence packing, every split    (one (split, hash-group) FFD exchange)
+      → parquet partitioned by split     (rebalanced: one file per split)
 
 Every keep/route decision is a pure function of document content and
 (id, seed), so a re-run over the same input reproduces the same
 corpus bit-for-bit on any cluster layout — the property that makes a
 100 TB pipeline debuggable. The only corpus-sized shuffles are the
-dedup groupBy and the packing group exchange; every gate is map-only
+dedup groupBy, the one packing group exchange (all splits together)
+and the rebalance on split ahead of the write; every gate is map-only
 against broadcast metadata.
 
 This is a library entry point (side-effecting writer + stats report),
@@ -43,6 +44,7 @@ from stock_data_project_spark.operators.textops import (
     with_quality,
     with_token_counts,
 )
+from stock_data_project_spark.sources.writers import write_partitioned
 
 
 def build_training_corpus(
@@ -61,10 +63,13 @@ def build_training_corpus(
     min_logprob: float | None = None,
 ) -> dict[str, int | dict[str, int]]:
     """Run the full gate chain over ``docs`` and write the packed
-    corpus to ``out_dir`` partitioned by split. Returns a stats dict
-    (counts after each gate + per-split sizes) — each stat is one
-    action over the cached survivor frame, so the report costs one
-    corpus materialization, not one scan per stage.
+    corpus to ``out_dir`` partitioned by split, one file per split
+    (``sources.writers.write_partitioned``). Returns a stats dict: the
+    input count, the kept count and the per-split sizes (0 for a split
+    that got no docs). The kept and per-split counts come from one
+    grouped count over the cached survivor frame, which also fills
+    the cache and sizes the packing groups, so the report costs one
+    corpus materialization, not one scan per split.
 
     Optional gates (all deterministic, so the bit-for-bit re-run
     property holds with any combination):
@@ -150,26 +155,25 @@ def build_training_corpus(
     ).withColumnRenamed("n_regex_tokens", "n_tokens")
     routed = routed.cache()
     try:
+        # one grouped count fills the cache and gives every split's
+        # size; the sizes also set each split's packing group count
+        sizes = {r["split"]: r["count"] for r in routed.groupBy("split").count().collect()}
         stats: dict = {
             "input": docs.count(),
-            "kept": routed.count(),
-            "per_split": {},
+            "kept": sum(sizes.values()),
+            "per_split": {name: sizes.get(name, 0) for name in splits},
         }
-        packed_parts = []
-        # packing runs once per split, so bin_id is namespaced WITHIN
-        # its split — the bin key is (split, bin_id), matching the
-        # partitioned layout a loader reads one split at a time
-        for name in splits:
-            part = routed.filter(F.col("split") == name)
-            bins = pack_sequences(part, seq_budget, tokens_col="n_tokens").select(
-                "doc_id", "bin_id", "oversize"
-            )
-            packed_parts.append(part.join(bins, "doc_id"))
-            stats["per_split"][name] = part.count()
-        out = packed_parts[0]
-        for p in packed_parts[1:]:
-            out = out.unionByName(p)
-        out.write.mode("overwrite").partitionBy("split").parquet(out_dir)
+        # every split packs in one FFD exchange; bin_id is namespaced
+        # WITHIN its split, so the bin key is (split, bin_id), matching
+        # the partitioned layout a loader reads one split at a time
+        bins = pack_sequences(
+            routed,
+            seq_budget,
+            tokens_col="n_tokens",
+            by=["split"],
+            rows={(name,): n for name, n in sizes.items()},
+        ).select("doc_id", "split", "bin_id", "oversize")
+        write_partitioned(routed.join(bins, ["doc_id", "split"]), out_dir, ["split"])
         return stats
     finally:
         routed.unpersist()

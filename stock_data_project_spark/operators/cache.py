@@ -9,7 +9,7 @@ harness runs 250+ keys in one JVM) accumulates them until
 correlated-slowdown signature on memory-heavy keys.
 
 The recipe (operators/dedup.py ``edit_prefix_candidates``,
-plans/llm_next9.py ``_final_assignment_uncached``): materialize the
+plans/llm_next9.py ``_final_assignment``): materialize the
 BOUNDED output via ``localCheckpoint(eager=True)``, then unpersist the
 intermediates before returning. Stored blocks shrink from the (large)
 intermediate frames to the (small) output, and the checkpoint blocks —

@@ -48,7 +48,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stock_data_project_spark.catalog import load_table
-from stock_data_project_spark.operators.memo import session_memo
 from stock_data_project_spark.operators.rounding import exact_avg6_expr, exact_avg6_sql
 from stock_data_project_spark.operators.textops import words
 from stock_data_project_spark.plans.llm import _NORM
@@ -95,23 +94,11 @@ def _assign(vals: DataFrame, cents: DataFrame) -> DataFrame:
 
 
 def _final_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, cluster, dist_d) after the fixed Lloyd rounds —
-    the shared trajectory behind embedding_kmeans and
-    embedding_outliers (checkpointed: callers branch off it).
-
-    Session-memoized by (sf_dir, k, rounds) — the r9 verdict measured
-    both consumers paying the identical 3-round loop (4.0s + 3.4s at
-    sf0.1); the checkpointed assignment is input-deterministic, so the
-    second consumer should pay branch cost only (the ann_ivf fit-memo
-    pattern, operators/memo.py)."""
-    return session_memo(
-        spark,
-        ("kmeans_final_assignment", sf_dir, _K, _ROUNDS),
-        lambda: _final_assignment_uncached(spark, sf_dir),
-    )
-
-
-def _final_assignment_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, cluster, dist_d) after the fixed Lloyd rounds — the
+    shared trajectory behind embedding_kmeans and embedding_outliers
+    (checkpointed: callers branch off it). Each key fits from its
+    parquet input: the assignment is, in one aggregate, either key's
+    output, so it is never memoized across calls."""
     vals = _vals(spark, sf_dir).persist()
     try:
         return _kmeans_rounds(vals)

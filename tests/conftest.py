@@ -16,14 +16,20 @@ def spark():
     yield s
 
 
-def assert_one_file_per_month(fact_dir: str) -> None:
-    """The fact is written one parquet file per year=/month= dir."""
-    months = 0
-    for y in os.listdir(fact_dir):
-        if not y.startswith("year="):
-            continue
-        for m in os.listdir(os.path.join(fact_dir, y)):
-            files = os.listdir(os.path.join(fact_dir, y, m))
-            assert len([f for f in files if f.endswith(".parquet")]) == 1, (y, m)
-            months += 1
-    assert months > 0
+def assert_one_file_per_partition(table_dir: str, partition_cols: list[str]) -> list[str]:
+    """A partitioned table is written one parquet file per partition
+    dir (one level per column of ``partition_cols``). Returns the
+    partition dirs found, relative to ``table_dir``, sorted."""
+    dirs = [""]
+    for col in partition_cols:
+        dirs = [
+            os.path.join(d, p)
+            for d in dirs
+            for p in os.listdir(os.path.join(table_dir, d))
+            if p.startswith(f"{col}=")
+        ]
+    assert dirs, f"no {partition_cols} partition dirs under {table_dir}"
+    for d in dirs:
+        files = os.listdir(os.path.join(table_dir, d))
+        assert len([f for f in files if f.endswith(".parquet")]) == 1, (d, files)
+    return sorted(dirs)

@@ -11,26 +11,42 @@ from pyspark.sql import functions as F
 
 from stock_data_project_spark.catalog import load_table
 from stock_data_project_spark.corpus import build_training_corpus
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, assert_one_file_per_partition
 
 BUDGET = 256
+SPLITS = {"train": 0.8, "val": 0.1, "test": 0.1}
+
+# Spark jobs one build_training_corpus call over _inputs with SPLITS
+# may run: 20 were measured with every split packed in one pass (one
+# grouped count, one FFD exchange, one write); packing each split on
+# its own (a count, a group-count job and an FFD exchange per split)
+# ran 35.
+JOB_BUDGET = 20
 
 
-def _run(spark, tmp_path, name):
+def _inputs(spark):
     docs = load_table(spark, SF_SMOKE, "documents")
     picked = docs.filter(F.col("doc_id").isin(11, 13)).select("text").collect()
     bench = spark.createDataFrame([(r["text"],) for r in picked], "text string")
-    out = str(tmp_path / name)
-    stats = build_training_corpus(
+    return docs, bench
+
+
+def _build(spark, docs, bench, out):
+    return build_training_corpus(
         spark,
         docs,
         out,
         benchmark=bench,
-        splits={"train": 0.8, "val": 0.1, "test": 0.1},
+        splits=SPLITS,
         max_per_source=20,
         seq_budget=BUDGET,
     )
-    return docs, out, stats
+
+
+def _run(spark, tmp_path, name):
+    docs, bench = _inputs(spark)
+    out = str(tmp_path / name)
+    return docs, out, _build(spark, docs, bench, out)
 
 
 def test_all_gates_hold_on_the_written_corpus(spark, tmp_path):
@@ -73,6 +89,43 @@ def test_all_gates_hold_on_the_written_corpus(spark, tmp_path):
         .count()
     )
     assert bad_bins == 0
+
+
+def test_one_packing_pass_one_file_per_split(spark, tmp_path, monkeypatch):
+    """Every split is packed in ONE FFD exchange and written one file
+    per split, inside a fixed job budget for the whole build."""
+    import uuid
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    handed = []
+    real_parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        handed.append(self._df)
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    docs, bench = _inputs(spark)
+    out = str(tmp_path / "one_pass")
+    sc = spark.sparkContext
+    group = f"corpus-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one build_training_corpus call")
+    try:
+        stats = _build(spark, docs, bench, out)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+
+    assert assert_one_file_per_partition(out, ["split"]) == [
+        f"split={name}" for name in sorted(SPLITS)
+    ]
+    assert stats["kept"] == spark.read.parquet(out).count()
+    # the frame handed to the parquet writer runs one pandas kernel
+    assert len(handed) == 1
+    plan = handed[0]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert len(jobs) <= JOB_BUDGET, f"{len(jobs)} jobs"
 
 
 def test_pipeline_is_deterministic(spark, tmp_path):

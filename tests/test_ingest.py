@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from stock_data_project_spark.operators.ingest import stocks_csv_to_fact
 from stock_data_project_spark.sources import read_csv, stocks_csv_schema
-from tests.conftest import assert_one_file_per_month
+from tests.conftest import assert_one_file_per_partition
 
 
 def _reference_csv(path: str) -> pd.DataFrame:
@@ -54,7 +54,7 @@ def test_run_daily_pipeline_end_to_end(spark):
         fact = spark.read.parquet(fact_dir)
         dim = spark.read.parquet(os.path.join(out, "dim_entity"))
         assert fact.count() == 50
-        assert_one_file_per_month(fact_dir)
+        assert_one_file_per_partition(fact_dir, ["year", "month"])
         dates = spark.read.parquet(os.path.join(out, "dim_date"))
         assert dates.count() == 25
         assert dates.join(fact, dates.date_key == fact.date).count() == 50

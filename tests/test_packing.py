@@ -7,9 +7,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from stock_data_project_spark.catalog import load_table
+from stock_data_project_spark.operators import packing
 from stock_data_project_spark.operators.packing import pack_sequences
+from stock_data_project_spark.operators.sampling import hash_split
 from stock_data_project_spark.operators.textops import with_token_counts
 from tests.conftest import SF_ORACLE
+
+# "val" gets no docs: its weight adds nothing to the cumulative cut
+SPLITS = {"train": 0.6, "val": 0.0, "test": 0.4}
 
 
 @pytest.fixture(scope="module")
@@ -18,6 +23,11 @@ def counted(spark):
     return with_token_counts(docs).select(
         "doc_id", F.col("n_ws_tokens").alias("n_tokens")
     )
+
+
+@pytest.fixture(scope="module")
+def routed(counted):
+    return hash_split(counted, SPLITS)
 
 
 def test_pack_budget_and_coverage(spark, counted):
@@ -83,14 +93,51 @@ def test_pack_oversize_flagged(spark):
     assert out[2]["bin_id"] not in {out[i]["bin_id"] for i in (1, 3, 4)}
 
 
-def test_pack_single_exchange(spark, counted):
-    plan = (
-        pack_sequences(counted, 512)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+def test_pack_single_exchange(spark, counted, routed):
+    """One group exchange, keyed or not: packing every split of a
+    keyed frame adds no exchange per key value."""
+    for packed in (
+        pack_sequences(counted, 512),
+        pack_sequences(routed, 512, by=["split"]),
+    ):
+        plan = packed._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert plan.count("FlatMapGroupsInPandas") == 1, plan
+
+
+@pytest.mark.parametrize("target_group_docs", [None, 3])
+def test_pack_by_key_matches_per_key_packing(
+    spark, routed, monkeypatch, target_group_docs
+):
+    """Packing all splits in one keyed pass gives every doc the bin
+    (and oversize flag) that packing its split's rows alone gives —
+    also when a low group target makes the splits' group counts
+    differ, and for a split that received no docs."""
+    if target_group_docs is not None:
+        monkeypatch.setattr(packing, "_TARGET_GROUP_DOCS", target_group_docs)
+    sizes = {r["split"]: r["count"] for r in routed.groupBy("split").count().collect()}
+    assert set(sizes) == {"train", "test"}  # "val" got no docs
+    if target_group_docs is not None:
+        par = spark.sparkContext.defaultParallelism
+        assert packing._auto_groups(sizes["train"], par) != packing._auto_groups(
+            sizes["test"], par
+        )
+    budget = 128
+    one_pass = pack_sequences(routed, budget, by=["split"]).collect()
+    assert len(one_pass) == sum(sizes.values())
+    for name in SPLITS:
+        got = {
+            (r["doc_id"], r["bin_id"], r["oversize"])
+            for r in one_pass
+            if r["split"] == name
+        }
+        want = {
+            (r["doc_id"], r["bin_id"], r["oversize"])
+            for r in pack_sequences(
+                routed.filter(F.col("split") == name), budget
+            ).collect()
+        }
+        assert got == want, name
 
 
 def test_pack_auto_groups_scales_with_corpus(spark):

@@ -13,6 +13,7 @@ from stock_data_project_spark.sources import (
     stocks_csv_schema,
     write_partitioned,
 )
+from tests.conftest import assert_one_file_per_partition
 
 
 def test_stocks_csv_roundtrip(spark):
@@ -77,13 +78,11 @@ def test_write_partitioned_roundtrip(spark):
     with tempfile.TemporaryDirectory() as d:
         out = os.path.join(d, "t")
         write_partitioned(df, out, partition_cols=["part"])
-        # hive-style partition dirs exist -> partition pruning works
-        parts = sorted(p for p in os.listdir(out) if p.startswith("part="))
-        assert parts == ["part=a", "part=b", "part=c"]
+        # hive-style partition dirs exist -> partition pruning works;
         # rebalanced on the partition column: one file per value, not
         # one per (input partition x value)
-        for p in parts:
-            assert len(_parquet_files(os.path.join(out, p))) == 1, p
+        parts = assert_one_file_per_partition(out, ["part"])
+        assert parts == ["part=a", "part=b", "part=c"]
         back = spark.read.parquet(out)
         assert back.count() == 300
         assert back.filter(F.col("part") == "a").count() == 100
@@ -145,6 +144,20 @@ def test_ts_layout_normalization_nanos_and_ntz_micros(spark, tmp_path):
             r[0] for r in df.select(F.unix_micros("ts")).collect()
         )
     assert out["nanos"] == out["ntz"] == sorted(micros)
+
+
+def test_table_rows_recounts_a_rewritten_fixture(spark, tmp_path):
+    """A fixture dir rewritten in-process with a different row count
+    gets the new footer count, not the memoized one: a stale count
+    silently changes every sizing decision derived from it."""
+    from stock_data_project_spark.catalog import table_path, table_rows
+
+    sf_dir = str(tmp_path)
+    path = table_path(sf_dir, "documents")
+    spark.range(40).coalesce(2).write.mode("overwrite").parquet(path)
+    assert table_rows(sf_dir, "documents") == 40
+    spark.range(25).coalesce(2).write.mode("overwrite").parquet(path)
+    assert table_rows(sf_dir, "documents") == 25
 
 
 def test_compact_parquet_merges_small_files(spark, tmp_path):

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from stock_data_project_spark.catalog import load_table
 from stock_data_project_spark.operators.star import build_fact, materialize_star
-from tests.conftest import SF_SMOKE, assert_one_file_per_month
+from tests.conftest import SF_SMOKE, assert_one_file_per_partition
 
 
 def test_star_materialization_roundtrip(spark):
@@ -24,7 +24,7 @@ def test_star_materialization_roundtrip(spark):
         want = build_fact(events)
         assert fact.count() == want.count()
         # partition layout: year=/month= hive dirs, one file in each
-        assert_one_file_per_month(os.path.join(d, "fact_market"))
+        assert_one_file_per_partition(os.path.join(d, "fact_market"), ["year", "month"])
         # a month filter should prune to partition dirs
         plan = (
             fact.filter((F.col("year") == 2024) & (F.col("month") == 1))

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
-"""One-off probe: time the UNCACHED Lloyd trajectory (the part the
-session memo amortizes away in bench/scale_smoke steady-state) over
-replicated embeddings at several scale points, so the checkpoint-round
-floor the r9 verdict asked about is pinned explicitly.
+"""One-off probe: time the Lloyd trajectory behind embedding_kmeans
+and embedding_outliers over replicated embeddings at several scale
+points, so the checkpoint-round floor the r9 verdict asked about is
+pinned explicitly.
 
 Usage: python tools/kmeans_trajectory_probe.py [N ...] (default 30 60 120)
 Prints one JSON line {N: seconds}.
@@ -32,7 +32,7 @@ def main() -> None:
     spark = get_spark(
         "kmeans_probe", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
-    from stock_data_project_spark.plans.llm_next9 import _final_assignment_uncached
+    from stock_data_project_spark.plans.llm_next9 import _final_assignment
 
     emb = load_table(spark, SRC, "embeddings")
     max_vid = emb.agg(F.max("vec_id")).collect()[0][0] + 1
@@ -47,12 +47,12 @@ def main() -> None:
                 "label",
             ).write.mode("overwrite").parquet(os.path.join(d, "embeddings.parquet"))
             # warmup once (codegen/file-index), then measure the
-            # full uncached trajectory
-            _final_assignment_uncached(spark, d).write.mode("overwrite").format(
+            # full trajectory
+            _final_assignment(spark, d).write.mode("overwrite").format(
                 "noop"
             ).save()
             t0 = time.perf_counter()
-            _final_assignment_uncached(spark, d).write.mode("overwrite").format(
+            _final_assignment(spark, d).write.mode("overwrite").format(
                 "noop"
             ).save()
             out[n] = round(time.perf_counter() - t0, 2)
