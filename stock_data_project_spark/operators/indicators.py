@@ -26,11 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _rolling(key_col: str, order_col: str, window: int):
-    return (
-        Window.partitionBy(key_col).orderBy(order_col).rowsBetween(-(window - 1), 0)
-    )
+from stock_data_project_spark.operators.volatility import rolling_window
 
 
 def _ordered(key_col: str, order_col: str):
@@ -61,7 +57,7 @@ def with_atr(
         )
     )
     df = df.withColumn("true_range", F.round(tr, 6))
-    wr = _rolling(key_col, order_col, window)
+    wr = rolling_window(key_col, order_col, window)
     return df.withColumn(out_col, F.round(F.avg("true_range").over(wr), 6))
 
 
@@ -76,12 +72,12 @@ def with_stochastic(
     min low); %D = ``d_window``-row average of %K. A flat window
     (high == low across the lookback) yields NULL, not a division
     error (ANSI mode is on — the divisor goes through nullif)."""
-    wk = _rolling(key_col, order_col, k_window)
+    wk = rolling_window(key_col, order_col, k_window)
     ll = F.min("low").over(wk)
     hh = F.max("high").over(wk)
     pct_k = 100.0 * (F.col("close") - ll) / F.nullif(hh - ll, F.lit(0.0))
     df = df.withColumn("pct_k", F.round(pct_k, 6))
-    wd = _rolling(key_col, order_col, d_window)
+    wd = rolling_window(key_col, order_col, d_window)
     return df.withColumn("pct_d", F.round(F.avg("pct_k").over(wd), 6))
 
 
@@ -113,7 +109,7 @@ def with_donchian(
     prefix: str = "dc",
 ) -> DataFrame:
     """Donchian channel: rolling max high / min low and their mid."""
-    w = _rolling(key_col, order_col, window)
+    w = rolling_window(key_col, order_col, window)
     upper = F.max("high").over(w)
     lower = F.min("low").over(w)
     return (
@@ -136,7 +132,7 @@ def with_zscore(
     |z| > threshold. NULL until the window is full (min_periods
     parity with the volatility family); a zero-variance window
     yields NULL rather than an ANSI division error."""
-    w = _rolling(key_col, order_col, window)
+    w = rolling_window(key_col, order_col, window)
     n = F.count(value_col).over(w)
     mean = F.avg(value_col).over(w)
     sd = F.when(n >= window, F.stddev_samp(value_col).over(w))
@@ -188,7 +184,7 @@ def with_williams_r(
     row). ``+ 0.0`` after the final round normalizes: −0.0 + 0.0 =
     +0.0, every other value (incl. NULL) unchanged. Mirrored in the
     oracle SQL."""
-    w = _rolling(key_col, order_col, window)
+    w = rolling_window(key_col, order_col, window)
     hh = F.max("high").over(w)
     ll = F.min("low").over(w)
     r = -100.0 * (hh - F.col("close")) / F.nullif(hh - ll, F.lit(0.0))
@@ -218,7 +214,7 @@ def with_mfi(
     pos = F.when(d > 0, flow).otherwise(F.lit(0.0))
     neg = F.when(d < 0, flow).otherwise(F.lit(0.0))
     df = df.withColumn("_pos", pos).withColumn("_neg", neg)
-    w = _rolling(key_col, order_col, window)
+    w = rolling_window(key_col, order_col, window)
     sp = F.round(F.sum("_pos").over(w), 6)
     sn = F.round(F.sum("_neg").over(w), 6)
     mfi = 100.0 * sp / F.nullif(sp + sn, F.lit(0.0))
@@ -240,7 +236,7 @@ def with_ulcer(
     the second frame reads a materialized column — decomposable,
     unlike mean-absolute-deviation indicators (CCI), which is why
     this one is in the window family and CCI is not."""
-    w = _rolling(key_col, order_col, window)
+    w = rolling_window(key_col, order_col, window)
     peak = F.max("close").over(w)
     dd = F.round(100.0 * (F.col("close") - peak) / F.nullif(peak, F.lit(0.0)), 6)
     df = df.withColumn("dd_pct", dd)

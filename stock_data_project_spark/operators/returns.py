@@ -86,3 +86,23 @@ def with_drawdown(
     return df.withColumn(
         out_col, F.round(F.try_divide(F.col(value_col) - peak, peak), 6)
     )
+
+
+# DuckDB twins, as WITH-clause CTEs over ``bars``
+# (operators/series.DAILY_BARS_SQL): ``ret`` mirrors
+# with_daily_return; ``rr`` is its non-NULL returns as DECIMAL(18,6)
+# ``r_d``, the exact form the series statistics aggregate.
+
+DAILY_RETURN_SQL = """
+ret AS (
+    SELECT series_key, date, open, high, low, close, volume, turnover,
+           round((close - lag(close) OVER w) / nullif(lag(close) OVER w, 0), 6) AS daily_return
+    FROM bars
+    WINDOW w AS (PARTITION BY series_key ORDER BY date)
+)"""
+
+DECIMAL_RETURNS_SQL = """
+rr AS (
+    SELECT series_key, date, CAST(daily_return AS DECIMAL(18,6)) AS r_d
+    FROM ret WHERE daily_return IS NOT NULL
+)"""

@@ -18,12 +18,27 @@ zero" on the negative branch matches both engines' native round().
 Bounds: callers must keep ``2*|p_u| + q`` inside BIGINT (documented
 at each call site; every graded use is ≤ ~1e17).  The identity is
 property-tested in tests/test_next6_staged.py.
+
+Recurrences that reuse their own rounded output (EMA-class folds) run
+on the Python side in exact ``decimal`` with :func:`quantize6` per
+step, the same HALF_UP 6dp rounding as a DECIMAL(18,6) ``round`` on
+either engine, so the recursive-CTE oracle replays the trajectory
+bit for bit.
 """
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+_SIX = Decimal("0.000001")
+
+
+def quantize6(x: Decimal) -> Decimal:
+    """``x`` rounded HALF_UP to 6 decimals, exactly."""
+    return x.quantize(_SIX, ROUND_HALF_UP)
 
 
 def exact_avg6_expr(p_units: str, q: str) -> Column:

@@ -11,7 +11,7 @@ or window pass entirely.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -45,3 +45,38 @@ def daily_bars(
             F.round(F.sum(value_col), 6).alias("turnover"),
         )
     )
+
+
+def daily_bars_rn(events: DataFrame) -> DataFrame:
+    """:func:`daily_bars` plus ``rn``, the per-series 1-based day
+    index (INT). Recurrences and rn-range frames order on it."""
+    bars = daily_bars(events)
+    w = Window.partitionBy("series_key").orderBy("date")
+    return bars.withColumn("rn", F.row_number().over(w).cast("int"))
+
+
+# DuckDB twins of the two builders above, as WITH-clause CTEs
+# (``bars`` and ``bars``+``seq``), for the oracle SQL of every key
+# built on daily bars. They must mirror the Spark code exactly,
+# including where rounding is applied.
+
+DAILY_BARS_SQL = """
+bars AS (
+    SELECT event_type AS series_key,
+           date_trunc('day', ts) AS date,
+           arg_min(value, ts) AS open,
+           max(value) AS high,
+           min(value) AS low,
+           arg_max(value, ts) AS close,
+           count(*) AS volume,
+           round(sum(value), 6) AS turnover
+    FROM events
+    GROUP BY 1, 2
+)"""
+
+DAILY_BARS_RN_SQL = f"""
+{DAILY_BARS_SQL}, seq AS (
+    SELECT *, CAST(row_number() OVER (PARTITION BY series_key
+                                      ORDER BY date) AS INT) AS rn
+    FROM bars
+)"""

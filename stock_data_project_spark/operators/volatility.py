@@ -17,7 +17,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _rolling(key_col: str, order_col: str, window: int):
+def rolling_window(key_col: str, order_col: str, window: int):
+    """The trailing ``window``-row frame per key, current row last."""
     return (
         Window.partitionBy(key_col).orderBy(order_col).rowsBetween(-(window - 1), 0)
     )
@@ -33,7 +34,7 @@ def with_rolling_volatility(
 ) -> DataFrame:
     """Sample stddev of the last ``window`` returns; NULL until the
     window is full (pandas ``rolling(window).std()`` parity)."""
-    w = _rolling(key_col, order_col, window)
+    w = rolling_window(key_col, order_col, window)
     n = F.count(return_col).over(w)
     vol = F.when(n >= window, F.stddev_samp(return_col).over(w))
     return df.withColumn(out_col, F.round(vol, 6))
@@ -47,7 +48,7 @@ def with_sma(
     window: int = 20,
     out_col: str | None = None,
 ) -> DataFrame:
-    w = _rolling(key_col, order_col, window)
+    w = rolling_window(key_col, order_col, window)
     return df.withColumn(out_col or f"sma_{window}", F.round(F.avg(value_col).over(w), 6))
 
 
@@ -61,7 +62,7 @@ def with_bollinger(
     prefix: str = "bb",
 ) -> DataFrame:
     """SMA ± num_std · rolling sample stddev (NULL until window full)."""
-    w = _rolling(key_col, order_col, window)
+    w = rolling_window(key_col, order_col, window)
     n = F.count(value_col).over(w)
     mid = F.avg(value_col).over(w)
     sd = F.when(n >= window, F.stddev_samp(value_col).over(w))
@@ -202,7 +203,7 @@ def with_rsi(
     seq = Window.partitionBy(key_col).orderBy(order_col)
     delta = F.col(value_col) - F.lag(value_col).over(seq)
     df2 = df.withColumn("_delta", delta)
-    w = _rolling(key_col, order_col, window)
+    w = rolling_window(key_col, order_col, window)
     gain = F.avg(F.when(F.col("_delta") > 0, F.col("_delta")).otherwise(0.0)).over(w)
     loss = F.avg(F.when(F.col("_delta") < 0, -F.col("_delta")).otherwise(0.0)).over(w)
     n = F.count("_delta").over(w)

@@ -1,8 +1,13 @@
-"""Reference-derived star-schema + stock-analytics plans.
+"""The reference's star build and dashboard reads: bars, returns,
+volatility.
 
 Maps the reference's pipeline (fetch_stocks.py:122-282) and query
 layer (streamlit/app.py:82-132) onto the ``events`` table:
-event_type ≈ ticker, ts ≈ trade time, value ≈ price.
+event_type ≈ ticker, ts ≈ trade time, value ≈ price. Every key starts
+from ``operators/series.daily_bars``; the oracles start from its SQL
+twin, ``DAILY_BARS_SQL``, and the returns twin ``DAILY_RETURN_SQL``.
+The technical indicators built on the same bars live in
+plans/indicators.py, the series statistics in plans/statistics.py.
 """
 
 from __future__ import annotations
@@ -12,11 +17,12 @@ from pyspark.sql import functions as F
 
 from stock_data_project_spark.catalog import load_table
 from stock_data_project_spark.operators.returns import (
+    DAILY_RETURN_SQL,
     with_cumulative_return,
     with_daily_return,
     with_drawdown,
 )
-from stock_data_project_spark.operators.series import daily_bars
+from stock_data_project_spark.operators.series import DAILY_BARS_SQL, daily_bars
 from stock_data_project_spark.operators.star import (
     annual_indicators,
     build_fact,
@@ -31,31 +37,9 @@ from stock_data_project_spark.operators.volatility import (
 )
 
 # ---------------------------------------------------------------- SQL
-# Shared oracle CTEs (DuckDB dialect == ANSI + arg_min/arg_max).
-# Must mirror operators/series.py::daily_bars and operators/returns.py
-# exactly, including where rounding is applied.
-
-_BARS = """
-bars AS (
-    SELECT event_type AS series_key,
-           date_trunc('day', ts) AS date,
-           arg_min(value, ts) AS open,
-           max(value) AS high,
-           min(value) AS low,
-           arg_max(value, ts) AS close,
-           count(*) AS volume,
-           round(sum(value), 6) AS turnover
-    FROM events
-    GROUP BY 1, 2
-)"""
-
-_RET = """
-ret AS (
-    SELECT series_key, date, open, high, low, close, volume, turnover,
-           round((close - lag(close) OVER w) / nullif(lag(close) OVER w, 0), 6) AS daily_return
-    FROM bars
-    WINDOW w AS (PARTITION BY series_key ORDER BY date)
-)"""
+# Oracle CTEs used only here (DuckDB dialect == ANSI + arg_min/arg_max):
+# ``vol`` mirrors operators/volatility.with_rolling_volatility and
+# ``annual`` mirrors operators/star.annual_indicators.
 
 _VOL = """
 vol AS (
@@ -468,7 +452,7 @@ QUERIES = {
 
 ORACLE = {
     "top_movers": f"""
-        WITH {_BARS}, {_RET}
+        WITH {DAILY_BARS_SQL}, {DAILY_RETURN_SQL}
         SELECT series_key, date, close, daily_return,
                abs(daily_return) AS abs_return
         FROM ret
@@ -485,7 +469,7 @@ ORACLE = {
         GROUP BY 1, 2
     """,
     "weekly_bars": f"""
-        WITH {_BARS}
+        WITH {DAILY_BARS_SQL}
         SELECT series_key,
                date_trunc('week', date) AS week_start,
                arg_min(open, date) AS open,
@@ -497,7 +481,7 @@ ORACLE = {
         GROUP BY 1, 2
     """,
     "range_window_avg": f"""
-        WITH {_BARS}
+        WITH {DAILY_BARS_SQL}
         SELECT series_key, date, close,
                round(avg(close) OVER w, 6) AS avg_7d,
                count(*) OVER w AS n_in_window
@@ -534,7 +518,7 @@ ORACLE = {
           ON s.series_key = b.series_key AND s.date = b.date
     """,
     "rolling_correlation": f"""
-        WITH {_BARS}, {_RET},
+        WITH {DAILY_BARS_SQL}, {DAILY_RETURN_SQL},
         a AS (SELECT date, daily_return AS ra FROM ret WHERE series_key = 'click'),
         b AS (SELECT date, daily_return AS rb FROM ret WHERE series_key = 'view'),
         j AS (SELECT a.date, ra, rb FROM a JOIN b ON a.date = b.date)
@@ -546,14 +530,14 @@ ORACLE = {
         WINDOW w AS (ORDER BY date ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
     """,
     "return_correlation": f"""
-        WITH {_BARS}, {_RET}
+        WITH {DAILY_BARS_SQL}, {DAILY_RETURN_SQL}
         SELECT a.series_key AS key_a, b.series_key AS key_b,
                round(corr(a.daily_return, b.daily_return), 6) AS return_corr
         FROM ret a JOIN ret b ON a.date = b.date AND a.series_key < b.series_key
         GROUP BY 1, 2
     """,
     "market_beta": f"""
-        WITH {_BARS}, {_RET},
+        WITH {DAILY_BARS_SQL}, {DAILY_RETURN_SQL},
         market AS (
             SELECT date, round(avg(daily_return), 6) AS mkt_return FROM ret GROUP BY date
         )
@@ -588,7 +572,7 @@ ORACLE = {
         FROM (SELECT DISTINCT event_type AS entity_name FROM events)
     """,
     "fact_build": f"""
-        WITH {_BARS}, {_RET}, {_VOL}, {_ANNUAL}
+        WITH {DAILY_BARS_SQL}, {DAILY_RETURN_SQL}, {_VOL}, {_ANNUAL}
         SELECT v.date AS date_key,
                md5(v.series_key) AS entity_key,
                v.series_key AS entity_name,
@@ -599,18 +583,18 @@ ORACLE = {
         LEFT JOIN annual a ON CAST(year(v.date) AS INT) = a.year
     """,
     "daily_return": f"""
-        WITH {_BARS}, {_RET}
+        WITH {DAILY_BARS_SQL}, {DAILY_RETURN_SQL}
         SELECT series_key, date, close, daily_return FROM ret
     """,
     "log_return": f"""
-        WITH {_BARS}
+        WITH {DAILY_BARS_SQL}
         SELECT series_key, date, close,
                round(ln(close / nullif(lag(close) OVER w, 0)), 6) AS log_return
         FROM bars
         WINDOW w AS (PARTITION BY series_key ORDER BY date)
     """,
     "rolling_volatility": f"""
-        WITH {_BARS}, {_RET}, {_VOL}
+        WITH {DAILY_BARS_SQL}, {DAILY_RETURN_SQL}, {_VOL}
         SELECT series_key, date, daily_return, volatility FROM vol
     """,
     "filter_range": f"""
@@ -632,18 +616,18 @@ ORACLE = {
         ORDER BY date
     """,
     "annual_join": f"""
-        WITH {_BARS}, {_ANNUAL}
+        WITH {DAILY_BARS_SQL}, {_ANNUAL}
         SELECT b.series_key, b.date, b.close,
                a.annual_avg_value, a.annual_value_dispersion
         FROM bars b
         LEFT JOIN annual a ON CAST(year(b.date) AS INT) = a.year
     """,
     "ohlc_daily": f"""
-        WITH {_BARS}
+        WITH {DAILY_BARS_SQL}
         SELECT * FROM bars
     """,
     "sma_cross": f"""
-        WITH {_BARS}
+        WITH {DAILY_BARS_SQL}
         SELECT series_key, date, close,
                round(avg(close) OVER w5, 6) AS sma_5,
                round(avg(close) OVER w20, 6) AS sma_20,
@@ -655,7 +639,7 @@ ORACLE = {
                        ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
     """,
     "cumulative_return": f"""
-        WITH {_BARS}, {_RET}
+        WITH {DAILY_BARS_SQL}, {DAILY_RETURN_SQL}
         SELECT series_key, date, daily_return,
                round(CASE WHEN max(CASE WHEN coalesce(daily_return, 0.0) <= -1.0
                                         THEN 1 ELSE 0 END) OVER wc = 1
@@ -667,7 +651,7 @@ ORACLE = {
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     """,
     "drawdown": f"""
-        WITH {_BARS}
+        WITH {DAILY_BARS_SQL}
         SELECT series_key, date, close,
                round((close - max(close) OVER wm) / nullif(max(close) OVER wm, 0), 6)
                    AS drawdown
@@ -676,7 +660,7 @@ ORACLE = {
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     """,
     "bollinger": f"""
-        WITH {_BARS}
+        WITH {DAILY_BARS_SQL}
         SELECT series_key, date, close,
                round(avg(close) OVER w20, 6) AS bb_mid,
                round(avg(close) OVER w20
@@ -690,7 +674,7 @@ ORACLE = {
                        ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
     """,
     "rsi": f"""
-        WITH {_BARS},
+        WITH {DAILY_BARS_SQL},
         d AS (
             SELECT series_key, date, close,
                    close - lag(close) OVER (PARTITION BY series_key ORDER BY date) AS delta
@@ -714,7 +698,7 @@ ORACLE = {
         FROM events GROUP BY 1
     """,
     "adj_close_returns": f"""
-        WITH {_BARS},
+        WITH {DAILY_BARS_SQL},
         adjb AS (
             SELECT series_key, date, close,
                    close * CASE WHEN date < TIMESTAMP '2024-01-15'
@@ -736,134 +720,3 @@ ORACLE = {
         FROM r
     """,
 }
-
-# r5 graduation: the seven staged indicator keys (atr, stochastic, obv,
-# donchian, zscore_anomaly, pivot_points, vwap) join the graded
-# inventory. Implementations and oracles stay in stock_next.py; the
-# keys are first-class here.
-from stock_data_project_spark.plans.stock_next import (  # noqa: E402
-    ORACLE_NEXT,
-    QUERIES_NEXT,
-)
-
-QUERIES.update(QUERIES_NEXT)
-ORACLE.update(ORACLE_NEXT)
-
-# r5 build, r6 debut: williams_r / mfi / ulcer_index / linear_interp
-# (registered immediately — staging is window position, not absence)
-from stock_data_project_spark.plans.stock_next2 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT2,
-    QUERIES_NEXT as QUERIES_NEXT2,
-)
-
-QUERIES.update(QUERIES_NEXT2)
-ORACLE.update(ORACLE_NEXT2)
-
-# r6 build, r7 debut: ema_cross (the first fully-oracled EMA-class
-# indicator — exact-decimal fold + recursive-CTE oracle) and
-# roc_momentum
-from stock_data_project_spark.plans.stock_next3 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT3,
-    QUERIES_NEXT as QUERIES_NEXT3,
-)
-
-QUERIES.update(QUERIES_NEXT3)
-ORACLE.update(ORACLE_NEXT3)
-
-# r8 build, r9 debut: aroon (argmax-position window), cmf (volume-
-# weighted money flow), keltner (SMA channel)
-from stock_data_project_spark.plans.stock_next4 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT4,
-    QUERIES_NEXT as QUERIES_NEXT4,
-)
-
-QUERIES.update(QUERIES_NEXT4)
-ORACLE.update(ORACLE_NEXT4)
-
-# r8 build, r9 debut: trix / adx — the Wilder/EMA recurrence family
-# made FULLY ORACLED via the exact-decimal fold (sql_decayed_revenue
-# recipe with exact one-digit smoothing constants)
-from stock_data_project_spark.plans.stock_next5 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT5,
-    QUERIES_NEXT as QUERIES_NEXT5,
-)
-
-QUERIES.update(QUERIES_NEXT5)
-ORACLE.update(ORACLE_NEXT5)
-
-# r9 build, r10 debut: cci (exact-integer mean-deviation via bounded
-# rn-range self-join), force_index / ease_of_movement (SMA-flavor
-# window indicators)
-from stock_data_project_spark.plans.stock_next6 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT6,
-    QUERIES_NEXT as QUERIES_NEXT6,
-)
-
-QUERIES.update(QUERIES_NEXT6)
-ORACLE.update(ORACLE_NEXT6)
-
-# r9 build, r11 debut: ultimate_oscillator / vortex (window-sum ratio
-# indicators), ichimoku (windowed midpoints, displaced), heikin_ashi
-# (the candle-transform recurrence via the exact-decimal fold)
-from stock_data_project_spark.plans.stock_next7 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT7,
-    QUERIES_NEXT as QUERIES_NEXT7,
-)
-
-QUERIES.update(QUERIES_NEXT7)
-ORACLE.update(ORACLE_NEXT7)
-
-# r10 build, r12 debut: acf_returns (exact-decimal autocorrelation of
-# the return series) and seasonal_decompose (centered-MA trend + dow
-# seasonal + residual, all through the exact-integer average)
-from stock_data_project_spark.plans.stock_next8 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT8,
-    QUERIES_NEXT as QUERIES_NEXT8,
-)
-
-QUERIES.update(QUERIES_NEXT8)
-ORACLE.update(ORACLE_NEXT8)
-
-# r10 late build, r12 debut: spearman_corr — rank correlation of
-# close vs volume via exact half-unit average-tie ranks
-from stock_data_project_spark.plans.stock_next9 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT9,
-    QUERIES_NEXT as QUERIES_NEXT9,
-)
-
-QUERIES.update(QUERIES_NEXT9)
-ORACLE.update(ORACLE_NEXT9)
-
-# r10 late build, r12 debut: the series-diagnostics batch — runs_test
-# / ljung_box / jarque_bera / sharpe_sortino / hurst_exponent (exact
-# integer/decimal cores, shared double-expression strings)
-from stock_data_project_spark.plans.stock_next10 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT10,
-    QUERIES_NEXT as QUERIES_NEXT10,
-)
-
-QUERIES.update(QUERIES_NEXT10)
-ORACLE.update(ORACLE_NEXT10)
-
-# r10 late build, r12 debut: variance_ratio (Lo-MacKinlay random-walk
-# test) and seasonality_strength (Hyndman component-strength measures
-# over the seasonal_decompose construction)
-from stock_data_project_spark.plans.stock_next11 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT11,
-    QUERIES_NEXT as QUERIES_NEXT11,
-)
-
-QUERIES.update(QUERIES_NEXT11)
-ORACLE.update(ORACLE_NEXT11)
-
-# r10-close build, r13 debut: changepoint_detect (max-CUSUM single
-# structural break, exact-decimal scaled deviation + struct argmax)
-# and lead_lag_corr (pairwise lead-lag correlation profile at ±2
-# lags, one window pass + one date join)
-from stock_data_project_spark.plans.stock_next12 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT12,
-    QUERIES_NEXT as QUERIES_NEXT12,
-)
-
-QUERIES.update(QUERIES_NEXT12)
-ORACLE.update(ORACLE_NEXT12)

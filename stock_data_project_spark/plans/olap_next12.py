@@ -48,7 +48,7 @@ from stock_data_project_spark.catalog import load_table
 
 # shared double-expression strings (identical text on both engines;
 # every float literal is kept away from integer-only chains — the
-# decimal-literal parse trap documented in stock_next10)
+# decimal-literal parse trap documented in plans/statistics.py)
 _AOV_SSB = (
     "(t_cum - CAST(s_all AS DOUBLE) * CAST(s_all AS DOUBLE)"
     " / CAST(n_total AS DOUBLE))"

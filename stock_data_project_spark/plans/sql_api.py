@@ -140,11 +140,13 @@ def q_sql_decayed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel across groups (15.7s → ~0.6s). Per-step rounding keeps
     the trajectory engine-deterministic (the q9/user_influence
     DECIMAL rule made iterative)."""
-    from decimal import ROUND_HALF_UP, Decimal
+    from decimal import Decimal
 
     import pandas as pd
 
     from pyspark.sql import functions as F
+
+    from stock_data_project_spark.operators.rounding import quantize6
 
     register_views(spark, sf_dir)
     daily = spark.sql(
@@ -161,7 +163,6 @@ def q_sql_decayed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         """
     )
-    six = Decimal("0.000001")
     nine = Decimal("0.9")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -175,7 +176,7 @@ def q_sql_decayed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # exact decimal arithmetic, half-up like both engines'
                 # DECIMAL round — the rounding input is identical, so
                 # the rounded trajectory is too
-                else (carry * nine + rev).quantize(six, ROUND_HALF_UP)
+                else quantize6(carry * nine + rev)
             )
             out.append(carry)
         return pdf.assign(decayed=out)[["event_type", "day_start", "rn", "decayed"]]

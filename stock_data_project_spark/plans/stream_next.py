@@ -1,6 +1,6 @@
 """Streaming key staged for the r5 driver window.
 
-Same staging discipline as plans/stock_next.py / llm_next.py: the r4
+Same staging discipline as plans/llm_next.py: the r4
 window is exactly full, so ``stream_ohlc_bars`` debuts in r5's
 ``_GRADE_ORDER`` head, parity-proven NOW by tests/test_stream_next.py.
 

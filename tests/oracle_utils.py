@@ -1,6 +1,7 @@
 """In-repo mirror of the driver's t2 correctness gate: run a Spark
 plan and its DuckDB oracle SQL on the same sf_dir, compare row count,
-column names (sorted), and values order-insensitively."""
+column names (sorted), and values order-insensitively. Also the
+scipy-free average-rank helper the rank-test replays share."""
 
 from __future__ import annotations
 
@@ -87,3 +88,19 @@ def assert_gradable_schema(df, key: str) -> None:
         assert not isinstance(
             f.dataType, (T.ArrayType, T.MapType, T.DateType)
         ), f"{key}.{f.name}: ungradable type {f.dataType}"
+
+
+def avg_ranks(vals: np.ndarray) -> np.ndarray:
+    """Average ranks with ties (1-based), scipy-free."""
+    order = np.argsort(vals, kind="stable")
+    ranks = np.empty(len(vals))
+    sv = vals[order]
+    pos = np.arange(1, len(sv) + 1, dtype=np.float64)
+    i = 0
+    while i < len(sv):
+        j = i
+        while j + 1 < len(sv) and sv[j + 1] == sv[i]:
+            j += 1
+        ranks[order[i : j + 1]] = pos[i : j + 1].mean()
+        i = j + 1
+    return ranks

@@ -115,3 +115,82 @@ def test_commit_and_drop_feed_live_in_one_module():
         and re.search(pattern, path.read_text())
     )
     assert not offenders, offenders
+
+
+# (importer, source, name) for every `from <package module> import
+# _name` still in the package, relative to the package root. The list
+# may only shrink: a new private import across modules fails, and so
+# does an entry whose import is gone. A shared helper becomes a public
+# name in the operator module whose Spark code it mirrors.
+_PRIVATE_IMPORTS_LEFT = sorted(
+    [
+        ("operators.ivfpq", "operators.ivf", "_centroids_np"),
+        ("operators.ivfpq", "operators.pq", "_codebook_np"),
+        ("plans.llm_next14", "plans.llm_next7", "_fan_out"),
+        ("plans.llm_next15", "operators.nndescent", "_SALT_A"),
+        ("plans.llm_next15", "operators.nndescent", "_SALT_B"),
+        ("plans.llm_next16", "plans.llm", "_NORM"),
+        ("plans.llm_next16", "plans.llm_next9", "_HEX"),
+        ("plans.llm_next16", "plans.llm_next9", "_WMOD"),
+        ("plans.llm_next16", "plans.llm_next9", "_WMUL"),
+        ("plans.llm_next16", "plans.llm_next7", "_fan_out"),
+        ("plans.llm_next6", "plans.llm", "_NORM"),
+        ("plans.llm_next6", "plans.llm_next7", "_fan_out"),
+        ("plans.llm_next6", "plans.llm_next7", "_fan_out"),
+        ("plans.llm_next7", "operators.phash", "_CUT_BASE"),
+        ("plans.llm_next7", "operators.phash", "_CUT_SPAN"),
+        ("plans.llm_next8", "plans.llm", "_NORM"),
+        ("plans.llm_next9", "plans.llm", "_NORM"),
+        ("plans.llm_next9", "plans.llm_next6", "_TOPK"),
+        ("plans.llm_next9", "plans.llm_next7", "_fan_out"),
+        ("plans.llm_next9", "plans.llm_next6", "_TFIDF_SQL"),
+        ("plans.olap_next4", "plans.olap_next9", "_order_part_incidence"),
+        ("plans.olap_next5", "plans.olap_next3", "_QR_BINS"),
+        ("plans.stream_next12", "operators.dedup", "_NEUTRAL_PERM_SALTS"),
+        ("plans.stream_next12", "plans.llm_next14", "_TOKEN_SPLIT_SQL"),
+        ("plans.stream_next2", "streaming.pipeline", "_LATE_MOD"),
+        ("plans.stream_next8", "streaming.pipeline", "_run_to_memory"),
+        ("plans.stream_next9", "streaming.pipeline", "_run_to_memory"),
+        ("streaming.pipeline", "plans.olap_next3", "_QR_BINS"),
+    ]
+)
+
+
+def test_no_private_imports_across_modules():
+    """CLAUDE.md rule: no module imports another module's private
+    (``_``-prefixed) name. Scanned with ``ast`` over the package; the
+    remaining offenders are the pinned list above."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "stock_data_project_spark"
+    found = []
+    for path in pkg.rglob("*.py"):
+        parts = path.relative_to(pkg).with_suffix("").parts
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+        importer = ".".join(parts)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.ImportFrom):
+                continue
+            if node.level:  # relative: resolve against the importer
+                base = list(parts if path.stem == "__init__" else parts[:-1])
+                base = base[: len(base) - (node.level - 1)]
+                source = ".".join(base + ([node.module] if node.module else []))
+            elif (node.module or "").startswith("stock_data_project_spark"):
+                source = node.module.removeprefix("stock_data_project_spark")
+                source = source.lstrip(".")
+            else:
+                continue
+            found += [
+                (importer, source, a.name)
+                for a in node.names
+                if a.name.startswith("_")
+                and not a.name.startswith("__")
+                and source != importer
+            ]
+    new = sorted(set(found) - set(_PRIVATE_IMPORTS_LEFT))
+    assert not new, f"private names imported across modules: {new}"
+    assert sorted(found) == _PRIVATE_IMPORTS_LEFT, (
+        "the pinned list is stale — drop the entries whose import is gone"
+    )

@@ -1,15 +1,13 @@
 """r10-built keys staged for the r12 window (llm_next10
-ann_recall_eval, stream_next9 stream_full_join, stock_next8
-acf_returns / seasonal_decompose / holt_forecast / cusum_anomaly /
-theil_sen_slope, olap_next11 welch_ttest / kruskal_wallis):
-driver-identical parity plus per-operator semantic pins (numpy /
-decimal independent-implementation pins for ACF, Welch, Kruskal,
-CUSUM, and Theil-Sen)."""
+ann_recall_eval, stream_next9 stream_full_join, olap_next11
+welch_ttest / kruskal_wallis): driver-identical parity plus
+per-operator semantic pins (numpy / decimal independent-implementation
+pins for Welch and Kruskal). The acf/seasonal/holt/cusum/theil_sen
+pins live in tests/test_statistics.py."""
 
 from __future__ import annotations
 
 import duckdb
-import pytest
 
 from stock_data_project_spark.plans import llm_next10, stream_next9
 from tests.conftest import SF_ORACLE, SF_SMOKE
@@ -199,25 +197,16 @@ def test_stream_full_join_click_side_semantics(spark):
         assert (cid in emitted_null) == (us < wm), (cid, us, wm)
 
 
-# --------------------------------------- acf / seasonal / welch (r10)
+# ------------------------------------------------------ welch / kruskal
 
 
 def test_stock8_and_welch_are_oracled():
-    from stock_data_project_spark.plans import olap_next11, stock_next8
+    from stock_data_project_spark.plans import olap_next11, statistics
 
-    assert set(stock_next8.QUERIES_NEXT) == set(stock_next8.ORACLE_NEXT)
+    for key in ("acf_returns", "seasonal_decompose", "holt_forecast",
+                "cusum_anomaly", "theil_sen_slope"):
+        assert key in statistics.ORACLE
     assert set(olap_next11.QUERIES_NEXT) == set(olap_next11.ORACLE_NEXT)
-
-
-@pytest.mark.parametrize("key", ["acf_returns", "seasonal_decompose"])
-def test_stock8_parity(spark, key):
-    from stock_data_project_spark.plans import stock_next8
-
-    for sf in (SF_SMOKE, SF_ORACLE):
-        df = stock_next8.QUERIES_NEXT[key](spark, sf)
-        assert_gradable_schema(df, key)
-        assert df.count() > 0
-        compare(df, duckdb_run(stock_next8.ORACLE_NEXT[key], sf))
 
 
 def test_welch_ttest_parity(spark):
@@ -228,112 +217,6 @@ def test_welch_ttest_parity(spark):
         assert_gradable_schema(df, "welch_ttest")
         assert df.count() > 0
         compare(df, duckdb_run(olap_next11.ORACLE_NEXT["welch_ttest"], sf))
-
-
-def test_acf_centered_magnitude_bound(spark):
-    """The DECIMAL(15,6) Spark-side cast for d (and the oracle's
-    (19,6) twin) relies on |d| staying far from the width limit —
-    assert the actual magnitude (largest seen so far ~1e3, bound
-    1e8 leaves 10 bits of headroom before the cast could throw
-    under ANSI)."""
-    import pyspark.sql.functions as F
-
-    from stock_data_project_spark.catalog import load_table
-    from stock_data_project_spark.operators.returns import with_daily_return
-    from stock_data_project_spark.operators.series import daily_bars
-
-    for sf in (SF_SMOKE, SF_ORACLE):
-        bars = with_daily_return(daily_bars(load_table(spark, sf, "events")))
-        (mx,) = (
-            bars.agg(F.max(F.abs(F.col("daily_return")))).collect()[0]
-        )
-        assert mx is not None and mx < 1e8, mx
-
-
-def test_acf_lag1_matches_numpy(spark):
-    """Semantic pin vs an independent implementation: numpy's
-    centered autocovariance ratio at lag 1 (to 6dp) on one series."""
-    import numpy as np
-
-    from stock_data_project_spark.plans import stock_next8
-
-    df = stock_next8.q_acf_returns(spark, SF_ORACLE).collect()
-    import duckdb
-
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{SF_ORACLE}/events.parquet')"
-    )
-    series = con.sql(
-        """
-        WITH bars AS (
-            SELECT event_type AS sk, date_trunc('day', ts) AS d,
-                   arg_max(value, ts) AS close
-            FROM events GROUP BY 1, 2
-        )
-        SELECT sk, round((close - lag(close) OVER w)
-                         / nullif(lag(close) OVER w, 0), 6) AS r
-        FROM bars WINDOW w AS (PARTITION BY sk ORDER BY d)
-        ORDER BY sk, d
-        """
-    ).fetchall()
-    by_key: dict[str, list[float]] = {}
-    for sk, r in series:
-        if r is not None:
-            by_key.setdefault(sk, []).append(r)
-    for row in df:
-        r = np.array(by_key[row["series_key"]])
-        d = r - round(r.mean(), 6)
-        expect = round(float((d[1:] * d[:-1]).sum() / (d * d).sum()), 5)
-        assert row["acf1"] is not None
-        assert abs(round(row["acf1"], 5) - expect) <= 1e-5, (
-            row["series_key"], row["acf1"], expect,
-        )
-
-
-def test_seasonal_decompose_edges_and_reconstruction(spark):
-    """Trend/residual NULL exactly on the 3-row edges of each series;
-    where defined, trend + seasonal + residual reconstructs close to
-    within the two 6dp roundings."""
-    import pyspark.sql.functions as F
-
-    from stock_data_project_spark.plans import stock_next8
-
-    df = stock_next8.q_seasonal_decompose(spark, SF_ORACLE)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("series_key").orderBy("date")
-    wd = Window.partitionBy("series_key").orderBy(F.desc("date"))
-    r = (
-        df.withColumn("rn", F.row_number().over(w))
-        .withColumn("rrn", F.row_number().over(wd))
-    )
-    assert r.filter((F.col("rn") <= 3) & F.col("trend").isNotNull()).count() == 0
-    assert r.filter((F.col("rrn") <= 3) & F.col("trend").isNotNull()).count() == 0
-    assert (
-        r.filter((F.col("rn") > 3) & (F.col("rrn") > 3) & F.col("trend").isNull())
-        .count()
-        == 0
-    )
-    # reconstruction: |close − (trend + seasonal + residual)| ≤ 1e-6
-    from stock_data_project_spark.catalog import load_table
-    from stock_data_project_spark.operators.series import daily_bars
-
-    bars = daily_bars(load_table(spark, SF_ORACLE, "events")).select(
-        "series_key", "date", "close"
-    )
-    joined = df.filter(F.col("residual").isNotNull()).join(
-        bars, ["series_key", "date"]
-    )
-    bad = joined.filter(
-        F.abs(
-            F.col("close")
-            - (F.col("trend") + F.col("seasonal") + F.col("residual"))
-        )
-        > 1e-6
-    ).count()
-    assert bad == 0
 
 
 def test_welch_ttest_matches_scipy_formula(spark):
@@ -371,128 +254,11 @@ def test_welch_ttest_matches_scipy_formula(spark):
         assert abs(row["df_welch"] - dfw) < 1e-2 * max(1.0, dfw), (row, dfw)
 
 
-def test_holt_forecast_parity(spark):
-    from stock_data_project_spark.plans import stock_next8
-
-    for sf in (SF_SMOKE, SF_ORACLE):
-        df = stock_next8.q_holt_forecast(spark, sf)
-        assert_gradable_schema(df, "holt_forecast")
-        assert df.count() > 0
-        compare(df, duckdb_run(stock_next8.ORACLE_NEXT["holt_forecast"], sf))
-
-
-def test_holt_forecast_flat_series_is_fixpoint(spark):
-    """Semantic pin: on a constant series the smoother is a fixpoint —
-    level = x, trend = 0, forecast = x at every step."""
-    from decimal import Decimal
-
-    import pandas as pd
-
-    from stock_data_project_spark.plans.stock_next8 import q_holt_forecast
-
-    # reuse the fold through the public plan by faking bars: easier to
-    # drive the kernel directly on a constant frame
-    from stock_data_project_spark.plans import stock_next8
-
-    pdf = pd.DataFrame(
-        {
-            "series_key": ["k"] * 10,
-            "date": pd.date_range("2024-01-01", periods=10, tz="UTC"),
-            "rn": list(range(1, 11)),
-            "c_d": [Decimal("42.500000")] * 10,
-        }
-    )
-    sdf = spark.createDataFrame(pdf).selectExpr(
-        "series_key", "date", "rn", "CAST(c_d AS DECIMAL(18,6)) AS c_d"
-    )
-    # replicate the plan's post-fold projection inline
-    import pyspark.sql.functions as F
-
-    folded = sdf.groupBy("series_key").applyInPandas(
-        stock_next8._holt_fold,
-        "series_key string, date timestamp, lvl_d decimal(18,6), tr_d decimal(18,6)",
-    )
-    rows = folded.collect()
-    assert len(rows) == 10
-    for r in rows:
-        assert float(r["lvl_d"]) == 42.5
-        assert float(r["tr_d"]) == 0.0
-
-
 def test_cusum_and_kruskal_are_oracled():
-    from stock_data_project_spark.plans import olap_next11, stock_next8
+    from stock_data_project_spark.plans import olap_next11, statistics
 
-    assert "cusum_anomaly" in stock_next8.ORACLE_NEXT
+    assert "cusum_anomaly" in statistics.ORACLE
     assert "kruskal_wallis" in olap_next11.ORACLE_NEXT
-
-
-def test_cusum_anomaly_parity(spark):
-    from stock_data_project_spark.plans import stock_next8
-
-    for sf in (SF_SMOKE, SF_ORACLE):
-        df = stock_next8.q_cusum_anomaly(spark, sf)
-        assert_gradable_schema(df, "cusum_anomaly")
-        assert df.count() > 0
-        compare(df, duckdb_run(stock_next8.ORACLE_NEXT["cusum_anomaly"], sf))
-
-
-def test_cusum_alarm_mix_is_nontrivial(spark):
-    """The h=45 threshold must grade a real decision boundary — some
-    alarms, not all or none (the all-145 regression this key shipped
-    with at h=0.04 would be invisible to parity alone)."""
-    import pyspark.sql.functions as F
-
-    from stock_data_project_spark.plans import stock_next8
-
-    for sf in (SF_SMOKE, SF_ORACLE):
-        df = stock_next8.q_cusum_anomaly(spark, sf)
-        n = df.count()
-        a = df.agg(F.sum("alarm")).collect()[0][0]
-        assert 0 < a < n, (sf, a, n)
-
-
-def test_cusum_semantics_manual(spark):
-    """Independent replay of the fold on one series pulled via the
-    oracle's own return construction."""
-    from decimal import Decimal
-
-    from stock_data_project_spark.plans import stock_next8
-
-    rows = (
-        stock_next8.q_cusum_anomaly(spark, SF_ORACLE)
-        .filter("series_key = 'click'")
-        .orderBy("date")
-        .collect()
-    )
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{SF_ORACLE}/events.parquet')"
-    )
-    rets = con.sql(
-        """
-        WITH bars AS (
-            SELECT date_trunc('day', ts) AS d, arg_max(value, ts) AS close
-            FROM events WHERE event_type = 'click' GROUP BY 1
-        )
-        SELECT round((close - lag(close) OVER w) / nullif(lag(close) OVER w, 0), 6)
-        FROM bars WINDOW w AS (ORDER BY d) ORDER BY d
-        """
-    ).fetchall()
-    k, zero = Decimal("0.005"), Decimal("0")
-    cp = cn = zero
-    expected = []
-    for (r,) in rets:
-        if r is None:
-            continue
-        rd = Decimal(str(r))
-        cp = max(zero, cp + (rd - k))
-        cn = max(zero, cn - (rd + k))
-        expected.append((float(cp), float(cn)))
-    assert len(rows) == len(expected)
-    for row, (ecp, ecn) in zip(rows, expected):
-        assert abs(row["cusum_pos"] - ecp) < 1e-9
-        assert abs(row["cusum_neg"] - ecn) < 1e-9
 
 
 def test_kruskal_wallis_parity(spark):
@@ -582,51 +348,3 @@ def test_kruskal_wallis_planted_ties_parity(spark, tmp_path):
     assert srow["h_stat"] == orow["h_stat"]
     assert srow["h_corrected"] == orow["h_corrected"]
     assert srow["h_corrected"] > srow["h_stat"]  # C < 1 with real ties
-
-
-def test_theil_sen_parity(spark):
-    from stock_data_project_spark.plans import stock_next8
-
-    for sf in (SF_SMOKE, SF_ORACLE):
-        df = stock_next8.q_theil_sen_slope(spark, sf)
-        assert_gradable_schema(df, "theil_sen_slope")
-        assert df.count() > 0
-        compare(df, duckdb_run(stock_next8.ORACLE_NEXT["theil_sen_slope"], sf))
-
-
-def test_theil_sen_matches_numpy(spark):
-    """Independent implementation pin: numpy median of all pairwise
-    slopes (rounded 6dp like the plan), to 5dp."""
-    import numpy as np
-
-    from stock_data_project_spark.plans import stock_next8
-
-    rows = {
-        r["series_key"]: r
-        for r in stock_next8.q_theil_sen_slope(spark, SF_ORACLE).collect()
-    }
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{SF_ORACLE}/events.parquet')"
-    )
-    series = con.sql(
-        """
-        SELECT event_type, arg_max(value, ts) AS close
-        FROM events GROUP BY event_type, date_trunc('day', ts)
-        ORDER BY event_type, date_trunc('day', ts)
-        """
-    ).fetchall()
-    by_key: dict[str, list[float]] = {}
-    for k, c in series:
-        by_key.setdefault(k, []).append(c)
-    for k, closes in by_key.items():
-        c = np.array(closes)
-        slopes = []
-        for i in range(len(c)):
-            for j in range(i + 1, len(c)):
-                slopes.append(round((c[j] - c[i]) / (j - i), 6))
-        expect = float(np.median(np.array(slopes)))
-        got = rows[k]["sen_slope"]
-        assert rows[k]["n_pairs"] == len(slopes)
-        assert abs(got - expect) < 1e-5, (k, got, expect)

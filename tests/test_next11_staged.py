@@ -1,5 +1,5 @@
 """Late-r10 keys staged for the r12 window (olap_next11
-mann_whitney_u / event_transition_matrix, stock_next9 spearman_corr,
+mann_whitney_u / event_transition_matrix,
 llm_next11 dsir_importance, stream_next10 stream_chained_agg):
 driver-identical parity plus independent
 implementation pins (numpy rank tests, pure-Python DSIR replay) and a
@@ -12,15 +12,14 @@ import duckdb
 import numpy as np
 import pytest
 
-from stock_data_project_spark.plans import llm_next11, olap_next11, stock_next9
+from stock_data_project_spark.plans import llm_next11, olap_next11
 from tests.conftest import SF_ORACLE, SF_SMOKE
-from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
+from tests.oracle_utils import assert_gradable_schema, avg_ranks, compare, duckdb_run
 
 
 def test_next11_keys_are_oracled():
     for key in ("mann_whitney_u", "event_transition_matrix"):
         assert key in olap_next11.QUERIES_NEXT and key in olap_next11.ORACLE_NEXT
-    assert set(stock_next9.QUERIES_NEXT) == set(stock_next9.ORACLE_NEXT)
     assert set(llm_next11.QUERIES_NEXT) == set(llm_next11.ORACLE_NEXT)
 
 
@@ -36,14 +35,6 @@ def test_olap_next11_late_parity(spark, key):
         compare(df, duckdb_run(olap_next11.ORACLE_NEXT[key], sf))
 
 
-def test_spearman_parity(spark):
-    for sf in (SF_SMOKE, SF_ORACLE):
-        df = stock_next9.q_spearman_corr(spark, sf)
-        assert_gradable_schema(df, "spearman_corr")
-        assert df.count() > 0
-        compare(df, duckdb_run(stock_next9.ORACLE_NEXT["spearman_corr"], sf))
-
-
 def test_dsir_parity(spark):
     for sf in (SF_SMOKE, SF_ORACLE):
         df = llm_next11.q_dsir_importance(spark, sf)
@@ -53,22 +44,6 @@ def test_dsir_parity(spark):
 
 
 # ------------------------------------------------------ semantic pins
-
-
-def _avg_ranks(vals: np.ndarray) -> np.ndarray:
-    """Average ranks with ties (1-based), scipy-free."""
-    order = np.argsort(vals, kind="stable")
-    ranks = np.empty(len(vals))
-    sv = vals[order]
-    pos = np.arange(1, len(sv) + 1, dtype=np.float64)
-    i = 0
-    while i < len(sv):
-        j = i
-        while j + 1 < len(sv) and sv[j + 1] == sv[i]:
-            j += 1
-        ranks[order[i : j + 1]] = pos[i : j + 1].mean()
-        i = j + 1
-    return ranks
 
 
 def test_mann_whitney_matches_textbook(spark):
@@ -94,7 +69,7 @@ def test_mann_whitney_matches_textbook(spark):
         for b in segs[i + 1 :]:
             xa, xb = by_seg[a], by_seg[b]
             comb = np.concatenate([xa, xb])
-            ranks = _avg_ranks(comb)
+            ranks = avg_ranks(comb)
             r_a = ranks[: len(xa)].sum()
             u = r_a - len(xa) * (len(xa) + 1) / 2.0
             n = len(comb)
@@ -139,76 +114,6 @@ def test_mann_whitney_planted_ties_parity(spark, tmp_path):
     assert srow["u_stat"] == orow["u_stat"] == 0.0  # A strictly below B
     assert srow["z_stat"] == orow["z_stat"]
     assert srow["z_stat"] < -5.0  # decisive separation
-
-
-def test_spearman_matches_numpy(spark):
-    """Independent rho: Pearson of average ranks via numpy, to 6dp
-    (the plan's arithmetic is exact; corrcoef's double path agrees far
-    below the comparison tolerance)."""
-    rows = {
-        r["series_key"]: r for r in stock_next9.q_spearman_corr(spark, SF_ORACLE).collect()
-    }
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF_ORACLE}/events.parquet')"
-    )
-    bars = con.sql(
-        """SELECT event_type, date_trunc('day', ts) AS d,
-                  arg_max(value, ts) AS close, count(*) AS volume
-           FROM events GROUP BY 1, 2"""
-    ).df()
-    for key, gr in bars.groupby("event_type"):
-        rx = _avg_ranks(gr["close"].to_numpy(dtype=np.float64))
-        ry = _avg_ranks(gr["volume"].to_numpy(dtype=np.float64))
-        rho = float(np.corrcoef(rx, ry)[0, 1])
-        row = rows[key]
-        assert row["n_days"] == len(gr)
-        assert -1.0 <= row["rho_spearman"] <= 1.0
-        assert abs(row["rho_spearman"] - rho) < 1e-6, (key, row["rho_spearman"], rho)
-
-
-def test_kendall_tau_parity(spark):
-    for sf in (SF_SMOKE, SF_ORACLE):
-        df = stock_next9.q_kendall_tau(spark, sf)
-        assert_gradable_schema(df, "kendall_tau")
-        assert df.count() > 0
-        compare(df, duckdb_run(stock_next9.ORACLE_NEXT["kendall_tau"], sf))
-
-
-def test_kendall_tau_matches_textbook(spark):
-    """Independent tau-b: O(n²) concordance loop + tie corrections in
-    numpy on the real bars, exact counts and 1e-9 on tau."""
-    rows = {
-        r["series_key"]: r for r in stock_next9.q_kendall_tau(spark, SF_ORACLE).collect()
-    }
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF_ORACLE}/events.parquet')"
-    )
-    bars = con.sql(
-        """SELECT event_type, date_trunc('day', ts) AS d,
-                  arg_max(value, ts) AS close, count(*) AS volume
-           FROM events GROUP BY 1, 2 ORDER BY 1, 2"""
-    ).df()
-    for key, gr in bars.groupby("event_type"):
-        x = gr["close"].to_numpy()
-        y = gr["volume"].to_numpy()
-        n = len(x)
-        c = d = 0
-        for i in range(n):
-            for j in range(i + 1, n):
-                s = np.sign(x[j] - x[i]) * np.sign(y[j] - y[i])
-                c += s > 0
-                d += s < 0
-        n0 = n * (n - 1) // 2
-        _, tcx = np.unique(x, return_counts=True)
-        _, tcy = np.unique(y, return_counts=True)
-        n1 = int((tcx * (tcx - 1) // 2).sum())
-        n2 = int((tcy * (tcy - 1) // 2).sum())
-        tau = (c - d) / np.sqrt(float((n0 - n1) * (n0 - n2)))
-        row = rows[key]
-        assert row["concordant"] == c and row["discordant"] == d
-        assert abs(row["tau_b"] - tau) < 1e-6, (key, row["tau_b"], tau)
 
 
 def test_vocab_growth_parity(spark):
@@ -275,74 +180,6 @@ def test_event_transition_invariants(spark):
         assert sum(g["n_trans"] for g in grp) == n_from
         p_sum = sum(g["p_trans"] for g in grp)
         assert abs(p_sum - 1.0) < len(grp) * 5e-7 + 1e-12, (prev, p_sum)
-
-
-def test_holt_winters_parity(spark):
-    for sf in (SF_SMOKE, SF_ORACLE):
-        df = stock_next9.q_holt_winters(spark, sf)
-        assert_gradable_schema(df, "holt_winters")
-        assert df.count() > 0
-        compare(df, duckdb_run(stock_next9.ORACLE_NEXT["holt_winters"], sf))
-
-
-def test_holt_winters_periodic_series_is_fixpoint():
-    """A perfectly period-7 series with zero-sum seasonal pattern is
-    an exact fixpoint of the fold: level stays at the base, trend at
-    0, and fitted reproduces the actuals exactly."""
-    from decimal import Decimal
-
-    import pandas as pd
-
-    pattern = [Decimal(s) for s in ("3", "-2", "1", "0", "-1", "2", "-3")]
-    base = Decimal("100.000000")
-    n = 28
-    pdf = pd.DataFrame(
-        {
-            "series_key": ["k"] * n,
-            "date": pd.date_range("2024-01-01", periods=n),
-            "rn": range(1, n + 1),
-            "c_d": [base + pattern[i % 7] for i in range(n)],
-        }
-    )
-    out = stock_next9._hw_fold(pdf)
-    assert len(out) == n - 7
-    for _, r in out.iterrows():
-        assert r["lvl_d"] == base
-        assert r["tr_d"] == 0
-    fits = list(out["fit_d"])
-    for i, f in enumerate(fits):
-        assert f == base + pattern[(i + 7) % 7]
-
-
-def test_holt_winters_short_series_emits_nothing(spark):
-    """Series below period+1 bars emit zero rows, and the EMPTY
-    applyInPandas output keeps the input dtypes (the empty-output
-    Arrow class, scalar-column variant) — under BOTH Arrow settings
-    (the driver session runs Arrow-off)."""
-    old = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "true")
-    try:
-        for arrow in ("true", "false"):
-            spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", arrow)
-            src = spark.createDataFrame(
-                [
-                    ("a", f"2024-01-{d:02d} 00:00:00", d, float(d))
-                    for d in range(1, 6)
-                ],
-                "series_key string, date string, rn int, close double",
-            ).selectExpr(
-                "series_key",
-                "CAST(date AS TIMESTAMP) date",
-                "rn",
-                "CAST(close AS DECIMAL(18,6)) c_d",
-            )
-            out = src.groupBy("series_key").applyInPandas(
-                stock_next9._hw_fold,
-                "series_key string, date timestamp, lvl_d decimal(18,6),"
-                " tr_d decimal(18,6), seas_d decimal(18,6), fit_d decimal(18,6)",
-            )
-            assert out.count() == 0
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", old)
 
 
 def test_stream_chained_agg_parity(spark):

@@ -1,11 +1,10 @@
-"""Late-r10 keys staged for the r12 window (stock_next10 runs_test /
-ljung_box / jarque_bera / sharpe_sortino / hurst_exponent,
-olap_next12 one_way_anova / herfindahl_index, llm_next12 zipf_slope /
-flesch_reading_ease / containment_pairs): driver-identical parity
-plus independent implementation pins (numpy moments / OLS / textbook
+"""Late-r10 keys staged for the r12 window (olap_next12 one_way_anova
+/ herfindahl_index, llm_next12 zipf_slope / flesch_reading_ease /
+containment_pairs, olap_next13 event_mutual_info): driver-identical
+parity plus independent implementation pins (numpy moments / OLS
 replays, a pure-``re`` readability recount, a planted sub-document
-containment construction) and the decimal-width bound assertions the
-module docstrings promise."""
+containment construction). The runs/ljung_box/jarque_bera/sharpe/
+hurst/variance_ratio/seasonality pins live in tests/test_statistics.py."""
 
 from __future__ import annotations
 
@@ -16,24 +15,14 @@ import duckdb
 import numpy as np
 import pytest
 
-from stock_data_project_spark.plans import llm_next12, olap_next12, stock_next10
+from stock_data_project_spark.plans import llm_next12, olap_next12
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
 
 def test_next12_keys_are_oracled():
-    assert set(stock_next10.QUERIES_NEXT) == set(stock_next10.ORACLE_NEXT)
     assert set(olap_next12.QUERIES_NEXT) == set(olap_next12.ORACLE_NEXT)
     assert set(llm_next12.QUERIES_NEXT) == set(llm_next12.ORACLE_NEXT)
-
-
-@pytest.mark.parametrize("key", sorted(stock_next10.QUERIES_NEXT))
-def test_stock_next10_parity(spark, key):
-    for sf in (SF_SMOKE, SF_ORACLE):
-        df = stock_next10.QUERIES_NEXT[key](spark, sf)
-        assert_gradable_schema(df, key)
-        assert df.count() > 0
-        compare(df, duckdb_run(stock_next10.ORACLE_NEXT[key], sf))
 
 
 @pytest.mark.parametrize("key", sorted(olap_next12.QUERIES_NEXT))
@@ -55,142 +44,6 @@ def test_llm_next12_parity(spark, key):
 
 
 # ------------------------------------------------------ semantic pins
-
-
-def _returns_by_series(sf: str) -> dict[str, np.ndarray]:
-    """6dp daily returns per series, exactly as the plans derive them."""
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf}/events.parquet')")
-    df = con.sql(
-        """
-        WITH bars AS (
-            SELECT event_type AS sk, date_trunc('day', ts) AS d,
-                   arg_max(value, ts) AS close
-            FROM events GROUP BY 1, 2),
-        ret AS (
-            SELECT sk, d, round((close - lag(close) OVER w)
-                                / nullif(lag(close) OVER w, 0), 6) AS r
-            FROM bars WINDOW w AS (PARTITION BY sk ORDER BY d))
-        SELECT sk, d, r FROM ret WHERE r IS NOT NULL ORDER BY sk, d
-        """
-    ).df()
-    return {k: g["r"].to_numpy(dtype=np.float64) for k, g in df.groupby("sk")}
-
-
-def test_runs_test_matches_textbook(spark):
-    rows = {
-        r["series_key"]: r
-        for r in stock_next10.q_runs_test(spark, SF_ORACLE).collect()
-    }
-    for key, r in _returns_by_series(SF_ORACLE).items():
-        r = r[r != 0.0]
-        sgn = (r > 0).astype(int)
-        runs = 1 + int((sgn[1:] != sgn[:-1]).sum())
-        n1, n2, n = int(sgn.sum()), int((1 - sgn).sum()), len(sgn)
-        mu = 1.0 + 2.0 * n1 * n2 / n
-        var = (2.0 * n1 * n2 * (2.0 * n1 * n2 - n)) / (n * n * (n - 1.0))
-        z = (runs - mu) / math.sqrt(var)
-        row = rows[key]
-        assert (row["n_pos"], row["n_neg"], row["n_runs"]) == (n1, n2, runs)
-        assert abs(row["z_runs"] - z) < 1e-6, (key, row["z_runs"], z)
-        # the 2^53 exactness window the docstring promises
-        assert 2.0 * n1 * n2 * (2.0 * n1 * n2 + n) < 2**53
-
-
-def test_ljung_box_matches_numpy(spark):
-    rows = {
-        r["series_key"]: r
-        for r in stock_next10.q_ljung_box(spark, SF_ORACLE).collect()
-    }
-    for key, r in _returns_by_series(SF_ORACLE).items():
-        n = len(r)
-        d = r - r.mean()
-        q = 0.0
-        for k in (1, 2, 3):
-            rho = float((d[k:] * d[:-k]).sum() / (d * d).sum())
-            q += rho * rho / (n - k)
-        q *= n * (n + 2.0)
-        row = rows[key]
-        assert row["n_obs"] == n
-        # the plan centers on the 6dp-rounded mean; numpy on the raw
-        # mean — agreement to 1e-4 pins the statistic, not the bits
-        assert abs(row["q_lb"] - q) < 1e-4 * max(1.0, abs(q)), (key, row["q_lb"], q)
-
-
-def test_jarque_bera_matches_numpy(spark):
-    rows = {
-        r["series_key"]: r
-        for r in stock_next10.q_jarque_bera(spark, SF_ORACLE).collect()
-    }
-    for key, r in _returns_by_series(SF_ORACLE).items():
-        n = len(r)
-        m = r.mean()
-        d = r - m
-        m2, m3, m4 = (d**2).mean(), (d**3).mean(), (d**4).mean()
-        skew = m3 / m2**1.5
-        kurt = m4 / m2**2 - 3.0
-        jb = n / 6.0 * (skew**2 + kurt**2 / 4.0)
-        row = rows[key]
-        assert abs(row["skewness"] - skew) < 1e-5 * max(1.0, abs(skew))
-        assert abs(row["ex_kurtosis"] - kurt) < 1e-5 * max(1.0, abs(kurt))
-        assert abs(row["jb_stat"] - jb) < 1e-4 * max(1.0, abs(jb))
-        # decimal-width bounds the module docstring promises
-        u = np.round(r * 1e6)
-        assert np.abs(u).max() < 2e9
-        assert (u.astype(object) ** 4).sum() < 10**38
-
-
-def test_sharpe_sortino_matches_numpy(spark):
-    rows = {
-        r["series_key"]: r
-        for r in stock_next10.q_sharpe_sortino(spark, SF_ORACLE).collect()
-    }
-    for key, r in _returns_by_series(SF_ORACLE).items():
-        n = len(r)
-        mean = r.mean()
-        std = r.std(ddof=1)
-        ddev = math.sqrt(float((np.minimum(r, 0.0) ** 2).mean()))
-        row = rows[key]
-        assert row["n_obs"] == n
-        assert abs(row["mean_return"] - mean) < 1e-6
-        assert abs(row["return_std"] - std) < 1e-6 * max(1.0, std)
-        assert abs(row["sharpe"] - math.sqrt(252.0) * mean / std) < 1e-5 * max(
-            1.0, abs(row["sharpe"])
-        )
-        assert abs(row["sortino"] - math.sqrt(252.0) * mean / ddev) < 1e-5 * max(
-            1.0, abs(row["sortino"])
-        )
-
-
-def test_hurst_matches_textbook(spark):
-    """Independent R/S replay: per-block rescaled range with the
-    population std, 6dp-rounded, exact-average over blocks — the
-    plan's arithmetic replicated in numpy (same roundings, so the
-    match is exact)."""
-    rows = {
-        r["series_key"]: r
-        for r in stock_next10.q_hurst_exponent(spark, SF_ORACLE).collect()
-    }
-    for key, r in _returns_by_series(SF_ORACLE).items():
-        row = rows[key]
-        rss = {}
-        for m in (8, 16):
-            vals = []
-            for b in range(len(r) // m):
-                blk = r[b * m : (b + 1) * m]
-                # D_k for k = 1..m (D_m = 0 exactly in the plan's
-                # integer walk, so the 0 anchor is always present)
-                dev = np.cumsum(blk - blk.mean())
-                rng = float(dev.max() - dev.min())
-                s = float(blk.std(ddof=0))
-                if s > 0:
-                    vals.append(round(rng / s, 6))
-            rss[m] = sum(vals) / len(vals)
-            assert row[f"n_blocks_{m}"] == len(vals)
-        assert abs(row["rs8"] - rss[8]) < 2e-6
-        assert abs(row["rs16"] - rss[16]) < 2e-6
-        h = math.log(rss[16] / rss[8]) / math.log(2.0)
-        assert abs(row["hurst"] - h) < 1e-4, (key, row["hurst"], h)
 
 
 def test_one_way_anova_matches_numpy(spark):
@@ -334,89 +187,24 @@ def test_containment_pairs_consistency_with_jaccard(spark):
         assert abs(1.0 / j - (1.0 / ca + 1.0 / cb - 1.0)) < 1e-3, (pair, ca, cb, j)
 
 
-# ------------------------- second late-r10 batch (stock_next11/olap_next13)
+# ------------------------------------ second late-r10 batch (olap_next13)
 
 
 def test_next12b_keys_are_oracled():
-    from stock_data_project_spark.plans import olap_next13, stock_next11
+    from stock_data_project_spark.plans import olap_next13
 
-    assert set(stock_next11.QUERIES_NEXT) == set(stock_next11.ORACLE_NEXT)
     assert set(olap_next13.QUERIES_NEXT) == set(olap_next13.ORACLE_NEXT)
 
 
-@pytest.mark.parametrize(
-    "key", ["variance_ratio", "seasonality_strength", "event_mutual_info"]
-)
+@pytest.mark.parametrize("key", ["event_mutual_info"])
 def test_next12b_parity(spark, key):
-    from stock_data_project_spark.plans import olap_next13, stock_next11
+    from stock_data_project_spark.plans import olap_next13
 
-    mod = olap_next13 if key in olap_next13.QUERIES_NEXT else stock_next11
     for sf in (SF_SMOKE, SF_ORACLE):
-        df = mod.QUERIES_NEXT[key](spark, sf)
+        df = olap_next13.QUERIES_NEXT[key](spark, sf)
         assert_gradable_schema(df, key)
         assert df.count() > 0
-        compare(df, duckdb_run(mod.ORACLE_NEXT[key], sf))
-
-
-def test_variance_ratio_matches_numpy(spark):
-    from stock_data_project_spark.plans import stock_next11
-
-    rows = {
-        r["series_key"]: r
-        for r in stock_next11.q_variance_ratio(spark, SF_ORACLE).collect()
-    }
-    q = 5
-    for key, r in _returns_by_series(SF_ORACLE).items():
-        rq = np.convolve(r, np.ones(q), mode="valid")
-        vr = rq.var(ddof=1) / (q * r.var(ddof=1))
-        n = len(r)
-        z = (vr - 1.0) / math.sqrt(2.0 * (2 * q - 1) * (q - 1) / (3.0 * q * n))
-        row = rows[key]
-        assert row["n_obs"] == n and row["n_windows"] == len(rq)
-        assert abs(row["vr"] - vr) < 1e-5 * max(1.0, vr), (key, row["vr"], vr)
-        assert abs(row["z_vr"] - z) < 1e-4 * max(1.0, abs(z))
-
-
-def test_seasonality_strength_matches_numpy(spark):
-    """Independent replay: centered 7-day MA trend, per-dow seasonal
-    mean of the detrended residue, variance ratios — numpy doubles
-    agree with the plan's exact-decimal path to ~1e-5 (the plan's
-    6dp roundings are the only divergence)."""
-    import pandas as pd
-    from stock_data_project_spark.plans import stock_next11
-
-    rows = {
-        r["series_key"]: r
-        for r in stock_next11.q_seasonality_strength(spark, SF_ORACLE).collect()
-    }
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF_ORACLE}/events.parquet')"
-    )
-    bars = con.sql(
-        """SELECT event_type AS sk, date_trunc('day', ts) AS d,
-                  arg_max(value, ts) AS close,
-                  CAST((epoch_us(date_trunc('day', ts)) // 86400000000) % 7 AS INT)
-                      AS dow
-           FROM events GROUP BY 1, 2 ORDER BY 1, 2"""
-    ).df()
-    for key, g in bars.groupby("sk"):
-        c = g["close"].to_numpy(dtype=np.float64)
-        trend = pd.Series(c).rolling(7, center=True).mean().to_numpy()
-        det = c - trend
-        dow = g["dow"].to_numpy()
-        seas = np.array(
-            [np.nanmean(det[dow == dw]) if np.isfinite(det[dow == dw]).any() else np.nan for dw in dow]
-        )
-        mask = np.isfinite(det)
-        res = det[mask] - seas[mask]
-        des = c[mask] - seas[mask]
-        fs = max(0.0, 1.0 - res.var(ddof=1) / det[mask].var(ddof=1))
-        ft = max(0.0, 1.0 - res.var(ddof=1) / des.var(ddof=1))
-        row = rows[key]
-        assert row["n_obs"] == int(mask.sum())
-        assert abs(row["seasonal_strength"] - fs) < 1e-4, (key, row["seasonal_strength"], fs)
-        assert abs(row["trend_strength"] - ft) < 1e-4
+        compare(df, duckdb_run(olap_next13.ORACLE_NEXT[key], sf))
 
 
 def test_event_mutual_info_matches_numpy(spark):

@@ -1,36 +1,23 @@
-"""r10-close keys staged for the r13 window (stock_next12
-changepoint_detect / lead_lag_corr, llm_next13 minhash_recall_eval):
-driver-identical parity plus independent pins — a numpy max-CUSUM /
-lead-lag replay, the planted-construction arithmetic asserted from
-first principles, and a negative control proving the minhash grade
-detects broken banding."""
+"""r10-close keys staged for the r13 window (llm_next13
+minhash_recall_eval): driver-identical parity plus independent pins —
+the planted-construction arithmetic asserted from first principles,
+and a negative control proving the minhash grade detects broken
+banding. The changepoint/lead-lag pins live in
+tests/test_statistics.py."""
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
 
-from stock_data_project_spark.plans import llm_next13, stock_next12
+from stock_data_project_spark.plans import llm_next13
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
 
 def test_next13_keys_are_oracled():
-    assert set(stock_next12.QUERIES_NEXT) == set(stock_next12.ORACLE_NEXT)
     assert set(llm_next13.QUERIES_NEXT) == set(llm_next13.ORACLE_NEXT)
-
-
-@pytest.mark.parametrize("key", sorted(stock_next12.QUERIES_NEXT))
-def test_stock_next12_parity(spark, key):
-    for sf in (SF_SMOKE, SF_ORACLE):
-        df = stock_next12.QUERIES_NEXT[key](spark, sf)
-        assert_gradable_schema(df, key)
-        assert df.count() > 0
-        compare(df, duckdb_run(stock_next12.ORACLE_NEXT[key], sf))
 
 
 @pytest.mark.parametrize("key", sorted(llm_next13.QUERIES_NEXT))
@@ -40,98 +27,6 @@ def test_llm_next13_parity(spark, key):
         assert_gradable_schema(df, key)
         assert df.count() > 0
         compare(df, duckdb_run(llm_next13.ORACLE_NEXT[key], sf))
-
-
-def _returns_by_series(spark, sf):
-    from stock_data_project_spark.catalog import load_table
-    from stock_data_project_spark.operators.returns import with_daily_return
-    from stock_data_project_spark.operators.series import daily_bars
-
-    bars = with_daily_return(daily_bars(load_table(spark, sf, "events")))
-    rows = (
-        bars.filter(F.col("daily_return").isNotNull())
-        .select("series_key", "date", F.round("daily_return", 6).alias("r"))
-        .orderBy("series_key", "date")
-        .collect()
-    )
-    series: dict[str, list[float]] = {}
-    for row in rows:
-        series.setdefault(row.series_key, []).append(float(row.r))
-    return series
-
-
-def test_changepoint_matches_numpy_replay(spark):
-    """Independent pin: per series, argmax_k |n·S_k − k·S_n| over the
-    interior (ties → smallest k) and the Brownian-bridge statistic
-    D_max/(n·σ̂·√n) recomputed with numpy from the rounded returns."""
-    series = _returns_by_series(spark, SF_ORACLE)
-    got = {
-        r.series_key: r
-        for r in stock_next12.q_changepoint_detect(spark, SF_ORACLE).collect()
-    }
-    assert set(got) == set(series)
-    for key, rs in series.items():
-        n = len(rs)
-        s = np.cumsum(np.asarray(rs, dtype=np.float64))
-        ks = np.arange(1, n + 1)
-        d = np.abs(n * s - ks * s[-1])[:-1]  # interior k = 1..n-1
-        if n < 2:
-            assert got[key].cp_k is None
-            continue
-        # D values are multiples of 1e-6 (exact decimals); float replay
-        # noise is ~1e-10, so an 8dp round restores exact ties before
-        # argmax (first occurrence == smallest k, the engine's order)
-        k_star = int(np.argmax(np.round(d, 8))) + 1
-        assert got[key].cp_k == k_star
-        var = float(np.var(np.asarray(rs), ddof=1)) if n > 1 else 0.0
-        if var > 0:
-            expect = float(d[k_star - 1]) / (n * math.sqrt(var) * math.sqrt(n))
-            assert got[key].cp_stat == pytest.approx(expect, abs=2e-5)
-        assert got[key].cp_dmax == pytest.approx(float(d[k_star - 1]), abs=2e-4)
-
-
-def test_lead_lag_matches_numpy_replay(spark):
-    """Independent pin: the ±2-lag Pearson profile recomputed with
-    numpy on the aligned (date-joined) return arrays; lag 0 must also
-    agree with the established return_correlation key."""
-    from stock_data_project_spark.catalog import load_table
-    from stock_data_project_spark.operators.returns import with_daily_return
-    from stock_data_project_spark.operators.series import daily_bars
-
-    bars = with_daily_return(daily_bars(load_table(spark, SF_ORACLE, "events")))
-    rows = (
-        bars.filter(F.col("daily_return").isNotNull())
-        .select("series_key", "date", F.round("daily_return", 6).alias("r"))
-        .collect()
-    )
-    by_series: dict[str, dict] = {}
-    for row in rows:
-        by_series.setdefault(row.series_key, {})[row.date] = float(row.r)
-    order: dict[str, list] = {
-        k: sorted(v) for k, v in by_series.items()
-    }
-    got = stock_next12.q_lead_lag_corr(spark, SF_ORACLE).collect()
-    assert got
-    checked = 0
-    for row in got:
-        a, b, lag = row.key_a, row.key_b, row.lag
-        dates_b = order[b]
-        # y(t) = r_b at position(t)+lag within b's own date order
-        pos_b = {d: i for i, d in enumerate(dates_b)}
-        xs, ys = [], []
-        for d, x in by_series[a].items():
-            if d not in pos_b:
-                continue
-            j = pos_b[d] + lag
-            if 0 <= j < len(dates_b):
-                xs.append(x)
-                ys.append(by_series[b][dates_b[j]])
-        assert row.n_obs == len(xs)
-        if len(xs) >= 2 and np.std(xs) > 0 and np.std(ys) > 0:
-            expect = float(np.corrcoef(xs, ys)[0, 1])
-            assert row.xcorr == pytest.approx(expect, abs=2e-5)
-            checked += 1
-    assert checked > 0
 
 
 def test_minhash_recall_planted_arithmetic(spark):
@@ -207,26 +102,6 @@ def test_minhash_recall_null_anchor_group_excluded(spark):
     assert got[1].n_pairs == 10
     assert got[1].pair_id_sum == 100 * 1 + 40
     assert got[1].min_est == 1.0 and got[1].max_est == 1.0
-
-
-def test_changepoint_constant_series_guard_both_engines(spark):
-    """Constant-return series: the variance expression's double dust
-    can land below zero, and DuckDB HARD-ERRORS on sqrt(negative)
-    while Spark returns NaN. The greatest(0, .) guard must make the
-    shared expression evaluate without error and IDENTICALLY on both
-    engines (NULL via nullif, or exact 0/0-free division)."""
-    import duckdb
-
-    from stock_data_project_spark.plans.stock_next12 import _CP_STAT
-
-    sql = (
-        f"SELECT round({_CP_STAT}, 6) + 0.0 AS cp_stat FROM ("
-        "SELECT CAST(0.0 AS DOUBLE) dmax, CAST(3 AS BIGINT) n_obs, "
-        "CAST(3e-6 AS DOUBLE) s1, CAST(3e-12 AS DOUBLE) s2) g"
-    )
-    spark_val = spark.sql(sql).collect()[0].cp_stat
-    duck_val = duckdb.sql(sql).fetchone()[0]  # must not raise
-    assert spark_val == duck_val or (spark_val is None and duck_val is None)
 
 
 def test_minhash_recall_incomplete_tail_groups_excluded(spark):

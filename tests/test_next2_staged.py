@@ -1,4 +1,4 @@
-"""r5-built keys for the r6 window (stock_next2 / llm_next2 /
+"""r5-built keys for the r6 window (indicators / llm_next2 /
 olap_next3 / stream_next2): the SAME value-level DuckDB comparison the
 driver runs, plus the semantic pins the rows-only key needs."""
 
@@ -7,22 +7,23 @@ from __future__ import annotations
 import pytest
 
 from stock_data_project_spark.plans import (
+    indicators,
     llm_next2,
     olap_next3,
-    stock_next2,
     stream_next2,
 )
 from tests.conftest import SF_ORACLE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
+_INDICATOR_KEYS = ("williams_r", "mfi", "ulcer_index", "linear_interp")
 ALL_Q = {
-    **stock_next2.QUERIES_NEXT,
+    **{k: indicators.QUERIES[k] for k in _INDICATOR_KEYS},
     **llm_next2.QUERIES_NEXT,
     **olap_next3.QUERIES_NEXT,
     **stream_next2.QUERIES_NEXT,
 }
 ALL_O = {
-    **stock_next2.ORACLE_NEXT,
+    **{k: indicators.ORACLE[k] for k in _INDICATOR_KEYS},
     **llm_next2.ORACLE_NEXT,
     **olap_next3.ORACLE_NEXT,
     **stream_next2.ORACLE_NEXT,

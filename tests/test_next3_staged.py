@@ -8,23 +8,24 @@ import pytest
 from pyspark.sql import functions as F
 
 from stock_data_project_spark.plans import (
+    indicators,
     llm_next3,
     olap_next4,
-    stock_next3,
     stream_next3,
 )
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
+_INDICATOR_KEYS = ("ema_cross", "roc_momentum")
 ALL_Q = {
     **olap_next4.QUERIES_NEXT,
-    **stock_next3.QUERIES_NEXT,
+    **{k: indicators.QUERIES[k] for k in _INDICATOR_KEYS},
     **llm_next3.QUERIES_NEXT,
     **stream_next3.QUERIES_NEXT,
 }
 ALL_O = {
     **olap_next4.ORACLE_NEXT,
-    **stock_next3.ORACLE_NEXT,
+    **{k: indicators.ORACLE[k] for k in _INDICATOR_KEYS},
     **llm_next3.ORACLE_NEXT,
     **stream_next3.ORACLE_NEXT,
 }
@@ -219,7 +220,7 @@ def test_ema_cross_tracks_float_ema(spark):
     — and signals fire exactly at sign flips."""
     import pandas as pd
 
-    rows = stock_next3.QUERIES_NEXT["ema_cross"](spark, SF_ORACLE).collect()
+    rows = indicators.q_ema_cross(spark, SF_ORACLE).collect()
     by_series: dict[str, list] = {}
     for r in rows:
         by_series.setdefault(r["series_key"], []).append(r)

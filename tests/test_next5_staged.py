@@ -1,5 +1,5 @@
 """r8-built keys staged for the r9 window (olap_next6, llm_next5,
-stock_next4, stream_next5): the SAME value-level DuckDB comparison
+indicators, stream_next5): the SAME value-level DuckDB comparison
 the driver runs, plus each key's semantic pins."""
 
 from __future__ import annotations
@@ -8,24 +8,25 @@ import pytest
 from pyspark.sql import functions as F
 
 from stock_data_project_spark.plans import (
+    indicators,
     llm_next5,
     olap_next6,
-    stock_next4,
     stream_next5,
 )
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
+_INDICATOR_KEYS = ("aroon", "cmf", "keltner")
 ALL_Q = {
     **olap_next6.QUERIES_NEXT,
     **llm_next5.QUERIES_NEXT,
-    **stock_next4.QUERIES_NEXT,
+    **{k: indicators.QUERIES[k] for k in _INDICATOR_KEYS},
     **stream_next5.QUERIES_NEXT,
 }
 ALL_O = {
     **olap_next6.ORACLE_NEXT,
     **llm_next5.ORACLE_NEXT,
-    **stock_next4.ORACLE_NEXT,
+    **{k: indicators.ORACLE[k] for k in _INDICATOR_KEYS},
     **stream_next5.ORACLE_NEXT,
 }
 
@@ -129,7 +130,7 @@ def test_aroon_extremes(spark):
 
     from datetime import datetime, timezone
 
-    n = stock_next4._AROON_N
+    n = indicators._AROON_N
     rows = [
         (i, datetime(2024, 1, 1 + i, tzinfo=timezone.utc), "s", 100.0 - i)
         for i in range(6)

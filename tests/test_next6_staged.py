@@ -1,4 +1,4 @@
-"""Late-r8-built keys staged for the r9 window (stock_next5,
+"""Late-r8-built keys staged for the r9 window (indicators,
 olap_next7, llm_next6): the SAME value-level DuckDB comparison the
 driver runs, plus each key's semantic pins."""
 
@@ -10,22 +10,23 @@ import pytest
 from pyspark.sql import functions as F
 
 from stock_data_project_spark.plans import (
+    indicators,
     llm_next6,
     olap_next7,
-    stock_next5,
     stream_next6,
 )
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
+_INDICATOR_KEYS = ("trix", "adx")
 ALL_Q = {
-    **stock_next5.QUERIES_NEXT,
+    **{k: indicators.QUERIES[k] for k in _INDICATOR_KEYS},
     **olap_next7.QUERIES_NEXT,
     **llm_next6.QUERIES_NEXT,
     **stream_next6.QUERIES_NEXT,
 }
 ALL_O = {
-    **stock_next5.ORACLE_NEXT,
+    **{k: indicators.ORACLE[k] for k in _INDICATOR_KEYS},
     **olap_next7.ORACLE_NEXT,
     **llm_next6.ORACLE_NEXT,
     **stream_next6.ORACLE_NEXT,
@@ -65,7 +66,7 @@ def test_trix_tracks_float_ewm(spark):
     indicator."""
     bars = _bars_pd(spark, SF_ORACLE)
     out = (
-        stock_next5.q_trix(spark, SF_ORACLE)
+        indicators.q_trix(spark, SF_ORACLE)
         .orderBy("series_key", "date")
         .toPandas()
     )
@@ -82,7 +83,7 @@ def test_trix_tracks_float_ewm(spark):
 
 
 def test_adx_bounds_and_dx_identity(spark):
-    out = stock_next5.q_adx(spark, SF_ORACLE).toPandas()
+    out = indicators.q_adx(spark, SF_ORACLE).toPandas()
     for c in ("pdi", "mdi", "dx", "adx"):
         v = out[c].to_numpy(dtype=float)
         assert np.nanmin(v) >= 0.0 and np.nanmax(v) <= 100.0 + 1e-9, c
@@ -118,18 +119,18 @@ def test_adx_trix_flat_series_zero_paths(spark, tmp_path):
     sf = str(tmp_path)
     spark.createDataFrame(pdf).write.parquet(f"{sf}/events.parquet")
 
-    out = stock_next5.q_adx(spark, sf).toPandas()
+    out = indicators.q_adx(spark, sf).toPandas()
     assert len(out) == 14  # 2 series × 7 days
     for c in ("pdi", "mdi", "dx", "adx"):
         assert (out[c] == 0.0).all(), c
-    trix = stock_next5.q_trix(spark, sf).toPandas()
+    trix = indicators.q_trix(spark, sf).toPandas()
     got = trix["trix"].dropna()
     assert (got == 0.0).all()
 
     con = duckdb.connect()
     con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf}/events.parquet/*.parquet')")
     for key, sdf in (("adx", out), ("trix", trix)):
-        odf = con.sql(stock_next5.ORACLE_NEXT[key]).df()
+        odf = con.sql(indicators.ORACLE[key]).df()
         assert len(odf) == len(sdf)
         num = [c for c in odf.columns if c not in ("series_key", "date")]
         s = sdf.sort_values(["series_key", "date"]).reset_index(drop=True)
@@ -148,8 +149,8 @@ def test_decimal_fold_keys_run_with_arrow_disabled(spark):
     old = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        assert stock_next5.q_trix(spark, SF_SMOKE).count() > 0
-        assert stock_next5.q_adx(spark, SF_SMOKE).count() > 0
+        assert indicators.q_trix(spark, SF_SMOKE).count() > 0
+        assert indicators.q_adx(spark, SF_SMOKE).count() > 0
     finally:
         spark.conf.set(key, old)
 

@@ -1,7 +1,6 @@
 """r9-built non-media keys staged for the r10 window
 (stream_next7.stream_dedup_watermark, olap_next8 entity_resolution /
-winsorized_stats, llm_next8 chunk_documents, stock_next6
-cci/force_index/ease_of_movement): driver-identical parity plus each
+winsorized_stats, llm_next8 chunk_documents): driver-identical parity plus each
 operator's semantic pins — for the streaming dedup, the BOUNDED
 state asserted from progress metrics (in-repo only; state metrics
 are partial-layout-dependent and never graded), the watermark-tie
@@ -296,53 +295,6 @@ def test_chunk_documents_parity_and_coverage(spark):
         assert len(grp) == -(-n // 48)
     assert (pdf["n_chunk_tokens"] >= 1).all()
     assert (pdf["n_chunk_tokens"] <= 64).all()
-
-
-# ------------------------------------------------------- stock_next6 keys
-
-
-def test_stock_next6_keys_are_oracled_and_pass_parity(spark):
-    from stock_data_project_spark.plans import stock_next6
-
-    assert set(stock_next6.QUERIES_NEXT) == set(stock_next6.ORACLE_NEXT)
-    for key, fn in stock_next6.QUERIES_NEXT.items():
-        df = fn(spark, SF_ORACLE)
-        assert_gradable_schema(df, key)
-        assert df.count() > 0, key
-        compare(df, duckdb_run(stock_next6.ORACLE_NEXT[key], SF_ORACLE))
-
-
-def test_cci_matches_pandas_reference(spark):
-    """The self-join mean-deviation must equal the textbook rolling
-    CCI (pandas rolling mean + mad-from-current-sma) to rounding."""
-    import numpy as np
-
-    from stock_data_project_spark.plans.stock_next4 import _bars_rn
-    from stock_data_project_spark.plans.stock_next6 import q_cci
-
-    bars = _bars_rn(spark, SF_ORACLE).orderBy("series_key", "rn").toPandas()
-    got = (
-        q_cci(spark, SF_ORACLE)
-        .orderBy("series_key", "date")
-        .toPandas()
-        .set_index(["series_key", "date"])["cci"]
-    )
-    for key, grp in bars.groupby("series_key"):
-        tp = (grp["high"] + grp["low"] + grp["close"]) / 3.0
-        sma = tp.rolling(20, min_periods=1).mean()
-        for t in range(len(grp)):
-            lo = max(0, t - 19)
-            md = float(np.mean(np.abs(tp.iloc[lo : t + 1] - sma.iloc[t])))
-            want = (
-                None
-                if md == 0
-                else (tp.iloc[t] - sma.iloc[t]) / (0.015 * md)
-            )
-            have = got[(key, grp["date"].iloc[t])]
-            if want is None:
-                assert have is None or np.isnan(have)
-            else:
-                assert abs(have - want) < 1e-3, (key, t, have, want)
 
 
 # --------------------------------------------- r12: ER family collapse

@@ -1,112 +1,14 @@
-"""r9-built keys staged for the r11 window (stock_next7
-ultimate_oscillator / vortex / ichimoku / heikin_ashi): driver-identical
-parity plus per-operator semantic pins."""
+"""Keys staged for the r11 window (llm_next9, olap_next9,
+stream_next8, olap_next10): driver-identical parity plus per-operator
+semantic pins. The ultimate_oscillator / vortex / ichimoku /
+heikin_ashi / parabolic_sar pins live in tests/test_indicators.py."""
 
 from __future__ import annotations
 
 import pytest
 
-from stock_data_project_spark.plans import stock_next7
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
-
-
-def test_stock7_keys_are_oracled():
-    assert set(stock_next7.QUERIES_NEXT) == set(stock_next7.ORACLE_NEXT)
-
-
-@pytest.mark.parametrize("key", sorted(stock_next7.QUERIES_NEXT))
-def test_stock7_parity(spark, key):
-    df = stock_next7.QUERIES_NEXT[key](spark, SF_ORACLE)
-    assert_gradable_schema(df, key)
-    assert df.count() > 0
-    compare(df, duckdb_run(stock_next7.ORACLE_NEXT[key], SF_ORACLE))
-
-
-def test_ultimate_oscillator_bounded(spark):
-    """bp/tr ∈ [0, tr] per row ⇒ every ratio ∈ [0,1] ⇒ UO ∈ [0,100]."""
-    import pyspark.sql.functions as F
-
-    df = stock_next7.q_ultimate_oscillator(spark, SF_SMOKE)
-    bad = df.filter((F.col("uo") < 0) | (F.col("uo") > 100)).count()
-    assert bad == 0
-
-
-def test_vortex_nonnegative(spark):
-    import pyspark.sql.functions as F
-
-    df = stock_next7.q_vortex(spark, SF_SMOKE)
-    assert df.filter((F.col("vi_plus") < 0) | (F.col("vi_minus") < 0)).count() == 0
-
-
-def test_ichimoku_displaced_edges_are_null(spark):
-    """senkou A/B are lag(10) → NULL on the first 10 rows per series;
-    chikou is lead(10) → NULL on the last 10."""
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    df = stock_next7.q_ichimoku(spark, SF_SMOKE)
-    w = Window.partitionBy("series_key").orderBy("date")
-    wd = Window.partitionBy("series_key").orderBy(F.desc("date"))
-    r = (
-        df.withColumn("rn", F.row_number().over(w))
-        .withColumn("rrn", F.row_number().over(wd))
-    )
-    assert r.filter((F.col("rn") <= 10) & F.col("senkou_a").isNotNull()).count() == 0
-    assert r.filter((F.col("rn") > 10) & F.col("senkou_a").isNull()).count() == 0
-    assert r.filter((F.col("rrn") <= 10) & F.col("chikou").isNotNull()).count() == 0
-
-
-def test_heikin_ashi_flat_series_collapses(spark):
-    """On a constant-OHLC series every HA value equals the price: the
-    recurrence fixpoint check (also exercises first-row init)."""
-    import datetime as dt
-
-    from stock_data_project_spark.plans.stock_next7 import q_heikin_ashi
-
-    rows = [
-        ("flat", dt.datetime(2024, 1, 1) + dt.timedelta(days=i), float(i), 42.5)
-        for i in range(12)
-    ]
-    ev = spark.createDataFrame(
-        [(k, t, 42.5, i) for i, (k, t, _, v) in enumerate(rows)],
-        "event_type string, ts timestamp, value double, event_id long",
-    )
-    import pyspark.sql.functions as F
-
-    from stock_data_project_spark.operators.series import daily_bars
-    from pyspark.sql import Window
-
-    bars = daily_bars(ev).withColumn(
-        "rn", F.row_number().over(Window.partitionBy("series_key").orderBy("date"))
-    )
-    # drive the fold directly through a monkeypatched _bars_rn
-    import stock_data_project_spark.plans.stock_next7 as m
-
-    orig = m._bars_rn
-    m._bars_rn = lambda s, d: bars
-    try:
-        out = q_heikin_ashi(spark, "ignored").collect()
-    finally:
-        m._bars_rn = orig
-    for r in out:
-        assert r.ha_open == pytest.approx(42.5)
-        assert r.ha_high == pytest.approx(42.5)
-        assert r.ha_low == pytest.approx(42.5)
-        assert r.ha_close == pytest.approx(42.5)
-
-
-def test_heikin_ashi_high_low_envelope(spark):
-    """ha_high ≥ max(ha_open, ha_close) and ha_low ≤ min(...) by
-    construction — the greatest/least layer can't invert."""
-    import pyspark.sql.functions as F
-
-    df = stock_next7.q_heikin_ashi(spark, SF_SMOKE)
-    bad = df.filter(
-        (F.col("ha_high") < F.greatest("ha_open", "ha_close"))
-        | (F.col("ha_low") > F.least("ha_open", "ha_close"))
-    ).count()
-    assert bad == 0
 
 
 # ------------------------------------------------------------- llm_next9
@@ -353,84 +255,6 @@ def test_stream_left_join_null_rows_respect_horizon(spark):
     assert above == 0
 
 
-# -------------------------------------------------------- parabolic_sar
-
-
-def test_parabolic_sar_parity(spark):
-    df = stock_next7.q_parabolic_sar(spark, SF_ORACLE)
-    assert_gradable_schema(df, "parabolic_sar")
-    assert df.count() > 0
-    compare(df, duckdb_run(stock_next7.ORACLE_NEXT["parabolic_sar"], SF_ORACLE))
-
-
-def test_parabolic_sar_exercises_reversals(spark):
-    """Both flip directions must occur on the graded data — a
-    flip-free series would leave the reversal branches untested."""
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    df = stock_next7.q_parabolic_sar(spark, SF_ORACLE)
-    w = Window.partitionBy("series_key").orderBy("date")
-    flips = df.withColumn("pt", F.lag("trend").over(w)).filter(
-        F.col("pt").isNotNull() & (F.col("pt") != F.col("trend"))
-    )
-    dirs = {r.trend for r in flips.select("trend").distinct().collect()}
-    assert dirs == {1, -1}
-
-
-def test_parabolic_sar_flat_series_never_reverses(spark):
-    """Constant bars: trend stays up (close2 >= close1), sar pins to
-    the price, af never bumps — the recurrence fixpoint."""
-    import datetime as dt
-
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    from stock_data_project_spark.operators.series import daily_bars
-
-    ev = spark.createDataFrame(
-        [
-            ("flat", dt.datetime(2024, 1, 1) + dt.timedelta(days=i), 7.25, i)
-            for i in range(10)
-        ],
-        "event_type string, ts timestamp, value double, event_id long",
-    )
-    bars = daily_bars(ev).withColumn(
-        "rn", F.row_number().over(Window.partitionBy("series_key").orderBy("date"))
-    )
-    import stock_data_project_spark.plans.stock_next7 as m
-
-    orig = m._bars_rn
-    m._bars_rn = lambda s, d: bars
-    try:
-        out = m.q_parabolic_sar(spark, "ignored").collect()
-    finally:
-        m._bars_rn = orig
-    assert len(out) == 9
-    for r in out:
-        assert r.trend == 1
-        assert r.psar == pytest.approx(7.25)
-
-
-def test_parabolic_sar_stays_outside_price_range(spark):
-    """Invariant: in an uptrend the SAR sits at/below the bar's low
-    region only after clamping — concretely, sar <= high always and
-    a reversal bar resets sar to the finished trend's extreme, which
-    bounds sar within the series' [min low, max high]."""
-    import pyspark.sql.functions as F
-
-    from stock_data_project_spark.plans.stock_next4 import _bars_rn
-
-    bars = _bars_rn(spark, SF_SMOKE).groupBy("series_key").agg(
-        F.min("low").alias("lo"), F.max("high").alias("hi")
-    )
-    df = stock_next7.q_parabolic_sar(spark, SF_SMOKE).join(bars, "series_key")
-    bad = df.filter(
-        (F.col("psar") < F.col("lo")) | (F.col("psar") > F.col("hi"))
-    ).count()
-    assert bad == 0
-
-
 # ---------------------------------- embedding_outliers / source_mix_report
 
 
@@ -624,30 +448,3 @@ def test_chi2_cells_reconstruct_totals(spark):
     assert agg.tot == n
     assert agg.emin > 0
     assert agg.cmin >= 0
-
-
-def test_parity_sf_dirs_stay_on_exact_pair_path(spark):
-    """ADVICE r11: theil_sen_slope / kendall_tau oracle parity depends
-    on every series in graded/swept data staying at or under
-    operators/pairs.EXACT_MAX rows — past it the plan switches to the
-    sampled-pair estimator the DuckDB oracle does NOT replay. Pin the
-    boundary so a testdata regeneration with a longer calendar fails
-    loudly here instead of as a silent sweep hash-mismatch."""
-    from pyspark.sql import functions as F
-
-    from stock_data_project_spark.operators.pairs import EXACT_MAX
-    from stock_data_project_spark.plans.stock_next4 import _bars_rn
-
-    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01",
-               "/root/testdata/sf0.1"):
-        (mx,) = (
-            _bars_rn(spark, sf)
-            .groupBy("series_key")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n"))
-            .collect()[0]
-        )
-        assert mx <= EXACT_MAX, (
-            f"{sf}: max per-series bars {mx} > EXACT_MAX={EXACT_MAX} — "
-            "the sampled pair path would desync the DuckDB oracle"
-        )

@@ -13,7 +13,7 @@ import re
 
 from pyspark.sql import functions as F  # noqa: F401
 
-from stock_data_project_spark.plans import olap, stock
+from stock_data_project_spark.plans import bars, olap
 from tests.conftest import SF_SMOKE
 
 
@@ -46,7 +46,7 @@ def test_tpch_q6_filters_and_projection_reach_the_scan(spark):
 
 
 def test_fact_build_no_cartesian_and_broadcast_dims(spark):
-    plan = _plan(stock.QUERIES["fact_build"](spark, SF_SMOKE))
+    plan = _plan(bars.QUERIES["fact_build"](spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" not in plan
 

@@ -1,8 +1,7 @@
 #!/usr/bin/env python
-"""Run every contract key (and every staged *_next key) under a
-DRIVER-LIKE SparkSession: nothing from the repo's tuned ``get_spark``
-— Arrow disabled (the default), default shuffle partitions, default
-session timezone.
+"""Run every contract key under a DRIVER-LIKE SparkSession: nothing
+from the repo's tuned ``get_spark`` — Arrow disabled (the default),
+default shuffle partitions, default session timezone.
 
 Why this exists: the only driver-gate ERRs this project has had were
 session-config mismatches invisible to the repo's own suite —
@@ -34,16 +33,8 @@ def main() -> int:
         .getOrCreate()
     )
     import __spark_entry__ as entrymod
-    from stock_data_project_spark.plans import (
-        llm_next,
-        olap_next2,
-        stock_next,
-        stream_next,
-    )
 
-    todo = dict(entrymod.queries())
-    for m in (llm_next, olap_next2, stock_next, stream_next):
-        todo.update(m.QUERIES_NEXT)
+    todo = entrymod.queries()
 
     errs: list[tuple[str, str]] = []
     assert entrymod.entry(spark).count() >= 0
