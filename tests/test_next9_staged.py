@@ -11,6 +11,24 @@ from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
 
+# ------------------------------------------------------------ indicators
+
+from stock_data_project_spark.plans import indicators  # noqa: E402
+
+STOCK7_KEYS = {
+    "ultimate_oscillator",
+    "vortex",
+    "ichimoku",
+    "heikin_ashi",
+    "parabolic_sar",
+}
+
+
+def test_stock7_keys_are_oracled():
+    assert STOCK7_KEYS <= set(indicators.QUERIES)
+    assert STOCK7_KEYS <= set(indicators.ORACLE)
+
+
 # ------------------------------------------------------------- llm_next9
 
 from stock_data_project_spark.plans import llm_next9  # noqa: E402

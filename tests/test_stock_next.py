@@ -1,43 +1,24 @@
-"""Staged r5 stock-indicator keys: the SAME value-level DuckDB
-comparison the driver runs, applied now so the keys are parity-proven
-before they debut in r5's correctness window (plans/stock_next.py
-explains the window timing)."""
+"""The seven indicator keys first staged together (atr, stochastic, obv,
+donchian, zscore_anomaly, pivot_points, vwap) stay registered with an
+oracle in plans/indicators.py. Their parity compare runs in
+tests/test_oracle_parity.py and their invariant pins in
+tests/test_indicators.py."""
 
 from __future__ import annotations
 
-import pytest
+from stock_data_project_spark.plans import indicators
 
-from stock_data_project_spark.plans.stock_next import ORACLE_NEXT, QUERIES_NEXT
-from tests.conftest import SF_ORACLE
-from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
+STAGED_KEYS = {
+    "atr",
+    "stochastic",
+    "obv",
+    "donchian",
+    "zscore_anomaly",
+    "pivot_points",
+    "vwap",
+}
 
 
 def test_every_staged_key_has_an_oracle():
-    assert set(QUERIES_NEXT) == set(ORACLE_NEXT)
-
-
-@pytest.mark.parametrize("key", sorted(QUERIES_NEXT))
-def test_stock_next_parity(spark, key):
-    df = QUERIES_NEXT[key](spark, SF_ORACLE)
-    assert_gradable_schema(df, key)
-    assert df.count() > 0, f"{key}: empty result"
-    compare(df, duckdb_run(ORACLE_NEXT[key], SF_ORACLE))
-
-
-def test_obv_is_exact_integer(spark):
-    """OBV is pure integer arithmetic — assert the output type stays
-    BIGINT (a silent float upcast would reintroduce rounding)."""
-    df = QUERIES_NEXT["obv"](spark, SF_ORACLE)
-    assert dict(df.dtypes)["obv"] == "bigint"
-
-
-def test_stochastic_bounded(spark):
-    """%K is bounded to [0, 100] wherever defined."""
-    from pyspark.sql import functions as F
-
-    df = QUERIES_NEXT["stochastic"](spark, SF_ORACLE)
-    bad = df.filter(
-        F.col("pct_k").isNotNull() & ((F.col("pct_k") < 0) | (F.col("pct_k") > 100))
-    )
-    assert bad.count() == 0
-
+    assert STAGED_KEYS <= set(indicators.QUERIES)
+    assert STAGED_KEYS <= set(indicators.ORACLE)
