@@ -1,5 +1,5 @@
 """Slowly-changing-dimension (type 2) building blocks — ONE shared
-implementation for the batch plan (plans/olap_next3.scd2_dim) and the
+implementation for the batch plan (plans/olap.scd2_dim) and the
 streaming incremental maintainer (streaming/pipeline
 .run_incremental_scd2), per the repo's single-implementation rule
 (the unigram scorer / ADC kernel precedent: two copies of island

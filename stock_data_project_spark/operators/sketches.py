@@ -23,6 +23,15 @@ false positives, no approximate counts in the result.
 
 Tokenization matches ``textops.words`` (lower + whitespace split) so
 results agree with the exact ``word_frequency`` plan.
+
+``histogram_quantiles``: the estimator tail of the mergeable
+equi-width histogram sketch (``HISTOGRAM_BINS`` bins per key). The
+batch ``quantile_rollup`` and ``conversion_lag`` plans and the
+streaming ``stream_quantile`` operator all bin their values into
+per-(key, bin) counts and finish here, so the three run identical
+arithmetic. The estimator is deterministic (floor-binning, cumulative
+counts, linear interpolation at rank p·n), which is why all three
+keys are fully oracled.
 """
 
 from __future__ import annotations
@@ -30,12 +39,66 @@ from __future__ import annotations
 import math
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from stock_data_project_spark.operators.textops import words
 
 _WS = re.compile(r"\s+")
+
+HISTOGRAM_BINS = 512
+HISTOGRAM_PS = (0.5, 0.9, 0.99)
+
+
+def histogram_quantiles(binned: DataFrame, stats: DataFrame) -> DataFrame:
+    """Shared estimator tail for the histogram-sketch quantile keys
+    (batch ``quantile_rollup`` and streaming ``stream_quantile`` run
+    the identical arithmetic — one implementation, per the repo
+    rule). ``binned``: (series_key, bin, n) sketch rows; ``stats``: a
+    1-row (_lo, _hi) domain frame. Everything here touches ≤ a few
+    thousand rows."""
+    spark = binned.sparkSession
+    width = (F.col("_hi") - F.col("_lo")) / F.lit(float(HISTOGRAM_BINS))
+    merged = binned.select(
+        "series_key", F.lit(False).alias("is_total"), "bin", "n"
+    ).unionByName(
+        # the rollup: merge per-type sketches by bin — kilobytes, no
+        # fact rescan; the total marker is a flag, never a sentinel
+        binned.groupBy("bin")
+        .agg(F.sum("n").alias("n"))
+        .select(
+            F.lit(None).cast("string").alias("series_key"),
+            F.lit(True).alias("is_total"),
+            "bin",
+            "n",
+        )
+    )
+    wp = Window.partitionBy("series_key", "is_total")
+    cum = merged.withColumn(
+        "cum",
+        F.sum("n").over(wp.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)),
+    ).withColumn("total", F.sum("n").over(wp))
+    ps = spark.createDataFrame([(float(p),) for p in HISTOGRAM_PS], "p double")
+    # first bin whose cumulative count reaches rank p·total; ≤ 3·types
+    # ·512 candidate rows, so the broadcast nested loop is free
+    sel = (
+        cum.crossJoin(F.broadcast(ps))
+        .filter(F.col("cum") >= F.col("p") * F.col("total"))
+        .groupBy("series_key", "is_total", "p", "total")
+        .agg(F.min_by(F.struct("bin", "n", "cum"), "bin").alias("_s"))
+    )
+    est = F.col("_lo") + width * (
+        F.col("_s.bin")
+        + (F.col("p") * F.col("total") - (F.col("_s.cum") - F.col("_s.n")))
+        / F.col("_s.n")
+    )
+    return sel.crossJoin(F.broadcast(stats)).select(
+        "series_key",
+        "is_total",
+        "p",
+        F.round(est, 6).alias("approx_value"),
+        F.col("total").alias("n_values"),
+    )
 
 
 def _py_tokens(text: str) -> list[str]:

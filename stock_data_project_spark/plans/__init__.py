@@ -4,9 +4,13 @@
   returns, volatility).
 - ``indicators``: technical indicators over daily bars.
 - ``statistics``: series statistics over daily bars and returns.
-- ``llm``, ``olap``, ``sql_api``, ``stream``: the text/vector, TPC-H/
-  OLAP, SQL-API and streaming families (``llm``, ``olap`` and
-  ``stream`` still chain their ``*_nextN`` modules).
+- ``olap``: TPC-H shapes and warehouse SQL (joins, grouping sets,
+  windows, sessions, SCD2, as-of/range joins, sketches, cohort/RFM).
+- ``audits``: data-quality gates and distribution/hypothesis tests.
+- ``graph``: the co-purchase/co-activity graphs and pair mining.
+- ``llm``, ``sql_api``, ``stream``: the text/vector, SQL-API and
+  streaming families (``llm`` and ``stream`` still chain their
+  ``*_nextN`` modules).
 
 Each plan module exposes:
 - ``QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]]``
@@ -28,7 +32,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from stock_data_project_spark.plans import (
+    audits,
     bars,
+    graph,
     indicators,
     llm,
     olap,
@@ -121,7 +127,7 @@ _GRADE_ORDER = [
 # filled entirely by re-grades.
 STAGED_DEBUTS: frozenset[str] = frozenset()
 
-_MODULES = (bars, indicators, statistics, llm, olap, sql_api, stream)
+_MODULES = (bars, indicators, statistics, llm, olap, audits, graph, sql_api, stream)
 
 
 def _reorder(d: dict) -> dict:

@@ -1,16 +1,132 @@
-"""OLAP core plans: the reference's DuckDB-SQL stage generalized.
+"""TPC-H shapes and warehouse SQL: the reference's DuckDB-SQL stage
+generalized.
 
 The reference's schema-build step is fundamentally "joins + group-bys
 + window derivations over fact rows" (fetch_stocks.py:221-241); this
 module carries that OLAP surface on the TPC-H-ish tables so the same
 engine covers classic warehouse queries: multi-way joins, selective
-scans, top-k, pivot, rollup, semi/anti joins, sessionization,
-windowed time aggregation.
+scans, top-k, pivot, rollup and grouping sets, semi/anti joins,
+sessionization, windowed time aggregation, slowly-changing
+dimensions, as-of and range joins, mergeable sketches and cohort/RFM
+customer analytics. Data-quality gates and distribution/hypothesis
+tests live in ``plans/audits.py``; the co-purchase/co-activity graph
+and pair mining in ``plans/graph.py``.
 
 Scale notes per plan are in each docstring; the common rules:
 dimension sides of joins are broadcast, aggregations are expressed so
 map-side partial aggregation applies, filters sit directly on the
-scan so Catalyst pushes them into parquet.
+scan so Catalyst pushes them into parquet, scalar thresholds are tiny
+cross joins (never collected).
+
+TPC-H
+-----
+All 22 TPC-H shapes. The slimmed testdata has no partsupp table and
+no commit/receipt dates, so q2/q9/q11/q16/q20/q21 (like q12/q17) are
+SHAPE adaptations — same plan topology, surrogate predicates.
+
+- ``tpch_q18`` — large-volume customers: big-quantity orders found by
+  ONE lineitem aggregate, then joined back — the HAVING subquery
+  becomes a pre-aggregated semi-side that is tiny by construction
+  (rare orders), so both joins broadcast at any scale. The aggregate
+  core ``big_quantity_orders`` is shared with ``big_orders``.
+
+Grouping shapes
+---------------
+- ``grouping_sets_sales`` — explicit GROUPING SETS with grouping()
+  flags (ROLLUP/CUBE are separate keys; arbitrary set lists are this
+  one);
+- ``revenue_share`` — ratio-to-report: each nation's share of its
+  region's revenue via a window over the aggregate;
+- ``monthly_running_revenue`` — running cumulative over a calendar
+  aggregate per segment (the dashboard "revenue to date" curve).
+
+Warehouse maintenance
+---------------------
+- ``scd2_dim`` — type-2 slowly-changing dimension build: collapse
+  each user's consecutive same-tier events into validity intervals
+  via gaps-and-islands (lag → change flag → running island id), all
+  inside ONE hash partition by user (the two-row_number island idiom
+  would force a second (user, tier) exchange). valid_to chains to
+  the next version's valid_from; the current version is NULL-open.
+- ``scd2_asof`` — the point-in-time join that makes SCD2 useful:
+  facts (purchases) joined to the dimension version valid AT their
+  timestamp. Because SCD2 intervals are contiguous per key by
+  construction, "valid_from <= ts < valid_to" reduces to a backward
+  as-of join on valid_from — operators/asof.py, one union+window
+  pass, no range explosion, no unboundedFollowing frames.
+- ``session_concurrency`` — interval-overlap aggregation: how many
+  30-min-gap sessions overlap each hour. The sweep-line global
+  running sum would need a single-partition prefix; bucketizing
+  instead (each session explodes to its covered hours, count per
+  hour) keeps it one uniform-key shuffle — the same
+  bucket-decomposition as operators/rangejoin.py, with explode
+  factor bounded by session duration.
+
+Sketches
+--------
+``quantile_rollup`` and ``conversion_lag`` sketch their values into
+per-(key, bin) equi-width histograms and finish with the shared
+deterministic estimator ``operators/sketches.histogram_quantiles``
+(the streaming ``stream_quantile`` runs the same one).
+
+- ``conversion_lag`` — order-to-shipment conversion lag percentiles:
+  lag = calendar days from ``o_orderdate`` to each lineitem's
+  ``l_shipdate``, sketched per ``o_orderpriority``, with the
+  grand-total rollup merged from the per-priority sketches by
+  bin-count summation (no fact rescan). Scale shape: the
+  lineitem⋈orders join shuffles both sides on orderkey — at 100 TB
+  the tables are bucketed/co-partitioned on orderkey
+  (sources/writers.write_bucketed) so the join is exchange-free;
+  neither side is broadcastable. After the join the fact collapses
+  map-side to ≤ priorities × 512 sketch rows; the percentile tail
+  touches kilobytes. Fully oracled: the estimator is deterministic
+  arithmetic (floor-binning, cumulative counts, linear
+  interpolation), reproduced verbatim in DuckDB, exactly like
+  quantile_rollup's oracle.
+
+Skew
+----
+- ``skew_salted_revenue`` — the skew REPORT drives the MITIGATION.
+  The probe side's per-key fanout profile (skew_report's
+  TakeOrderedAndProject shape) picks the top-K hottest join keys;
+  hot rows go through operators/skew.salted_join (build rows for
+  those keys replicated salt ways, probe rows scattered), cold rows
+  take the plain join; the union aggregates to revenue per (segment,
+  priority). The oracle is the PLAIN join — salting and the hot/cold
+  split must be invisible in the result, which is exactly the
+  property a driver row should pin. At 100 TB the report is one
+  map-side-combined groupBy + a K-row driver collect
+  (metadata-sized decision), and each hot key's shuffle spreads over
+  ``salt`` tasks instead of one straggler.
+
+Customer analytics
+------------------
+- ``cohort_ltv`` — cohort revenue analysis: customers bucketed by
+  first-order month, revenue tracked by months-since-cohort. Two
+  shuffles (first-order agg on custkey, cohort-cell agg on a few
+  hundred keys); the custkey join reuses the first agg's
+  partitioning.
+- ``order_gap_stats`` — per-customer reorder cadence: days between
+  consecutive orders (lag over (custkey, orderdate, orderkey) — the
+  uniform-key window, millions of partitions, never few), rolled up
+  per market segment with exact avg/median/max. Median is
+  percentile-interpolated identically on both engines; floats
+  rounded 6dp per the parity rule.
+- ``rfm_segmentation`` — recency/frequency/monetary customer scoring:
+  three exact ntile(5) scores over the customer-level RFM frame,
+  grouped to a segment matrix. Every ntile is the DISTRIBUTED exact
+  rank (operators/rank.distributed_ntile — range exchange + offset
+  join), never a single-partition window, so the same plan holds on
+  a 1.5B-row customer dim. Monetary sums aggregate in DECIMAL(18,6)
+  so the segment averages are summation-order-free (the q9 rule).
+- ``pareto_revenue`` — revenue concentration per nation: how many of
+  the top customers cover 80% of nation revenue. The running share
+  is a DECIMAL cumulative sum over a (revenue DESC, custkey) total
+  order, and the 80% test is `cum·5 ≥ total·4` — an EXACT decimal
+  comparison with zero float risk. The nation total comes from a
+  groupBy joined back broadcast (25 rows), never a full-partition
+  window frame (frames ending at unboundedFollowing rescan the
+  partition per row — CLAUDE.md).
 """
 
 from __future__ import annotations
@@ -18,7 +134,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from stock_data_project_spark.catalog import load_table
+from stock_data_project_spark.catalog import load_table, register_views
+from stock_data_project_spark.operators.asof import asof_join
+from stock_data_project_spark.operators.bloom import (
+    bloom_build,
+    bloom_might_contain,
+    bloom_positions_sql,
+)
+from stock_data_project_spark.operators.cdc import snapshot_diff
+from stock_data_project_spark.operators.rangejoin import range_join
+from stock_data_project_spark.operators.rank import distributed_ntile
+from stock_data_project_spark.operators.rounding import exact_avg6_expr, exact_avg6_sql
+from stock_data_project_spark.operators.scd2 import scd2_build
+from stock_data_project_spark.operators.series import daily_bars
+from stock_data_project_spark.operators.sketches import (
+    HISTOGRAM_BINS,
+    HISTOGRAM_PS,
+    histogram_quantiles,
+)
+from stock_data_project_spark.operators.skew import salted_join
+from stock_data_project_spark.operators.textops import words
 
 
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -441,8 +576,6 @@ def q_word_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus term frequencies: lateral explode of document tokens ->
     count -> top-20 (the wordcount archetype, with a deterministic
     tie-break)."""
-    from stock_data_project_spark.operators.textops import words
-
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(words("text")).alias("word"))
@@ -457,8 +590,6 @@ def q_unpivot_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNPIVOT (the inverse of q_pivot_returnflag): melt the OHLC
     columns into (field, value) rows via stack — long-form output
     for charting/ML feature pipelines."""
-    from stock_data_project_spark.operators.series import daily_bars
-
     bars = daily_bars(load_table(spark, sf_dir, "events"))
     return bars.select(
         "series_key",
@@ -500,11 +631,7 @@ def q_cube_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Large-quantity orders (TPC-H Q18 shape): HAVING over a grouped
     fact, then join back for customer attribution. The aggregate core
-    is shared with the canonical tpch_q18 (plans/olap_next4.py)."""
-    # lazy import: olap_next4 is also imported at this module's
-    # bottom for graduation, so a top-level import here would cycle
-    from stock_data_project_spark.plans.olap_next4 import big_quantity_orders
-
+    is shared with the canonical tpch_q18."""
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -550,8 +677,6 @@ def q_ntile_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distributed two-level rank (range exchange + parallel local
     row_number + tiny offset join) — no single-partition window, so
     the same plan holds on a 100 TB fact column. See operators/rank.py."""
-    from stock_data_project_spark.operators.rank import distributed_ntile
-
     cust = load_table(spark, sf_dir, "customer")
     # the ranged frame inside is localCheckpoint-ed (GC-scoped), so no
     # release bookkeeping and no extra output materialization pass
@@ -567,8 +692,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each event picks up the user's most recent order
     (order date <= event date). Orders are pre-aggregated to one row
     per (custkey, date) so the as-of pick is deterministic."""
-    from stock_data_project_spark.operators.asof import asof_join
-
     ev = load_table(spark, sf_dir, "events")
     orders = load_table(spark, sf_dir, "orders")
     ord_daily = (
@@ -664,12 +787,1140 @@ def q_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Key order feeds the driver's 50-key CORRECTNESS window (see
-# plans/__init__.py). Keys with no r1 driver row lead so r2 covers them.
+# ------------------------------------------------------------- TPC-H
+
+
+def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Min-cost supplier per part (Q2 shape): the correlated MIN
+    subquery as a per-part aggregate joined back; lineitem unit price
+    stands in for the absent partsupp supplycost. Small-part filter
+    and EUROPE region decoration keep Q2's selective-dim topology."""
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_size") < 10)
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    euro_supp = (
+        supp.join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
+        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .select("s_suppkey", "s_name", "n_name")
+    )
+    unit = li.select(
+        "l_partkey",
+        "l_suppkey",
+        (F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_price"),
+    )
+    min_unit = unit.groupBy(F.col("l_partkey").alias("m_partkey")).agg(
+        F.min("unit_price").alias("min_unit")
+    )
+    return (
+        unit.join(min_unit, (unit.l_partkey == min_unit.m_partkey)
+                  & (unit.unit_price == min_unit.min_unit))
+        .join(F.broadcast(part), unit.l_partkey == part.p_partkey)
+        .join(F.broadcast(euro_supp), unit.l_suppkey == euro_supp.s_suppkey)
+        .select(
+            "p_partkey",
+            "p_name",
+            "s_name",
+            "n_name",
+            F.round("min_unit", 6).alias("min_unit_price"),
+        )
+        .distinct()
+    )
+
+
+def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """National market share (Q8): NATION_5's share of PROMO-part
+    revenue sold into the AMERICA market, by order year. Conditional
+    sum over one joined fact — one shuffle for the year groupBy."""
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").filter(
+        F.year("o_orderdate").isin(1996, 1997)
+    )
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
+    amer_cust = (
+        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .select("c_custkey")
+    )
+    supp_nat = supp.join(
+        F.broadcast(nation), supp.s_nationkey == nation.n_nationkey
+    ).select("s_suppkey", F.col("n_name").alias("supp_nation"))
+    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    return (
+        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        .join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(amer_cust, orders.o_custkey == amer_cust.c_custkey)
+        .join(F.broadcast(supp_nat), li.l_suppkey == supp_nat.s_suppkey)
+        .groupBy(F.year("o_orderdate").cast("int").alias("o_year"))
+        .agg(
+            F.round(
+                F.sum(F.when(F.col("supp_nation") == "NATION_5", vol).otherwise(0.0))
+                / F.sum(vol),
+                6,
+            ).alias("mkt_share")
+        )
+    )
+
+
+def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-type profit (Q9 shape) by supplier nation × order
+    year for widget parts; 10% of retail price × quantity plays the
+    absent ps_supplycost. One fact shuffle on (nation, year).
+
+    The profit term subtracts two same-magnitude double sums, which
+    put one group exactly on a 2dp rounding boundary at sf0.01 —
+    summation order flipped the last cent between engines. The
+    aggregation therefore runs in DECIMAL(18,6) on BOTH sides: the
+    double→decimal cast is per-value deterministic and decimal
+    addition is exact, so the sum is order-independent and the 2dp
+    round identical by construction."""
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%widget%"))
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    supp_nat = supp.join(
+        F.broadcast(nation), supp.s_nationkey == nation.n_nationkey
+    ).select("s_suppkey", F.col("n_name").alias("nation_name"))
+
+    def dec(c):
+        return c.cast("decimal(18,6)")
+
+    amount = dec(F.col("l_extendedprice")) * (
+        F.lit(1).cast("decimal(18,6)") - dec(F.col("l_discount"))
+    ) - F.lit(0.1).cast("decimal(18,6)") * dec(F.col("p_retailprice")) * dec(
+        F.col("l_quantity")
+    )
+    return (
+        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        .join(F.broadcast(supp_nat), li.l_suppkey == supp_nat.s_suppkey)
+        .join(orders, li.l_orderkey == orders.o_orderkey)
+        .groupBy(
+            F.col("nation_name"),
+            F.year("o_orderdate").cast("int").alias("o_year"),
+        )
+        .agg(F.round(F.sum(amount), 2).cast("double").alias("sum_profit"))
+    )
+
+
+def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Important stock (Q11 shape): per-part revenue from ASIA-region
+    suppliers, kept where value exceeds a scalar fraction of the
+    total — the scalar subquery is a 1-row frame cross-joined in,
+    never collected."""
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    asia_supp = (
+        supp.join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
+        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .select("s_suppkey")
+    )
+    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    # both the per-part value and the scalar threshold are rounded to
+    # the parity grid BEFORE the comparison: the raw sums are
+    # summation-order-dependent across engines, and an unrounded
+    # strict > at the boundary could flip
+    value = (
+        li.join(F.broadcast(asia_supp), li.l_suppkey == asia_supp.s_suppkey)
+        .groupBy("l_partkey")
+        .agg(F.round(F.sum(vol), 2).alias("part_value"))
+    )
+    total = value.agg(F.round(F.sum("part_value") * 0.001, 2).alias("threshold"))
+    return (
+        value.crossJoin(F.broadcast(total))
+        .filter(F.col("part_value") > F.col("threshold"))
+        .select("l_partkey", "part_value")
+    )
+
+
+def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top supplier (Q15): suppliers whose 1996-H1 revenue equals the
+    maximum. Revenue is rounded to 2dp BEFORE the max comparison on
+    both engines, so the equality is exact by the parity rule."""
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-07-01")
+    )
+    supp = load_table(spark, sf_dir, "supplier")
+    rev = (
+        li.groupBy(F.col("l_suppkey"))
+        .agg(
+            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
+                "total_revenue"
+            )
+        )
+    )
+    top = rev.agg(F.max("total_revenue").alias("max_revenue"))
+    return (
+        rev.crossJoin(F.broadcast(top))
+        .filter(F.col("total_revenue") == F.col("max_revenue"))
+        .join(F.broadcast(supp), rev.l_suppkey == supp.s_suppkey)
+        .select("s_suppkey", "s_name", "total_revenue")
+    )
+
+
+def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Part/supplier relationship count (Q16 shape): distinct
+    suppliers per (brand, type, size) bucket from the fact, excluding
+    one brand and the PROMO type — lineitem plays the absent
+    partsupp. Distinct agg on a 3-part group key."""
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(
+        (F.col("p_brand") != "Brand#1")
+        & (F.col("p_type") != "PROMO")
+        & F.col("p_size").isin(1, 4, 7, 10, 13, 16, 19, 22)
+    )
+    return (
+        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        .groupBy("p_brand", "p_type", "p_size")
+        .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
+    )
+
+
+def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Part-promotion candidates (Q20 shape): nested semi-join chain
+    — suppliers who moved more than 50 units of 'small %' parts
+    during 1997, decorated with their nation. Each hop is a semi
+    join, so no fact row ever fans out."""
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("small %"))
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    heavy = (
+        li.filter(
+            (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
+        )
+        .join(F.broadcast(part.select("p_partkey")), li.l_partkey == part.p_partkey, "left_semi")
+        .groupBy("l_suppkey")
+        .agg(F.sum("l_quantity").alias("qty"))
+        .filter(F.col("qty") > 50)
+        .select("l_suppkey")
+    )
+    return (
+        supp.join(heavy, supp.s_suppkey == heavy.l_suppkey, "left_semi")
+        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
+        .select("s_name", "n_name")
+    )
+
+
+def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Suppliers-who-kept-others-waiting (Q21 shape): the double
+    correlated EXISTS/NOT-EXISTS as order-level aggregates — for
+    NATION_3 suppliers, count orders with ≥2 suppliers where this
+    supplier's best line strictly out-prices every other supplier's
+    (commit/receipt dates are absent, so price order plays the
+    lateness predicate). Per-order top-2 via a window ``lead`` over
+    the per-supplier maxima, ordered (price desc, supplier desc):
+    the r4 shape collected ALL supplier structs per order to take the
+    second max — bounded by suppliers-per-order in TPC-H (≤7) but a
+    group-sized materialization at a pathological fan-in key; the
+    window's running state is O(1) per row and the per_os⋈per_o
+    self-join disappears with it (r4 verdict watch-item 1)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
+    per_os = li.groupBy("l_orderkey", "l_suppkey").agg(
+        F.max("l_extendedprice").alias("s_max")
+    )
+    w_rank = Window.partitionBy("l_orderkey").orderBy(
+        F.col("s_max").desc(), F.col("l_suppkey").desc()
+    )
+    w_all = Window.partitionBy("l_orderkey")
+    waiting = (
+        per_os.select(
+            "l_orderkey",
+            "l_suppkey",
+            "s_max",
+            F.row_number().over(w_rank).alias("rn"),
+            F.lead("s_max").over(w_rank).alias("second_max"),
+            F.count(F.lit(1)).over(w_all).alias("n_supp"),
+        )
+        .filter(
+            (F.col("rn") == 1)
+            & (F.col("n_supp") >= 2)
+            & (F.col("s_max") > F.col("second_max"))
+        )
+        .groupBy("l_suppkey")
+        .agg(F.count(F.lit(1)).alias("numwait"))
+    )
+    nat_supp = supp.join(
+        F.broadcast(nation), supp.s_nationkey == nation.n_nationkey
+    ).select("s_suppkey", "s_name")
+    return waiting.join(
+        F.broadcast(nat_supp), waiting.l_suppkey == nat_supp.s_suppkey
+    ).select("s_name", "numwait")
+
+
+_Q18_MIN_QTY = 300
+
+
+def big_quantity_orders(
+    li: DataFrame, min_qty: float, round_dp: int | None = None, alias: str = "sum_qty"
+) -> DataFrame:
+    """The Q18 HAVING core — ONE implementation shared by the
+    canonical ``tpch_q18`` (threshold 300) and the earlier
+    ``big_orders`` key (plans/olap.py, threshold 250, 2dp-rounded
+    quantity), so a quantity-semantics change can never fork the two
+    (r6 review finding)."""
+    agg = F.sum("l_quantity")
+    if round_dp is not None:
+        agg = F.round(agg, round_dp)
+    return (
+        li.groupBy("l_orderkey")
+        .agg(agg.alias(alias))
+        .filter(F.col(alias) > min_qty)
+    )
+
+
+def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q18 (large-volume customer): orders whose total quantity
+    exceeds 300, with customer identity and order revenue. The
+    aggregate core is shared with big_orders (its Q18-shape
+    predecessor at threshold 250)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    big = big_quantity_orders(li, _Q18_MIN_QTY)
+    # big is the rare-order set (46 rows at sf0.01, ~0.3% of orders at
+    # any SF) — broadcast it so the orders scan never shuffles
+    return (
+        orders.join(F.broadcast(big), orders.o_orderkey == big.l_orderkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .select(
+            "c_name",
+            "c_custkey",
+            "o_orderkey",
+            "o_orderdate",
+            "o_totalprice",
+            F.col("sum_qty").cast("double").alias("sum_qty"),
+        )
+    )
+
+
+# --------------------------------------------------- grouping shapes
+
+
+def q_grouping_sets_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Revenue at three explicit granularities in one pass:
+    (nation, year), (nation), and grand total. grouping() flags
+    disambiguate NULL-as-rolled-up from a genuinely NULL key (the
+    reason GROUPING SETS output is machine-consumable where
+    coalesce('ALL') strings are not). One shuffle: Spark expands the
+    sets map-side and aggregates once."""
+    register_views(spark, sf_dir)
+    return spark.sql(
+        """
+        SELECT n_name,
+               order_year,
+               CAST(grouping(n_name) AS INT) AS g_nation,
+               CAST(grouping(order_year) AS INT) AS g_year,
+               round(sum(o_totalprice), 2) AS revenue,
+               count(*) AS n_orders
+        FROM (
+            SELECT n_name, CAST(year(o_orderdate) AS INT) AS order_year,
+                   o_totalprice
+            FROM orders
+            JOIN customer ON o_custkey = c_custkey
+            JOIN nation ON c_nationkey = n_nationkey
+        )
+        GROUP BY GROUPING SETS ((n_name, order_year), (n_name), ())
+        """
+    )
+
+
+def q_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each nation's share of its region's order revenue. The share
+    divides ALREADY-ROUNDED 2dp revenues (double summation order
+    differs between engines; the rounded aggregate is the stable
+    quantity), then rounds once more at 6dp. Dimension chain
+    broadcasts onto orders; the window runs over the ~25-row
+    aggregate."""
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
+    dims = (
+        customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
+        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .select("c_custkey", "n_name", "r_name")
+    )
+    per_nation = (
+        orders.join(F.broadcast(dims), orders.o_custkey == dims.c_custkey)
+        .groupBy("r_name", "n_name")
+        .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"))
+    )
+    w = Window.partitionBy("r_name")
+    return per_nation.select(
+        "r_name",
+        "n_name",
+        "revenue",
+        F.round(F.col("revenue") / F.sum("revenue").over(w), 6).alias("share"),
+    )
+
+
+def q_monthly_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-segment monthly revenue + running cumulative. The running
+    sum adds the rounded monthly aggregates in calendar order —
+    order-deterministic on both engines, so no further masking is
+    needed beyond the monthly 2dp round."""
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    monthly = (
+        orders.join(
+            F.broadcast(customer.select("c_custkey", "c_mktsegment")),
+            orders.o_custkey == F.col("c_custkey"),
+        )
+        .groupBy(
+            "c_mktsegment", F.date_trunc("month", "o_orderdate").alias("month")
+        )
+        .agg(
+            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+            F.count(F.lit(1)).alias("n_orders"),
+        )
+    )
+    w = (
+        Window.partitionBy("c_mktsegment")
+        .orderBy("month")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return monthly.withColumn("cum_revenue", F.round(F.sum("revenue").over(w), 2))
+
+
+def q_range_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch range join (operators/rangejoin.py): clicks attributed
+    to same-user views ≤30 min prior — the batch twin of the graded
+    ``stream_interval_join`` (identical semantics, so the same oracle
+    shape), executed as a bucketized HASH join + exact refine instead
+    of a nested loop: the (user, 30-min-bucket) key shuffles each
+    side once, no cartesian anywhere in the plan."""
+    ev = load_table(spark, sf_dir, "events")
+    views = ev.filter(F.col("event_type") == "view").select(
+        F.col("event_id").alias("view_id"),
+        F.col("user_id").alias("view_user"),
+        F.col("ts").alias("view_ts"),
+        F.col("ts").alias("win_start"),
+        (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("win_end"),
+    )
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"),
+        F.col("user_id").alias("user_id"),
+        F.col("ts").alias("click_ts"),
+    )
+    return range_join(
+        clicks,
+        views,
+        point_ts="click_ts",
+        start_col="win_start",
+        end_col="win_end",
+        bucket_width_s=1800,
+        extra_keys=[("user_id", "view_user")],
+    ).select("view_id", "click_id", "user_id", "view_ts", "click_ts")
+
+
+def q_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-structured access through Spark 4's VARIANT type: parse
+    the JSON payload ONCE into a variant, then typed-path extraction
+    (``try_variant_get`` — malformed rows degrade to NULL, never an
+    ANSI error). vs ``props_extract``'s get_json_object: variant
+    parses once per row instead of once per path, and the binary
+    encoding is the shredding-ready columnar form — the modern
+    semi-structured story at scale."""
+    ev = load_table(spark, sf_dir, "events")
+    v = F.try_parse_json("props")
+    k = F.try_variant_get(v, "$.k", "int")
+    return (
+        ev.select("event_type", k.alias("k"), v.isNull().alias("bad"))
+        .groupBy("event_type")
+        .agg(
+            F.round(F.avg("k"), 6).alias("avg_k"),
+            F.min("k").alias("min_k"),
+            F.max("k").alias("max_k"),
+            F.sum(F.col("bad").cast("bigint")).alias("n_malformed"),
+            F.count(F.lit(1)).alias("n"),
+        )
+    )
+
+
+def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mergeable-sketch rollup: per-type HLL sketches of the user
+    population, re-aggregated to the grand total by sketch UNION —
+    no rescan of the fact table. At 100 TB this is THE distinct-count
+    pattern: materialize sketches at the finest grain once, answer
+    every coarser rollup by merging kilobyte sketches (exact distinct
+    cannot re-aggregate: distinct-per-type does not sum to global
+    distinct). Rows-only (estimates have no DuckDB twin); accuracy
+    (±5%) and union-vs-direct consistency are pinned in
+    tests/test_olap.py."""
+    ev = load_table(spark, sf_dir, "events")
+    per_type = ev.groupBy(F.col("event_type").alias("series_key")).agg(
+        F.hll_sketch_agg("user_id").alias("_sk"),
+        F.count(F.lit(1)).alias("n_events"),
+    )
+    typed = per_type.select(
+        "series_key",
+        F.lit(False).alias("is_total"),
+        F.hll_sketch_estimate("_sk").alias("approx_users"),
+        "n_events",
+    )
+    # the grand-total marker is a dedicated flag, not a sentinel key
+    # value — an event_type literally named "ALL" must stay
+    # distinguishable from the rollup row
+    total = per_type.agg(
+        F.hll_sketch_estimate(F.hll_union_agg("_sk")).alias("approx_users"),
+        F.sum("n_events").alias("n_events"),
+    ).select(
+        F.lit(None).cast("string").alias("series_key"),
+        F.lit(True).alias("is_total"),
+        "approx_users",
+        "n_events",
+    )
+    return typed.unionByName(total)
+
+
+# --------------------------------------------- warehouse maintenance
+
+_GAP_S = 1800
+
+
+def _scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared implementation: operators/scd2.scd2_build (the same
+    runs+merge decomposition the streaming incremental maintainer
+    replays — one island implementation, per the repo rule)."""
+    return scd2_build(load_table(spark, sf_dir, "events"))
+
+
+def q_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _scd2(spark, sf_dir)
+
+
+def q_scd2_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Point-in-time lookup: each purchase fact joined to the tier
+    version valid at its timestamp (see module doc for why this is an
+    as-of join, not a range join)."""
+    # Drop zero-width versions (two same-ts events in different tiers
+    # make a version with valid_from == valid_to). They share valid_from
+    # with their successor, breaking asof_join's (key, time) uniqueness
+    # contract — the carried version would be tie-order-dependent — and
+    # the interval semantics (ts < valid_to) can never select them.
+    dim = (
+        _scd2(spark, sf_dir)
+        .filter(F.col("valid_to").isNull() | (F.col("valid_to") > F.col("valid_from")))
+        .select("user_id", "valid_from", "tier", "version")
+    )
+    facts = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_type") == "purchase")
+        .select("event_id", "user_id", "ts", "value")
+    )
+    joined = asof_join(
+        dim,
+        facts,
+        left_key="user_id",
+        right_key="user_id",
+        left_time="valid_from",
+        right_time="ts",
+        value_cols=["tier", "version"],
+    )
+    return joined.select(
+        "event_id",
+        "user_id",
+        "ts",
+        "value",
+        F.col("asof_valid_from").alias("valid_from"),
+        "tier",
+        "version",
+    )
+
+
+def q_session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sessions overlapping each hour: sessionize (the graded 30-min
+    gap convention), explode each session onto its covered hour
+    buckets, count sessions + distinct users per hour."""
+    ev = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    us = F.unix_micros(F.col("ts"))
+    gap = F.when(us - F.lag(us).over(w) > _GAP_S * 1_000_000, 1).otherwise(0)
+    sess = (
+        ev.withColumn("new_session", gap)
+        .withColumn(
+            "session_seq",
+            F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+        )
+        .groupBy("user_id", "session_seq")
+        .agg(F.min("ts").alias("s_start"), F.max("ts").alias("s_end"))
+    )
+    hour = F.explode(
+        F.sequence(
+            F.date_trunc("hour", "s_start"),
+            F.date_trunc("hour", "s_end"),
+            F.expr("interval 1 hour"),
+        )
+    ).alias("hour_start")
+    return (
+        sess.select("user_id", hour)
+        .groupBy("hour_start")
+        .agg(
+            F.count(F.lit(1)).alias("n_sessions"),
+            F.count_distinct("user_id").alias("n_users"),
+        )
+    )
+
+
+def q_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CDC snapshot diff, graded: "yesterday's" daily-bars rollup
+    (events with event_id % 50 != 0 — a 2% late-arriving-data
+    simulation) diffed against today's full rollup via
+    operators/cdc.snapshot_diff. Days that received late events
+    surface as updates; days whose every event was late surface as
+    inserts; deletes are structurally impossible here (the old event
+    set is a subset) and the oracle proves that by construction.
+    The oracle compares value columns DIRECTLY (no hash), so a
+     2^-64 row-hash collision on the Spark side would fail parity —
+    the check doubles as the collision audit."""
+    ev = load_table(spark, sf_dir, "events")
+    old = daily_bars(ev.filter(F.col("event_id") % 50 != 0))
+    new = daily_bars(ev)
+    return snapshot_diff(old, new, ["series_key", "date"])
+
+
+def q_salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The hot-key salting machinery graded on result invariance:
+    orders ⋈ customer via operators/skew.salted_join (8-way key
+    split — build side replicated, probe side hash-salted), rolled up
+    to revenue per (segment, priority). The oracle is the PLAIN join:
+    salting must be invisible in the result, which is exactly the
+    property worth a driver row (at 100 TB the salt spreads one hot
+    customer across 8 tasks instead of one straggler)."""
+    orders = load_table(spark, sf_dir, "orders").withColumnRenamed(
+        "o_custkey", "custkey"
+    )
+    cust = load_table(spark, sf_dir, "customer").withColumnRenamed(
+        "c_custkey", "custkey"
+    )
+    j = salted_join(orders, cust.select("custkey", "c_mktsegment"), "custkey")
+    return j.groupBy("c_mktsegment", "o_orderpriority").agg(
+        F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+        F.count(F.lit(1)).alias("n_orders"),
+    )
+
+
+# ---------------------------------------------------------- sketches
+
+
+def q_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mergeable-QUANTILE rollup — the percentile twin of hll_rollup:
+    per-type equi-width histogram sketches of ``value``, re-aggregated
+    to the grand total by vector-summing bin counts, never rescanning
+    the fact table. At 100 TB this is the re-aggregatable-percentile
+    pattern: materialize kilobyte histograms at the finest grain once,
+    answer every coarser rollup by merging them (exact percentiles
+    cannot re-aggregate: a per-type p99 says nothing about the global
+    p99). Unlike percentile_approx's opaque internal sketch, the
+    histogram estimator is DETERMINISTIC arithmetic — floor-binning,
+    cumulative counts, linear interpolation at rank p·n — so this key
+    is fully oracled (DuckDB runs the identical estimator), with the
+    accuracy-vs-exact bound (≤ one bin width) pinned in
+    tests/test_olap.py.
+
+    Plan: one pruned (event_type, value) fact scan partial-aggregated
+    map-side to ≤ types × 512 rows; the domain probe (global min/max)
+    is a second single-column scan folded in as a broadcast 1-row
+    aggregate (the scalar-subquery pattern) — at 100 TB the domain
+    comes from table stats instead. Everything after the groupBy
+    touches ≤ a few thousand rows."""
+    ev = (
+        load_table(spark, sf_dir, "events")
+        .select("event_type", "value")
+        .filter(F.col("value").isNotNull())
+    )
+    stats = ev.agg(F.min("value").alias("_lo"), F.max("value").alias("_hi"))
+    width = (F.col("_hi") - F.col("_lo")) / F.lit(float(HISTOGRAM_BINS))
+    # degenerate-domain guard (hi == lo → all values equal): 0/0 is
+    # NaN and CAST(NaN AS INT) raises under ANSI mode — degrade to a
+    # single bin instead, mirrored in the oracle (r6 review finding)
+    bin_of = F.when(
+        F.col("_hi") > F.col("_lo"),
+        F.least(
+            F.floor((F.col("value") - F.col("_lo")) / width).cast("int"),
+            F.lit(HISTOGRAM_BINS - 1),
+        ),
+    ).otherwise(F.lit(0))
+    binned = (
+        ev.crossJoin(F.broadcast(stats))
+        .select(F.col("event_type").alias("series_key"), bin_of.alias("bin"))
+        .groupBy("series_key", "bin")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    return histogram_quantiles(binned, stats)
+
+
+def q_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderdate", "o_orderpriority"
+    )
+    lag = (
+        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
+        .select(
+            F.col("o_orderpriority").alias("series_key"),
+            F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
+            .cast("double")
+            .alias("value"),
+        )
+        .filter(F.col("value").isNotNull())
+    )
+    # Lag is INTEGER days: pre-aggregate exact (key, value) counts —
+    # priorities × distinct lag-days rows, a few thousand — so the
+    # expensive join+scan runs ONCE and both the domain probe and the
+    # binning read the tiny table. Count-weighted binning is exactly
+    # count-preserving, so the result (and the oracle) is unchanged.
+    # localCheckpoint cuts the plan so the stats branch cannot
+    # re-execute the join subplan (the first cut re-ran the 18M-row
+    # join for the domain probe: 24.4s at the 30× smoke).
+    counts = (
+        lag.groupBy("series_key", "value")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .localCheckpoint(eager=True)
+    )
+    stats = counts.agg(F.min("value").alias("_lo"), F.max("value").alias("_hi"))
+    width = (F.col("_hi") - F.col("_lo")) / F.lit(float(HISTOGRAM_BINS))
+    # same degenerate-domain guard as quantile_rollup (hi == lo →
+    # single bin, mirrored in the oracle)
+    bin_of = F.when(
+        F.col("_hi") > F.col("_lo"),
+        F.least(
+            F.floor((F.col("value") - F.col("_lo")) / width).cast("int"),
+            F.lit(HISTOGRAM_BINS - 1),
+        ),
+    ).otherwise(F.lit(0))
+    binned = (
+        counts.crossJoin(F.broadcast(stats))
+        .select("series_key", bin_of.alias("bin"), "_n")
+        .groupBy("series_key", "bin")
+        .agg(F.sum("_n").alias("n"))
+    )
+    return histogram_quantiles(binned, stats)
+
+
+# ----------------------------------------------- joins, funnels, skew
+
+
+def q_funnel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Last-touch funnel attribution: each purchase is attributed to
+    the same user's most recent click at-or-before it, IF that click
+    is within the 7-day lookback; conversions and revenue roll up by
+    attribution day, with a NULL-day row collecting the unattributed
+    remainder (no click, or the last click is stale).
+
+    Plan shape: the scalable union-and-window as-of join
+    (operators/asof.py — one user-key shuffle, no per-group pandas),
+    then a day rollup. Clicks are pre-aggregated per (user, ts) so
+    the as-of pick is deterministic; NULL users/timestamps are
+    filtered identically on both engines (NULL never equi-joins —
+    the eqNullSafe parity class)."""
+    ev = load_table(spark, sf_dir, "events")
+    base = ev.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
+    clicks = (
+        base.filter(F.col("event_type") == "click")
+        .groupBy("user_id", F.col("ts").alias("cts"))
+        .agg(F.max("event_id").alias("click_id"))
+        .select(F.col("user_id").alias("cuser"), "cts", "click_id")
+    )
+    purchases = base.filter(F.col("event_type") == "purchase").select(
+        "user_id", "ts", "value"
+    )
+    joined = asof_join(
+        left=clicks,
+        right=purchases,
+        left_key="cuser",
+        right_key="user_id",
+        left_time="cts",
+        right_time="ts",
+        value_cols=["click_id"],
+    )
+    attributed = F.col("asof_cts").isNotNull() & (
+        F.col("asof_cts") >= F.col("ts") - F.expr("INTERVAL 7 DAYS")
+    )
+    return (
+        joined.select(
+            F.when(attributed, F.date_trunc("day", F.col("asof_cts"))).alias(
+                "attr_day"
+            ),
+            "value",
+        )
+        .groupBy("attr_day")
+        .agg(
+            F.count(F.lit(1)).alias("n_conversions"),
+            F.round(F.sum("value"), 6).alias("attributed_value"),
+        )
+    )
+
+
+_BLOOM_BITS = 1 << 17
+_BLOOM_K = 5
+_BLOOM_PRED_SQL = "o_orderpriority = '1-URGENT' AND o_orderstatus = 'F'"
+
+
+def q_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bloom-filter join pruning, DataFrame-native (operators/
+    bloom.py — this build exposes no bloom_filter_agg/might_contain,
+    which is why SURVEY carried the capability as jar-blocked): the
+    selective orders subset collapses to a kilobyte bitmap via
+    explode+bit_or, ships as a broadcast literal, and pre-filters
+    lineitem with pure codegen bit tests BEFORE the real join's
+    exchange — the join then moves only true matches + false
+    positives. Output is the effectiveness ledger: probe rows, rows
+    passing the bloom, and true matches (FP count = pass − match).
+
+    Fully oracled because the double-hash positions are exact BIGINT
+    arithmetic (Knuth mixers, bloom_positions_sql emits the identical
+    expressions) — DuckDB verifies membership via the equivalent
+    position-set formulation instead of a bitmap."""
+    orders = load_table(spark, sf_dir, "orders")
+    build_keys = (
+        orders.filter(
+            (F.col("o_orderpriority") == "1-URGENT")
+            & (F.col("o_orderstatus") == "F")
+        )
+        .select("o_orderkey")
+        .distinct()
+    )
+    # sf_dir names an immutable parquet snapshot, so it identifies the
+    # build data: steady-state invocations skip the build job entirely
+    bitmap = bloom_build(
+        build_keys,
+        "o_orderkey",
+        _BLOOM_BITS,
+        _BLOOM_K,
+        cache_key=("bloom_join_prune", sf_dir),
+    )
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
+    marked = li.join(
+        F.broadcast(build_keys.withColumn("_m", F.lit(True))),
+        li["l_orderkey"] == build_keys["o_orderkey"],
+        "left",
+    )
+    passes = bloom_might_contain(
+        F.col("l_orderkey"), bitmap, _BLOOM_BITS, _BLOOM_K
+    )
+    return marked.agg(
+        F.count(F.lit(1)).alias("n_probe"),
+        F.sum(F.when(passes, 1).otherwise(0)).alias("n_bloom_pass"),
+        F.sum(F.when(F.col("_m"), 1).otherwise(0)).alias("n_true_match"),
+    )
+
+
+_HOT_K = 12
+_SALT = 8
+
+
+def q_skew_salted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders").withColumnRenamed(
+        "o_custkey", "custkey"
+    )
+    cust = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("custkey"), "c_mktsegment"
+    )
+    # the report: top-K heaviest probe keys (fanout desc, key asc —
+    # a total order, so the decision is deterministic), collected to
+    # the driver as the K-row mitigation list
+    hot = (
+        orders.groupBy("custkey")
+        .agg(F.count(F.lit(1)).alias("fanout"))
+        .orderBy(F.desc("fanout"), F.asc("custkey"))
+        .limit(_HOT_K)
+    )
+    hot_keys = [r["custkey"] for r in hot.collect()]
+    is_hot = F.col("custkey").isin(hot_keys)
+    j_hot = salted_join(
+        orders.filter(is_hot),
+        cust.filter(is_hot),
+        "custkey",
+        salt=_SALT,
+    )
+    j_cold = orders.filter(~is_hot).join(cust, "custkey")
+    cols = ["c_mktsegment", "o_orderpriority", "o_totalprice"]
+    return (
+        j_hot.select(*cols)
+        .unionByName(j_cold.select(*cols))
+        .groupBy("c_mktsegment", "o_orderpriority")
+        .agg(
+            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+            F.count(F.lit(1)).alias("n_orders"),
+        )
+    )
+
+
+# ------------------------------------------------ customer analytics
+
+
+def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cohort lifetime-value matrix: first-order-month cohorts ×
+    months-since-cohort, with active customers, orders, and revenue
+    per cell."""
+    orders = load_table(spark, sf_dir, "orders")
+    first = orders.groupBy("o_custkey").agg(
+        F.date_trunc("month", F.min("o_orderdate")).alias("cohort_month")
+    )
+    j = orders.join(first, "o_custkey")
+    month_offset = (
+        F.months_between(
+            F.date_trunc("month", F.col("o_orderdate")), F.col("cohort_month")
+        )
+        .cast("int")
+        .alias("month_offset")
+    )
+    return j.groupBy("cohort_month", month_offset).agg(
+        F.count_distinct("o_custkey").alias("n_customers"),
+        F.count(F.lit(1)).alias("n_orders"),
+        F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+    )
+
+
+def q_order_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
+    )
+    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    gaps = (
+        orders.select(
+            "o_custkey",
+            F.datediff(
+                F.col("o_orderdate"), F.lag("o_orderdate").over(w)
+            ).alias("gap_days"),
+        )
+        .filter(F.col("gap_days").isNotNull())
+    )
+    return (
+        gaps.join(F.broadcast(cust), "o_custkey")
+        .groupBy("c_mktsegment")
+        .agg(
+            F.count(F.lit(1)).alias("n_gaps"),
+            F.round(F.avg("gap_days"), 6).alias("avg_gap"),
+            F.round(F.percentile(F.col("gap_days").cast("double"), F.lit(0.5)), 6).alias(
+                "median_gap"
+            ),
+            F.max("gap_days").alias("max_gap"),
+        )
+    )
+
+
+def q_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily active users + new users + cumulative distinct reach —
+    the growth-analytics triple. Exact running distinct WITHOUT
+    re-scanning history: each user's FIRST-seen day (one uniform
+    groupBy) turns the cumulative distinct count into a running sum
+    of per-day first-seen counts — the incremental formulation that
+    holds at 100 TB (the naive per-day COUNT(DISTINCT) over an
+    expanding window rescans the fact). The running-sum window runs
+    over the post-agg ~calendar-sized table (metadata-sized single
+    partition, like histogram_quantiles' estimator tail)."""
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("user_id").isNotNull()
+    )
+    day = F.date_trunc("day", F.col("ts")).alias("day")
+    active = (
+        ev.select(day, "user_id")
+        .distinct()
+        .groupBy("day")
+        .agg(F.count(F.lit(1)).alias("active_users"))
+    )
+    new_users = (
+        ev.groupBy("user_id")
+        .agg(F.min(F.date_trunc("day", F.col("ts"))).alias("day"))
+        .groupBy("day")
+        .agg(F.count(F.lit(1)).alias("new_users"))
+    )
+    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
+    return (
+        active.join(new_users, "day", "left")
+        .withColumn("new_users", F.coalesce("new_users", F.lit(0)))
+        .withColumn("cum_users", F.sum("new_users").over(w))
+    )
+
+
+def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    ref = orders.agg(F.max("o_orderdate").alias("_ref"))
+    rfm = (
+        orders.groupBy(F.col("o_custkey").alias("custkey"))
+        .agg(
+            F.max("o_orderdate").alias("_last"),
+            F.count(F.lit(1)).alias("frequency"),
+            F.round(F.sum("o_totalprice"), 2)
+            .cast("decimal(18,6)")
+            .alias("_monetary_d"),
+        )
+        .crossJoin(F.broadcast(ref))
+        .withColumn("recency_days", F.datediff("_ref", "_last").cast("int"))
+        .drop("_ref", "_last")
+        # four consumers (three ntile slices + the scored join) — one
+        # materialization, not four recomputes of the orders groupBy;
+        # eager localCheckpoint over persist so the blocks release
+        # with GC (no unpersist bookkeeping) and downstream joins
+        # stay AQE-replannable (the knn_graph measurement)
+        .localCheckpoint(eager=True)
+    )
+    # one count over the checkpointed blocks sizes all three range
+    # exchanges (each slice has exactly |rfm| rows)
+    n_cust = rfm.count()
+    # three INDEPENDENT ntiles joined back on custkey — CHAINING the
+    # calls wraps each plan around the previous one ~4× per call
+    # (the dedup_clusters plan-growth class: 84 range exchanges in
+    # the chained physical plan vs ~6 here, measured by
+    # tools/plan_audit.py); independent scores also run in parallel
+
+    def score(metric_col, order_cols, out_col):
+        return distributed_ntile(
+            rfm.select("custkey", metric_col),
+            5,
+            order_cols,
+            out_col=out_col,
+            n_rows=n_cust,
+        ).select("custkey", out_col)
+
+    r = score("recency_days", [F.asc("recency_days"), F.asc("custkey")], "r_score")
+    f_ = score("frequency", [F.desc("frequency"), F.asc("custkey")], "f_score")
+    m_ = score("_monetary_d", [F.desc("_monetary_d"), F.asc("custkey")], "m_score")
+    scored = rfm.join(r, "custkey").join(f_, "custkey").join(m_, "custkey")
+    # avg of a 6dp decimal sum over a count: exact-integer HALF_UP
+    # (operators/rounding — the stream_sliding_avg tie class; a
+    # power-of-two segment size puts round(sum/n, 6) exactly on the
+    # 5e-7 tie where the engines disagree). Bounds: segment revenue
+    # ≤ ~2e10 → 2·units ≤ 4e16, well inside BIGINT.
+    out = (
+        scored.groupBy("r_score", "f_score", "m_score")
+        .agg(
+            F.count(F.lit(1)).alias("n_customers"),
+            F.sum("_monetary_d").alias("_sum_d"),
+        )
+        .withColumn("_units", (F.col("_sum_d") * 1000000).cast("long"))
+        .select(
+            "r_score",
+            "f_score",
+            "m_score",
+            "n_customers",
+            exact_avg6_expr("_units", "n_customers").alias("avg_monetary"),
+        )
+    )
+    # every intermediate is a GC-scoped localCheckpoint now — nothing
+    # to release, and the ≤125-row rollup needs no materialization
+    return out
+
+
+_RFM_SQL = """
+    WITH rfm AS (
+        SELECT o_custkey AS custkey,
+               CAST(date_diff('day', max(o_orderdate),
+                              (SELECT max(o_orderdate) FROM orders)) AS INT)
+                   AS recency_days,
+               count(*) AS frequency,
+               CAST(round(sum(o_totalprice), 2) AS DECIMAL(18,6)) AS monetary_d
+        FROM orders GROUP BY 1
+    ), scored AS (
+        SELECT *,
+               CAST(ntile(5) OVER (ORDER BY recency_days ASC, custkey ASC)
+                    AS INT) AS r_score,
+               CAST(ntile(5) OVER (ORDER BY frequency DESC, custkey ASC)
+                    AS INT) AS f_score,
+               CAST(ntile(5) OVER (ORDER BY monetary_d DESC, custkey ASC)
+                    AS INT) AS m_score
+        FROM rfm
+    )
+    SELECT r_score, f_score, m_score,
+           count(*) AS n_customers,
+           {avg_monetary} AS avg_monetary
+    FROM scored GROUP BY 1, 2, 3
+""".format(
+    avg_monetary=exact_avg6_sql(
+        "CAST(sum(monetary_d) * 1000000 AS BIGINT)", "count(*)"
+    )
+)
+
+
+def q_pareto_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("custkey"), "c_nationkey"
+    )
+    nation = load_table(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").alias("c_nationkey"), "n_name"
+    )
+    # rev feeds the nation-total rollup AND the ranking window — one
+    # eager materialization instead of re-running the orders groupBy +
+    # joins per consumer (r13 before-plan: 12 scans, the whole triple
+    # duplicated 4×); the window's n_name shuffle re-spreads
+    # parallelism right after the checkpoint
+    rev = (
+        orders.groupBy(F.col("o_custkey").alias("custkey"))
+        .agg(F.round(F.sum("o_totalprice"), 2).cast("decimal(18,6)").alias("rev_d"))
+        .join(cust, "custkey")
+        .join(F.broadcast(nation), "c_nationkey")
+        .localCheckpoint(eager=True)
+    )
+    tot = rev.groupBy("n_name").agg(F.sum("rev_d").alias("tot_d"))
+    w = (
+        Window.partitionBy("n_name")
+        .orderBy(F.desc("rev_d"), F.asc("custkey"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    ranked = (
+        rev.withColumn(
+            "rn",
+            F.row_number()
+            .over(Window.partitionBy("n_name").orderBy(F.desc("rev_d"), F.asc("custkey")))
+            .cast("int"),
+        )
+        .withColumn("cum_d", F.sum("rev_d").over(w))
+        .join(F.broadcast(tot), "n_name")
+    )
+    return ranked.groupBy("n_name").agg(
+        F.max("rn").alias("n_customers"),
+        # exact decimal comparison: cum/total >= 0.8  <=>  cum*5 >= total*4
+        F.min(F.when(F.col("cum_d") * 5 >= F.col("tot_d") * 4, F.col("rn"))).alias(
+            "n_top_customers"
+        ),
+        F.round(F.max("tot_d").cast("double"), 2).alias("nation_revenue"),
+    )
+
+
+_PARETO_SQL = """
+    WITH rev AS (
+        SELECT n_name, o.custkey,
+               CAST(round(sum(o.rev), 2) AS DECIMAL(18,6)) AS rev_d
+        FROM (SELECT o_custkey AS custkey, sum(o_totalprice) AS rev
+              FROM orders GROUP BY 1) o
+        JOIN customer ON c_custkey = o.custkey
+        JOIN nation ON n_nationkey = c_nationkey
+        GROUP BY 1, 2
+    ), ranked AS (
+        SELECT n_name, custkey, rev_d,
+               CAST(row_number() OVER w AS INT) AS rn,
+               sum(rev_d) OVER (PARTITION BY n_name
+                                ORDER BY rev_d DESC, custkey ASC
+                                ROWS BETWEEN UNBOUNDED PRECEDING
+                                         AND CURRENT ROW) AS cum_d,
+               sum(rev_d) OVER (PARTITION BY n_name) AS tot_d
+        FROM rev
+        WINDOW w AS (PARTITION BY n_name ORDER BY rev_d DESC, custkey ASC)
+    )
+    SELECT n_name,
+           max(rn) AS n_customers,
+           min(CASE WHEN cum_d * 5 >= tot_d * 4 THEN rn END)
+               AS n_top_customers,
+           round(CAST(max(tot_d) AS DOUBLE), 2) AS nation_revenue
+    FROM ranked GROUP BY 1
+"""
+
+
 QUERIES = {
-    # approx_stats leads: its r2 driver row errored (ARRAY output, now
-    # fixed) and the r3 window only reaches a handful of olap keys;
-    # q12/q13/q17 are new in r3 and must debut inside the window.
     "approx_stats": q_approx_stats,
     "tpch_q12": q_tpch_q12,
     "tpch_q13": q_tpch_q13,
@@ -706,7 +1957,111 @@ QUERIES = {
     "tpch_q6": q_tpch_q6,
     "top_customers_per_nation": q_top_customers_per_nation,
     "pivot_returnflag": q_pivot_returnflag,
+    "tpch_q2": q_tpch_q2,
+    "tpch_q8": q_tpch_q8,
+    "tpch_q9": q_tpch_q9,
+    "tpch_q11": q_tpch_q11,
+    "tpch_q15": q_tpch_q15,
+    "tpch_q16": q_tpch_q16,
+    "tpch_q20": q_tpch_q20,
+    "tpch_q21": q_tpch_q21,
+    "grouping_sets_sales": q_grouping_sets_sales,
+    "revenue_share": q_revenue_share,
+    "monthly_running_revenue": q_monthly_running_revenue,
+    "range_join_clicks": q_range_join_clicks,
+    "props_variant": q_props_variant,
+    "hll_rollup": q_hll_rollup,
+    "scd2_dim": q_scd2_dim,
+    "scd2_asof": q_scd2_asof,
+    "session_concurrency": q_session_concurrency,
+    "snapshot_delta": q_snapshot_delta,
+    "salted_join_revenue": q_salted_join_revenue,
+    "quantile_rollup": q_quantile_rollup,
+    "tpch_q18": q_tpch_q18,
+    "cohort_ltv": q_cohort_ltv,
+    "conversion_lag": q_conversion_lag,
+    "funnel_attribution": q_funnel_attribution,
+    "bloom_join_prune": q_bloom_join_prune,
+    "skew_salted_revenue": q_skew_salted_revenue,
+    "order_gap_stats": q_order_gap_stats,
+    "cumulative_distinct_users": q_cumulative_distinct_users,
+    "rfm_segmentation": q_rfm_segmentation,
+    "pareto_revenue": q_pareto_revenue,
 }
+
+_SCD2_SQL = """
+base AS (
+    SELECT user_id, ts, event_id,
+           CAST(floor(value / 50.0) AS INT) AS tier
+    FROM events
+),
+flagged AS (
+    SELECT user_id, ts, event_id, tier,
+           CASE WHEN lag(tier) OVER w IS NULL
+                     OR tier <> lag(tier) OVER w
+                THEN 1 ELSE 0 END AS change
+    FROM base
+    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+),
+runs AS (
+    SELECT user_id, ts, tier,
+           sum(change) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS island
+    FROM flagged
+),
+dim AS (
+    SELECT user_id, island, tier,
+           min(ts) AS valid_from,
+           count(*) AS n_events
+    FROM runs GROUP BY 1, 2, 3
+),
+versions AS (
+    SELECT user_id, tier, valid_from,
+           lead(valid_from) OVER wv AS valid_to,
+           n_events,
+           CAST(row_number() OVER wv AS INT) AS version
+    FROM dim
+    WINDOW wv AS (PARTITION BY user_id ORDER BY valid_from, island)
+)"""
+
+# CAST AS DOUBLE: a bare 0.5 literal is DECIMAL in DuckDB and the
+# p·total rank arithmetic must be double×double on both engines
+_QR_PS_SQL = ", ".join(f"CAST({p} AS DOUBLE)" for p in HISTOGRAM_PS)
+
+# bloom_join_prune oracle: identical hash arithmetic via
+# bloom_positions_sql, membership via the position-set formulation
+# (a key passes iff all k positions are set by some build key —
+# exactly the bitmap test, no bitmap needed in SQL)
+_BP_BUILD = bloom_positions_sql("key", _BLOOM_BITS, _BLOOM_K)
+_BP_PROBE = bloom_positions_sql("pk.key", _BLOOM_BITS, _BLOOM_K)
+
+_BLOOM_SQL = f"""
+    WITH build AS (
+        SELECT DISTINCT o_orderkey AS key FROM orders
+        WHERE {_BLOOM_PRED_SQL}
+    ),
+    bpos AS (
+        SELECT DISTINCT unnest([{", ".join(_BP_BUILD)}]) AS pos FROM build
+    ),
+    pk AS (
+        SELECT l_orderkey AS key, count(*) AS n
+        FROM lineitem GROUP BY 1
+    ),
+    flags AS (
+        SELECT pk.n,
+               ({" AND ".join(f"({p}) IN (SELECT pos FROM bpos)" for p in _BP_PROBE)})
+                   AS bloom_pass,
+               pk.key IN (SELECT key FROM build) AS true_match
+        FROM pk
+    )
+    SELECT CAST(sum(n) AS BIGINT) AS n_probe,
+           CAST(sum(CASE WHEN bloom_pass THEN n ELSE 0 END) AS BIGINT)
+               AS n_bloom_pass,
+           CAST(sum(CASE WHEN true_match THEN n ELSE 0 END) AS BIGINT)
+               AS n_true_match
+    FROM flags
+"""
 
 ORACLE = {
     "tpch_q12": """
@@ -1068,146 +2423,537 @@ ORACLE = {
         FROM events
         GROUP BY 1, 2
     """,
+    "tpch_q2": """
+        WITH unit AS (
+            SELECT l_partkey, l_suppkey,
+                   l_extendedprice / l_quantity AS unit_price
+            FROM lineitem
+        ), min_unit AS (
+            SELECT l_partkey AS m_partkey, min(unit_price) AS min_unit
+            FROM unit GROUP BY 1
+        )
+        SELECT DISTINCT p_partkey, p_name, s_name, n_name,
+               round(min_unit, 6) AS min_unit_price
+        FROM unit
+        JOIN min_unit ON l_partkey = m_partkey AND unit_price = min_unit
+        JOIN part ON l_partkey = p_partkey AND p_size < 10
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation ON s_nationkey = n_nationkey
+        JOIN region ON n_regionkey = r_regionkey AND r_name = 'EUROPE'
+    """,
+    "tpch_q8": """
+        SELECT CAST(year(o_orderdate) AS INT) AS o_year,
+               round(
+                   sum(CASE WHEN n2.n_name = 'NATION_5'
+                            THEN l_extendedprice * (1 - l_discount) ELSE 0 END)
+                   / sum(l_extendedprice * (1 - l_discount)), 6) AS mkt_share
+        FROM lineitem
+        JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
+        JOIN orders ON l_orderkey = o_orderkey
+             AND year(o_orderdate) IN (1996, 1997)
+        JOIN customer ON o_custkey = c_custkey
+        JOIN nation n1 ON c_nationkey = n1.n_nationkey
+        JOIN region ON n1.n_regionkey = r_regionkey AND r_name = 'AMERICA'
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation n2 ON s_nationkey = n2.n_nationkey
+        GROUP BY 1
+    """,
+    "tpch_q9": """
+        SELECT n_name AS nation_name,
+               CAST(year(o_orderdate) AS INT) AS o_year,
+               CAST(round(sum(
+                   CAST(l_extendedprice AS DECIMAL(18,6))
+                     * (CAST(1 AS DECIMAL(18,6)) - CAST(l_discount AS DECIMAL(18,6)))
+                   - CAST(0.1 AS DECIMAL(18,6))
+                     * CAST(p_retailprice AS DECIMAL(18,6))
+                     * CAST(l_quantity AS DECIMAL(18,6))
+               ), 2) AS DOUBLE) AS sum_profit
+        FROM lineitem
+        JOIN part ON l_partkey = p_partkey AND p_name LIKE '%widget%'
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation ON s_nationkey = n_nationkey
+        JOIN orders ON l_orderkey = o_orderkey
+        GROUP BY 1, 2
+    """,
+    "tpch_q11": """
+        WITH value AS (
+            SELECT l_partkey,
+                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS part_value
+            FROM lineitem
+            WHERE l_suppkey IN (
+                SELECT s_suppkey FROM supplier
+                JOIN nation ON s_nationkey = n_nationkey
+                JOIN region ON n_regionkey = r_regionkey AND r_name = 'ASIA'
+            )
+            GROUP BY 1
+        )
+        SELECT l_partkey, part_value
+        FROM value
+        WHERE part_value > (SELECT round(sum(part_value) * 0.001, 2) FROM value)
+    """,
+    "tpch_q15": """
+        WITH rev AS (
+            SELECT l_suppkey,
+                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
+            FROM lineitem
+            WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+              AND l_shipdate < TIMESTAMP '1996-07-01'
+            GROUP BY 1
+        )
+        SELECT s_suppkey, s_name, total_revenue
+        FROM rev JOIN supplier ON l_suppkey = s_suppkey
+        WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
+    """,
+    "tpch_q16": """
+        SELECT p_brand, p_type, p_size,
+               count(DISTINCT l_suppkey) AS supplier_cnt
+        FROM lineitem
+        JOIN part ON l_partkey = p_partkey
+        WHERE p_brand <> 'Brand#1' AND p_type <> 'PROMO'
+          AND p_size IN (1, 4, 7, 10, 13, 16, 19, 22)
+        GROUP BY 1, 2, 3
+    """,
+    "tpch_q20": """
+        SELECT s_name, n_name
+        FROM supplier
+        JOIN nation ON s_nationkey = n_nationkey
+        WHERE s_suppkey IN (
+            SELECT l_suppkey FROM lineitem
+            WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+              AND l_shipdate < TIMESTAMP '1998-01-01'
+              AND l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'small %')
+            GROUP BY 1
+            HAVING sum(l_quantity) > 50
+        )
+    """,
+    "tpch_q21": """
+        WITH per_os AS (
+            SELECT l_orderkey, l_suppkey, max(l_extendedprice) AS s_max
+            FROM lineitem GROUP BY 1, 2
+        ), per_o AS (
+            SELECT l_orderkey AS o_key, count(*) AS n_supp,
+                   max(s_max) AS top_max,
+                   arg_max(l_suppkey, s_max) AS top_supp,
+                   max(CASE WHEN rnk = 2 THEN s_max END) AS second_max
+            FROM (
+                SELECT *, row_number() OVER (
+                    PARTITION BY l_orderkey
+                    ORDER BY s_max DESC, l_suppkey DESC
+                ) AS rnk
+                FROM per_os
+            )
+            GROUP BY 1
+        )
+        SELECT s_name, numwait FROM (
+            SELECT l_suppkey, count(*) AS numwait
+            FROM per_os
+            JOIN per_o ON l_orderkey = o_key
+            WHERE n_supp >= 2 AND l_suppkey = top_supp AND s_max > second_max
+            GROUP BY 1
+        )
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation ON s_nationkey = n_nationkey AND n_name = 'NATION_3'
+    """,
+    "grouping_sets_sales": """
+        SELECT n_name,
+               order_year,
+               CAST(grouping(n_name) AS INT) AS g_nation,
+               CAST(grouping(order_year) AS INT) AS g_year,
+               round(sum(o_totalprice), 2) AS revenue,
+               count(*) AS n_orders
+        FROM (
+            SELECT n_name, CAST(year(o_orderdate) AS INT) AS order_year,
+                   o_totalprice
+            FROM orders
+            JOIN customer ON o_custkey = c_custkey
+            JOIN nation ON c_nationkey = n_nationkey
+        )
+        GROUP BY GROUPING SETS ((n_name, order_year), (n_name), ())
+    """,
+    "revenue_share": """
+        WITH per_nation AS (
+            SELECT r_name, n_name, round(sum(o_totalprice), 2) AS revenue
+            FROM orders
+            JOIN customer ON o_custkey = c_custkey
+            JOIN nation ON c_nationkey = n_nationkey
+            JOIN region ON n_regionkey = r_regionkey
+            GROUP BY r_name, n_name
+        )
+        SELECT r_name, n_name, revenue,
+               round(revenue / sum(revenue) OVER (PARTITION BY r_name), 6) AS share
+        FROM per_nation
+    """,
+    "monthly_running_revenue": """
+        WITH monthly AS (
+            SELECT c_mktsegment,
+                   date_trunc('month', o_orderdate) AS month,
+                   round(sum(o_totalprice), 2) AS revenue,
+                   count(*) AS n_orders
+            FROM orders JOIN customer ON o_custkey = c_custkey
+            GROUP BY 1, 2
+        )
+        SELECT c_mktsegment, month, revenue, n_orders,
+               round(sum(revenue) OVER (PARTITION BY c_mktsegment ORDER BY month
+                                        ROWS BETWEEN UNBOUNDED PRECEDING
+                                        AND CURRENT ROW), 2) AS cum_revenue
+        FROM monthly
+    """,
+    # epoch_us on both engines (the repo ts-comparison rule); same
+    # semantics as the stream_interval_join oracle, view->click
+    "range_join_clicks": """
+        SELECT v.event_id AS view_id, c.event_id AS click_id,
+               c.user_id AS user_id, v.ts AS view_ts, c.ts AS click_ts
+        FROM events v JOIN events c
+          ON v.user_id = c.user_id
+         AND epoch_us(c.ts) >= epoch_us(v.ts)
+         AND epoch_us(c.ts) <= epoch_us(v.ts) + 1800 * 1000000
+        WHERE v.event_type = 'view' AND c.event_type = 'click'
+    """,
+    # hll_rollup: rows-only (sketch estimates have no DuckDB twin)
+    "props_variant": """
+        SELECT event_type,
+               round(avg(k), 6) AS avg_k,
+               CAST(min(k) AS INT) AS min_k,
+               CAST(max(k) AS INT) AS max_k,
+               CAST(sum(CASE WHEN json_valid(props) THEN 0 ELSE 1 END) AS BIGINT)
+                   AS n_malformed,
+               count(*) AS n
+        FROM (
+            -- guard the hard-error paths (r5 ADVICE): DuckDB's
+            -- json_extract ERRORs on malformed JSON and a plain CAST
+            -- errors on non-integer values, while the Spark side
+            -- degrades to NULL via try_parse_json/try_variant_get.
+            -- json_valid + try_cast is the oracle's graceful twin —
+            -- current testdata has 0 malformed rows, but testdata
+            -- regenerates every round and one bad row must not ERR
+            -- the key for a whole round.
+            SELECT event_type, props,
+                   CASE WHEN json_valid(props)
+                        THEN try_cast(json_extract_string(props, '$.k')
+                                      AS INTEGER)
+                   END AS k
+            FROM events
+        )
+        GROUP BY event_type
+    """,
+    "scd2_dim": f"""
+        WITH {_SCD2_SQL}
+        SELECT user_id, tier, valid_from, valid_to, n_events, version
+        FROM versions
+    """,
+    "scd2_asof": f"""
+        WITH {_SCD2_SQL}
+        SELECT f.event_id, f.user_id, f.ts, f.value,
+               v.valid_from, v.tier, v.version
+        FROM events f
+        JOIN versions v
+          ON f.user_id = v.user_id
+         AND v.valid_from <= f.ts
+         AND (f.ts < v.valid_to OR v.valid_to IS NULL)
+        WHERE f.event_type = 'purchase'
+    """,
+    "session_concurrency": f"""
+        WITH flagged AS (
+            SELECT user_id, ts, event_id,
+                   CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w
+                             > {_GAP_S} * 1000000
+                        THEN 1 ELSE 0 END AS new_session
+            FROM events
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        ),
+        sess AS (
+            SELECT user_id,
+                   sum(new_session) OVER (
+                       PARTITION BY user_id ORDER BY ts, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                   ) AS session_seq,
+                   ts
+            FROM flagged
+        ),
+        ivals AS (
+            SELECT user_id, session_seq,
+                   min(ts) AS s_start, max(ts) AS s_end
+            FROM sess GROUP BY 1, 2
+        ),
+        hours AS (
+            SELECT user_id,
+                   unnest(generate_series(date_trunc('hour', s_start),
+                                          date_trunc('hour', s_end),
+                                          INTERVAL 1 HOUR)) AS hour_start
+            FROM ivals
+        )
+        SELECT hour_start,
+               count(*) AS n_sessions,
+               count(DISTINCT user_id) AS n_users
+        FROM hours GROUP BY hour_start
+    """,
+    # direct column comparison (no hash) — see q_snapshot_delta doc
+    "snapshot_delta": """
+        WITH 
+bars_old AS (
+    SELECT event_type AS series_key,
+           date_trunc('day', ts) AS date,
+           arg_min(value, ts) AS open,
+           max(value) AS high,
+           min(value) AS low,
+           arg_max(value, ts) AS close,
+           count(*) AS volume,
+           round(sum(value), 6) AS turnover
+    FROM events WHERE event_id % 50 <> 0
+    GROUP BY 1, 2
+),
+bars_new AS (
+    SELECT event_type AS series_key,
+           date_trunc('day', ts) AS date,
+           arg_min(value, ts) AS open,
+           max(value) AS high,
+           min(value) AS low,
+           arg_max(value, ts) AS close,
+           count(*) AS volume,
+           round(sum(value), 6) AS turnover
+    FROM events 
+    GROUP BY 1, 2
+),
+        j AS (
+            SELECT coalesce(n.series_key, o.series_key) AS series_key,
+                   coalesce(n.date, o.date) AS date,
+                   CASE WHEN o.series_key IS NULL THEN 'insert'
+                        WHEN n.series_key IS NULL THEN 'delete'
+                        WHEN (o.open IS DISTINCT FROM n.open)
+                          OR (o.high IS DISTINCT FROM n.high)
+                          OR (o.low IS DISTINCT FROM n.low)
+                          OR (o.close IS DISTINCT FROM n.close)
+                          OR (o.volume IS DISTINCT FROM n.volume)
+                          OR (o.turnover IS DISTINCT FROM n.turnover)
+                        THEN 'update' END AS change_kind,
+                   CASE WHEN n.series_key IS NULL THEN o.open ELSE n.open END AS open,
+                   CASE WHEN n.series_key IS NULL THEN o.high ELSE n.high END AS high,
+                   CASE WHEN n.series_key IS NULL THEN o.low ELSE n.low END AS low,
+                   CASE WHEN n.series_key IS NULL THEN o.close ELSE n.close END AS close,
+                   CASE WHEN n.series_key IS NULL THEN o.volume ELSE n.volume END AS volume,
+                   CASE WHEN n.series_key IS NULL THEN o.turnover ELSE n.turnover END AS turnover
+            FROM bars_old o
+            FULL OUTER JOIN bars_new n
+              ON o.series_key = n.series_key AND o.date = n.date
+        )
+        SELECT series_key, date, open, high, low, close, volume,
+               turnover, change_kind
+        FROM j WHERE change_kind IS NOT NULL
+    """,
+    # the plain join IS the oracle: salting must not change results
+    "salted_join_revenue": """
+        SELECT c_mktsegment, o_orderpriority,
+               round(sum(o_totalprice), 2) AS revenue,
+               count(*) AS n_orders
+        FROM orders JOIN customer ON o_custkey = c_custkey
+        GROUP BY 1, 2
+    """,
+    # the IDENTICAL deterministic estimator on both engines: same
+    # floor-binning (double arithmetic is bitwise-reproducible), same
+    # cumulative ranks, same interpolation — so the approximate
+    # quantiles hash-match exactly
+    "quantile_rollup": f"""
+        WITH stats AS (
+            SELECT min(value) AS lo, max(value) AS hi
+            FROM events WHERE value IS NOT NULL
+        ),
+        binned AS (
+            SELECT event_type AS series_key,
+                   CASE WHEN hi > lo
+                        THEN LEAST(CAST(floor((value - lo)
+                                   / ((hi - lo) / {HISTOGRAM_BINS}.0)) AS INT),
+                                   {HISTOGRAM_BINS - 1})
+                        ELSE 0 END AS bin,
+                   count(*) AS n
+            FROM events, stats WHERE value IS NOT NULL
+            GROUP BY 1, 2
+        ),
+        merged AS (
+            SELECT series_key, FALSE AS is_total, bin, n FROM binned
+            UNION ALL
+            SELECT NULL, TRUE, bin, CAST(sum(n) AS BIGINT)
+            FROM binned GROUP BY bin
+        ),
+        cum AS (
+            SELECT series_key, is_total, bin, n,
+                   sum(n) OVER (PARTITION BY series_key, is_total
+                                ORDER BY bin) AS cum,
+                   sum(n) OVER (PARTITION BY series_key, is_total) AS total
+            FROM merged
+        ),
+        sel AS (
+            SELECT series_key, is_total, p, total,
+                   arg_min(bin, bin) AS bin,
+                   arg_min(n, bin) AS n,
+                   arg_min(cum, bin) AS cum
+            FROM cum,
+                 (SELECT unnest([{_QR_PS_SQL}])
+                         AS p) ps
+            WHERE cum >= p * total
+            GROUP BY 1, 2, 3, 4
+        )
+        SELECT series_key, is_total, p,
+               round(lo + ((hi - lo) / {HISTOGRAM_BINS}.0)
+                     * (bin + (p * total - (cum - n)) / n), 6) AS approx_value,
+               CAST(total AS BIGINT) AS n_values
+        FROM sel, stats
+    """,
+    "tpch_q18": f"""
+        WITH big AS (
+            SELECT l_orderkey, sum(l_quantity) AS sum_qty
+            FROM lineitem GROUP BY l_orderkey
+            HAVING sum(l_quantity) > {_Q18_MIN_QTY}
+        )
+        SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
+               CAST(sum_qty AS DOUBLE) AS sum_qty
+        FROM big
+        JOIN orders ON o_orderkey = l_orderkey
+        JOIN customer ON o_custkey = c_custkey
+    """,
+    "cohort_ltv": """
+        WITH first AS (
+            SELECT o_custkey,
+                   date_trunc('month', min(o_orderdate)) AS cohort_month
+            FROM orders GROUP BY o_custkey
+        )
+        SELECT cohort_month,
+               CAST(datediff('month', cohort_month,
+                             date_trunc('month', o_orderdate)) AS INT)
+                   AS month_offset,
+               count(DISTINCT o_custkey) AS n_customers,
+               count(*) AS n_orders,
+               round(sum(o_totalprice), 2) AS revenue
+        FROM orders JOIN first USING (o_custkey)
+        GROUP BY 1, 2
+    """,
+    # quantile_rollup's oracle with lag-days as the sketched value
+    "conversion_lag": f"""
+        WITH lag AS (
+            SELECT o.o_orderpriority AS series_key,
+                   CAST(date_diff('day', o.o_orderdate, l.l_shipdate)
+                        AS DOUBLE) AS value
+            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+            WHERE l.l_shipdate IS NOT NULL AND o.o_orderdate IS NOT NULL
+        ),
+        stats AS (
+            SELECT min(value) AS lo, max(value) AS hi FROM lag
+        ),
+        binned AS (
+            SELECT series_key,
+                   CASE WHEN hi > lo
+                        THEN LEAST(CAST(floor((value - lo)
+                                   / ((hi - lo) / {HISTOGRAM_BINS}.0)) AS INT),
+                                   {HISTOGRAM_BINS - 1})
+                        ELSE 0 END AS bin,
+                   count(*) AS n
+            FROM lag, stats
+            GROUP BY 1, 2
+        ),
+        merged AS (
+            SELECT series_key, FALSE AS is_total, bin, n FROM binned
+            UNION ALL
+            SELECT NULL, TRUE, bin, CAST(sum(n) AS BIGINT)
+            FROM binned GROUP BY bin
+        ),
+        cum AS (
+            SELECT series_key, is_total, bin, n,
+                   sum(n) OVER (PARTITION BY series_key, is_total
+                                ORDER BY bin) AS cum,
+                   sum(n) OVER (PARTITION BY series_key, is_total) AS total
+            FROM merged
+        ),
+        sel AS (
+            SELECT series_key, is_total, p, total,
+                   arg_min(bin, bin) AS bin,
+                   arg_min(n, bin) AS n,
+                   arg_min(cum, bin) AS cum
+            FROM cum,
+                 (SELECT unnest([{_QR_PS_SQL}]) AS p) ps
+            WHERE cum >= p * total
+            GROUP BY 1, 2, 3, 4
+        )
+        SELECT series_key, is_total, p,
+               round(lo + ((hi - lo) / {HISTOGRAM_BINS}.0)
+                     * (bin + (p * total - (cum - n)) / n), 6) AS approx_value,
+               CAST(total AS BIGINT) AS n_values
+        FROM sel, stats
+    """,
+    "funnel_attribution": """
+        WITH clicks AS (
+            SELECT user_id AS cuser, ts AS cts, max(event_id) AS click_id
+            FROM events
+            WHERE event_type = 'click'
+              AND user_id IS NOT NULL AND ts IS NOT NULL
+            GROUP BY 1, 2
+        ),
+        p AS (
+            SELECT user_id, ts, value FROM events
+            WHERE event_type = 'purchase'
+              AND user_id IS NOT NULL AND ts IS NOT NULL
+        )
+        SELECT CASE WHEN c.cts IS NOT NULL
+                         AND c.cts >= p.ts - INTERVAL 7 DAY
+                    THEN date_trunc('day', c.cts) END AS attr_day,
+               count(*) AS n_conversions,
+               round(sum(p.value), 6) AS attributed_value
+        FROM p
+        ASOF LEFT JOIN clicks c
+          ON p.user_id = c.cuser AND c.cts <= p.ts
+        GROUP BY 1
+    """,
+    "bloom_join_prune": _BLOOM_SQL,
+    # the PLAIN join: the report-driven hot/cold split + salting must
+    # be result-invariant
+    "skew_salted_revenue": """
+        SELECT c.c_mktsegment, o.o_orderpriority,
+               round(sum(o.o_totalprice), 2) AS revenue,
+               count(*) AS n_orders
+        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+        GROUP BY 1, 2
+    """,
+    "cumulative_distinct_users": """
+        WITH active AS (
+            SELECT date_trunc('day', ts) AS day,
+                   count(DISTINCT user_id) AS active_users
+            FROM events WHERE user_id IS NOT NULL
+            GROUP BY 1
+        ),
+        firsts AS (
+            SELECT user_id, min(date_trunc('day', ts)) AS day
+            FROM events WHERE user_id IS NOT NULL
+            GROUP BY 1
+        ),
+        news AS (
+            SELECT day, count(*) AS new_users FROM firsts GROUP BY 1
+        )
+        SELECT a.day, a.active_users,
+               coalesce(n.new_users, 0) AS new_users,
+               CAST(sum(coalesce(n.new_users, 0)) OVER (
+                   ORDER BY a.day
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+               ) AS BIGINT) AS cum_users
+        FROM active a LEFT JOIN news n USING (day)
+    """,
+    "order_gap_stats": """
+        WITH gaps AS (
+            SELECT o_custkey,
+                   date_diff('day',
+                             lag(o_orderdate) OVER (
+                                 PARTITION BY o_custkey
+                                 ORDER BY o_orderdate, o_orderkey),
+                             o_orderdate) AS gap_days
+            FROM orders
+        )
+        SELECT c.c_mktsegment,
+               count(*) AS n_gaps,
+               round(avg(gap_days), 6) AS avg_gap,
+               round(quantile_cont(CAST(gap_days AS DOUBLE), 0.5), 6)
+                   AS median_gap,
+               CAST(max(gap_days) AS INT) AS max_gap
+        FROM gaps g JOIN customer c ON g.o_custkey = c.c_custkey
+        WHERE gap_days IS NOT NULL
+        GROUP BY 1
+    """,
+    "rfm_segmentation": _RFM_SQL,
+    "pareto_revenue": _PARETO_SQL,
 }
-
-
-# r4: the eight remaining TPC-H shapes graduate from their staging
-# module into the graded inventory (they debut at the FRONT of the r4
-# correctness window — plans/__init__._GRADE_ORDER). Implementations
-# and oracles stay in olap_next.py; the keys are first-class here.
-from stock_data_project_spark.plans.olap_next import (  # noqa: E402
-    ORACLE_NEXT,
-    QUERIES_NEXT,
-)
-
-QUERIES.update(QUERIES_NEXT)
-ORACLE.update(ORACLE_NEXT)
-
-# r5 graduation: the six olap_next2 keys (grouping_sets_sales,
-# revenue_share, monthly_running_revenue, range_join_clicks,
-# props_variant, hll_rollup — the last rows-only).
-from stock_data_project_spark.plans.olap_next2 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT2,
-    QUERIES_NEXT as QUERIES_NEXT2,
-)
-
-QUERIES.update(QUERIES_NEXT2)
-ORACLE.update(ORACLE_NEXT2)
-
-# r5 build, r6 debut: scd2_dim / scd2_asof / session_concurrency /
-# data_quality_audit / expectation_gate
-from stock_data_project_spark.plans.olap_next3 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT3,
-    QUERIES_NEXT as QUERIES_NEXT3,
-)
-
-QUERIES.update(QUERIES_NEXT3)
-ORACLE.update(ORACLE_NEXT3)
-
-# r6 build, r7 debut: tpch_q18 (TPC-H now 22/22), cohort_ltv,
-# frequent_pairs (apriori prune), triangle_count (degree-oriented)
-from stock_data_project_spark.plans.olap_next4 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT4,
-    QUERIES_NEXT as QUERIES_NEXT4,
-)
-
-QUERIES.update(QUERIES_NEXT4)
-ORACLE.update(ORACLE_NEXT4)
-
-# r7 build, r8 debut: conversion_lag (order→ship lag percentiles via
-# the shared mergeable histogram-sketch estimator)
-from stock_data_project_spark.plans.olap_next5 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT5,
-    QUERIES_NEXT as QUERIES_NEXT5,
-)
-
-QUERIES.update(QUERIES_NEXT5)
-ORACLE.update(ORACLE_NEXT5)
-
-# r8 build, r9 debut: skew_salted_revenue (the skew REPORT driving
-# the salting mitigation, plain-join oracled), order_gap_stats
-# (per-customer reorder cadence with exact median)
-from stock_data_project_spark.plans.olap_next6 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT6,
-    QUERIES_NEXT as QUERIES_NEXT6,
-)
-
-QUERIES.update(QUERIES_NEXT6)
-ORACLE.update(ORACLE_NEXT6)
-
-# r8 build, r9 debut: rfm_segmentation (3× distributed exact ntile),
-# pareto_revenue (decimal cumulative concentration), basket_lift
-# (brand association rules), mad_outliers (exact median/MAD via
-# rank-the-middle — no engine quantile interpolation)
-from stock_data_project_spark.plans.olap_next7 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT7,
-    QUERIES_NEXT as QUERIES_NEXT7,
-)
-
-QUERIES.update(QUERIES_NEXT7)
-ORACLE.update(ORACLE_NEXT7)
-
-# r9 build, r10 debut: entity_resolution (blocked ER with native
-# levenshtein verify on both engines) and winsorized_stats (exact-
-# position percentile capping + exact-integer winsorized mean)
-from stock_data_project_spark.plans.olap_next8 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT8,
-    QUERIES_NEXT as QUERIES_NEXT8,
-)
-
-QUERIES.update(QUERIES_NEXT8)
-ORACLE.update(ORACLE_NEXT8)
-
-# r9 build, r11 debut: kcore_decomposition (bounded-round peel over
-# the co-purchase graph), item_similarity (co-purchase Jaccard via
-# the exact-integer rounding identity)
-from stock_data_project_spark.plans.olap_next9 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT9,
-    QUERIES_NEXT as QUERIES_NEXT9,
-)
-
-QUERIES.update(QUERIES_NEXT9)
-ORACLE.update(ORACLE_NEXT9)
-
-# r9 build, r11 debut: the statistical data-audit family — exact
-# integer KS two-sample test, per-segment Gini, Benford first-digit
-# audit, chi-square categorical association
-from stock_data_project_spark.plans.olap_next10 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT10,
-    QUERIES_NEXT as QUERIES_NEXT10,
-)
-
-QUERIES.update(QUERIES_NEXT10)
-ORACLE.update(ORACLE_NEXT10)
-
-# r10 build, r12 debut: welch_ttest — pairwise Welch t / df between
-# customer segments via the exact-integer variance recipe
-from stock_data_project_spark.plans.olap_next11 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT11,
-    QUERIES_NEXT as QUERIES_NEXT11,
-)
-
-QUERIES.update(QUERIES_NEXT11)
-ORACLE.update(ORACLE_NEXT11)
-
-# r10 late build, r12 debut: one_way_anova (k-group exact-moment
-# F-test) and herfindahl_index (per-nation supplier revenue
-# concentration, exact to the last unit)
-from stock_data_project_spark.plans.olap_next12 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT12,
-    QUERIES_NEXT as QUERIES_NEXT12,
-)
-
-QUERIES.update(QUERIES_NEXT12)
-ORACLE.update(ORACLE_NEXT12)
-
-# r10 late build, r12 debut: event_mutual_info (MI / entropies / NMI
-# between event type and hour-of-day — the information-theoretic
-# complement to categorical_association)
-from stock_data_project_spark.plans.olap_next13 import (  # noqa: E402
-    ORACLE_NEXT as ORACLE_NEXT13,
-    QUERIES_NEXT as QUERIES_NEXT13,
-)
-
-QUERIES.update(QUERIES_NEXT13)
-ORACLE.update(ORACLE_NEXT13)

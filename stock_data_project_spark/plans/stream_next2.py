@@ -45,11 +45,9 @@ ORACLE_NEXT = {
 
 # the incremental maintainer's contract IS equality with the batch
 # build, so its oracle is scd2_dim's own oracle verbatim
-from stock_data_project_spark.plans.olap_next3 import (  # noqa: E402
-    ORACLE_NEXT as _OLAP3_ORACLE,
-)
+from stock_data_project_spark.plans.olap import ORACLE as _OLAP_ORACLE  # noqa: E402
 
-ORACLE_NEXT["stream_scd2"] = _OLAP3_ORACLE["scd2_dim"]
+ORACLE_NEXT["stream_scd2"] = _OLAP_ORACLE["scd2_dim"]
 
 # scd2_late_gate: "quarantined" = ts earlier than the user's max ts
 # over strictly-earlier drops (RANGE ... 1 PRECEDING excludes the

@@ -1005,7 +1005,7 @@ def stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     a streaming aggregation whose state is BOUNDED at types × 512
     rows regardless of input volume (the whole point of sketch
     aggregation on an unbounded stream) — and the deterministic
-    estimator tail (plans/olap_next3.histogram_quantiles, ONE shared
+    estimator tail (operators/sketches.histogram_quantiles, ONE shared
     implementation) extracts p50/p90/p99 from the caught-up sink.
 
     The bin domain (lo/hi) is a static job parameter probed once from
@@ -1015,8 +1015,8 @@ def stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile_rollup's oracle verbatim (the streaming==batch theorem,
     stream_scd2-style)."""
     from stock_data_project_spark.catalog import load_table
-    from stock_data_project_spark.plans.olap_next3 import (
-        _QR_BINS,
+    from stock_data_project_spark.operators.sketches import (
+        HISTOGRAM_BINS,
         histogram_quantiles,
     )
 
@@ -1026,14 +1026,14 @@ def stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("value"), F.max("value"))
         .collect()[0]
     )
-    width = (hi - lo) / float(_QR_BINS)
+    width = (hi - lo) / float(HISTOGRAM_BINS)
     ev = read_events_stream(spark, sf_dir).filter(F.col("value").isNotNull())
     # degenerate-domain guard, mirroring the batch key: width 0 would
     # make the division NaN and the INT cast raise under ANSI mode
     bin_of = (
         F.least(
             F.floor((F.col("value") - F.lit(lo)) / F.lit(width)).cast("int"),
-            F.lit(_QR_BINS - 1),
+            F.lit(HISTOGRAM_BINS - 1),
         )
         if width > 0
         else F.lit(0)

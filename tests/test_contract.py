@@ -144,33 +144,34 @@ _PRIVATE_IMPORTS_LEFT = sorted(
         ("plans.llm_next9", "plans.llm_next6", "_TOPK"),
         ("plans.llm_next9", "plans.llm_next7", "_fan_out"),
         ("plans.llm_next9", "plans.llm_next6", "_TFIDF_SQL"),
-        ("plans.olap_next4", "plans.olap_next9", "_order_part_incidence"),
-        ("plans.olap_next5", "plans.olap_next3", "_QR_BINS"),
         ("plans.stream_next12", "operators.dedup", "_NEUTRAL_PERM_SALTS"),
         ("plans.stream_next12", "plans.llm_next14", "_TOKEN_SPLIT_SQL"),
         ("plans.stream_next2", "streaming.pipeline", "_LATE_MOD"),
         ("plans.stream_next8", "streaming.pipeline", "_run_to_memory"),
         ("plans.stream_next9", "streaming.pipeline", "_run_to_memory"),
-        ("streaming.pipeline", "plans.olap_next3", "_QR_BINS"),
     ]
 )
 
 
-def test_no_private_imports_across_modules():
-    """CLAUDE.md rule: no module imports another module's private
-    (``_``-prefixed) name. Scanned with ``ast`` over the package; the
-    remaining offenders are the pinned list above."""
+def _package_imports():
+    """(importer, source, names) for every import of a package module
+    inside the package, both relative to the package root; scanned
+    with ``ast``."""
     import ast
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parents[1] / "stock_data_project_spark"
-    found = []
     for path in pkg.rglob("*.py"):
         parts = path.relative_to(pkg).with_suffix("").parts
         if parts[-1] == "__init__":
             parts = parts[:-1]
         importer = ".".join(parts)
         for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.startswith("stock_data_project_spark."):
+                        yield importer, a.name.split(".", 1)[1], []
+                continue
             if not isinstance(node, ast.ImportFrom):
                 continue
             if node.level:  # relative: resolve against the importer
@@ -182,15 +183,89 @@ def test_no_private_imports_across_modules():
                 source = source.lstrip(".")
             else:
                 continue
-            found += [
-                (importer, source, a.name)
-                for a in node.names
-                if a.name.startswith("_")
-                and not a.name.startswith("__")
-                and source != importer
-            ]
+            yield importer, source, [a.name for a in node.names]
+
+
+def test_no_private_imports_across_modules():
+    """CLAUDE.md rule: no module imports another module's private
+    (``_``-prefixed) name. The remaining offenders are the pinned list
+    above."""
+    found = [
+        (importer, source, name)
+        for importer, source, names in _package_imports()
+        for name in names
+        if name.startswith("_") and not name.startswith("__") and source != importer
+    ]
     new = sorted(set(found) - set(_PRIVATE_IMPORTS_LEFT))
     assert not new, f"private names imported across modules: {new}"
     assert sorted(found) == _PRIVATE_IMPORTS_LEFT, (
         "the pinned list is stale — drop the entries whose import is gone"
+    )
+
+
+def test_only_plans_import_plans():
+    """CLAUDE.md rule: plans sit on top of the operator and streaming
+    layers, never beneath them — no package module outside ``plans/``
+    imports ``stock_data_project_spark.plans``. A helper two layers
+    share lives in the lower one (``operators/sketches
+    .histogram_quantiles`` serves a plan and a streaming operator)."""
+    offenders = sorted(
+        {
+            f"{importer} imports {source or 'plans'}"
+            for importer, source, names in _package_imports()
+            if not importer.startswith("plans")
+            and (
+                source == "plans"
+                or source.startswith("plans.")
+                or (source == "" and "plans" in names)
+            )
+        }
+    )
+    assert not offenders, offenders
+
+
+# Round-numbered plan modules (``*_next<N>.py``) still to fold into
+# domain modules. The list may only shrink: a new round-numbered module
+# fails, and so does an entry whose module is gone.
+_ROUND_NUMBERED_PLANS_LEFT = [
+    "llm_next",
+    "llm_next10",
+    "llm_next11",
+    "llm_next12",
+    "llm_next13",
+    "llm_next14",
+    "llm_next15",
+    "llm_next16",
+    "llm_next2",
+    "llm_next3",
+    "llm_next4",
+    "llm_next5",
+    "llm_next6",
+    "llm_next7",
+    "llm_next8",
+    "llm_next9",
+    "stream_next",
+    "stream_next10",
+    "stream_next11",
+    "stream_next12",
+    "stream_next2",
+    "stream_next3",
+    "stream_next4",
+    "stream_next5",
+    "stream_next6",
+    "stream_next7",
+    "stream_next8",
+    "stream_next9",
+]
+
+
+def test_round_numbered_plan_modules_only_shrink():
+    import pathlib
+
+    plans = pathlib.Path(__file__).resolve().parents[1] / "stock_data_project_spark/plans"
+    found = sorted(p.stem for p in plans.glob("*.py") if re.search(r"_next\d*$", p.stem))
+    new = sorted(set(found) - set(_ROUND_NUMBERED_PLANS_LEFT))
+    assert not new, f"new round-numbered plan modules (add to a domain module): {new}"
+    assert found == _ROUND_NUMBERED_PLANS_LEFT, (
+        "the pinned list is stale — drop the entries whose module is gone"
     )

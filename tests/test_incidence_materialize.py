@@ -1,5 +1,5 @@
 """Input-size-driven materialization of the (order, part) incidence
-frame (olap_next9._order_part_incidence — r13 verdict item 6).
+frame (graph._order_part_incidence).
 
 Below the threshold the frame is the plain lazy plan (recompute is
 measured cheaper at test SF); above it, one eager localCheckpoint
@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 from conftest import SF_ORACLE
 
-from stock_data_project_spark.plans import olap_next9
+from stock_data_project_spark.plans import graph
 
 
 def _plan(df) -> str:
@@ -19,23 +19,23 @@ def _plan(df) -> str:
 
 
 def test_incidence_lazy_below_threshold(spark):
-    op = olap_next9._order_part_incidence(spark, SF_ORACLE)
+    op = graph._order_part_incidence(spark, SF_ORACLE)
     # no checkpoint: the plan still carries the parquet scan
     assert "Scan parquet" in _plan(op)
     assert "ExistingRDD" not in _plan(op)
 
 
 def test_incidence_materializes_above_threshold(spark, monkeypatch):
-    monkeypatch.setattr(olap_next9, "INCIDENCE_MATERIALIZE_ROWS", 1)
-    op = olap_next9._order_part_incidence(spark, SF_ORACLE)
+    monkeypatch.setattr(graph, "INCIDENCE_MATERIALIZE_ROWS", 1)
+    op = graph._order_part_incidence(spark, SF_ORACLE)
     # checkpointed: downstream consumers read one materialization
     assert "ExistingRDD" in _plan(op)
 
 
 def test_switch_never_changes_rows(spark, monkeypatch):
-    lazy = olap_next9._copurchase_edges(spark, SF_ORACLE)
+    lazy = graph._copurchase_edges(spark, SF_ORACLE)
     rows_lazy = sorted(map(tuple, lazy.collect()))
-    monkeypatch.setattr(olap_next9, "INCIDENCE_MATERIALIZE_ROWS", 1)
-    mat = olap_next9._copurchase_edges(spark, SF_ORACLE)
+    monkeypatch.setattr(graph, "INCIDENCE_MATERIALIZE_ROWS", 1)
+    mat = graph._copurchase_edges(spark, SF_ORACLE)
     rows_mat = sorted(map(tuple, mat.collect()))
     assert rows_lazy == rows_mat and rows_lazy

@@ -1,15 +1,16 @@
 """r10-built keys staged for the r12 window (llm_next10
-ann_recall_eval, stream_next9 stream_full_join, olap_next11
-welch_ttest / kruskal_wallis): driver-identical parity plus
-per-operator semantic pins (numpy / decimal independent-implementation
-pins for Welch and Kruskal). The acf/seasonal/holt/cusum/theil_sen
-pins live in tests/test_statistics.py."""
+ann_recall_eval, stream_next9 stream_full_join): driver-identical
+parity plus per-operator semantic pins, and the planted-ties
+kruskal_wallis parity (the testdata is tie-free on cents). The
+acf/seasonal/holt/cusum/theil_sen pins live in
+tests/test_statistics.py, the Welch and Kruskal replays in
+tests/test_audits.py."""
 
 from __future__ import annotations
 
 import duckdb
 
-from stock_data_project_spark.plans import llm_next10, stream_next9
+from stock_data_project_spark.plans import audits, llm_next10, statistics, stream_next9
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
@@ -201,113 +202,19 @@ def test_stream_full_join_click_side_semantics(spark):
 
 
 def test_stock8_and_welch_are_oracled():
-    from stock_data_project_spark.plans import olap_next11, statistics
-
     for key in ("acf_returns", "seasonal_decompose", "holt_forecast",
                 "cusum_anomaly", "theil_sen_slope"):
         assert key in statistics.ORACLE
-    assert set(olap_next11.QUERIES_NEXT) == set(olap_next11.ORACLE_NEXT)
-
-
-def test_welch_ttest_parity(spark):
-    from stock_data_project_spark.plans import olap_next11
-
-    for sf in (SF_SMOKE, SF_ORACLE):
-        df = olap_next11.q_welch_ttest(spark, sf)
-        assert_gradable_schema(df, "welch_ttest")
-        assert df.count() > 0
-        compare(df, duckdb_run(olap_next11.ORACLE_NEXT["welch_ttest"], sf))
-
-
-def test_welch_ttest_matches_scipy_formula(spark):
-    """Semantic pin vs an independent Welch computation (numpy,
-    textbook formulas) to 4dp."""
-    import numpy as np
-
-    from stock_data_project_spark.plans import olap_next11
-
-    rows = olap_next11.q_welch_ttest(spark, SF_ORACLE).collect()
-    import duckdb
-
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW customer AS SELECT * FROM "
-        f"read_parquet('{SF_ORACLE}/customer.parquet')"
-    )
-    data = con.sql(
-        "SELECT c_mktsegment, CAST(round(c_acctbal * 100, 0) AS BIGINT)"
-        " FROM customer"
-    ).fetchall()
-    by_seg: dict[str, list[int]] = {}
-    for seg, cents in data:
-        by_seg.setdefault(seg, []).append(cents)
-    for row in rows:
-        a = np.array(by_seg[row["seg_a"]], dtype=np.float64)
-        b = np.array(by_seg[row["seg_b"]], dtype=np.float64)
-        va, vb = a.var(ddof=1), b.var(ddof=1)
-        se2 = va / len(a) + vb / len(b)
-        t = (a.mean() - b.mean()) / np.sqrt(se2)
-        dfw = se2**2 / (
-            (va / len(a)) ** 2 / (len(a) - 1) + (vb / len(b)) ** 2 / (len(b) - 1)
-        )
-        assert abs(row["t_stat"] - t) < 1e-4, (row, t)
-        assert abs(row["df_welch"] - dfw) < 1e-2 * max(1.0, dfw), (row, dfw)
+    olap11_keys = {"welch_ttest", "kruskal_wallis", "mann_whitney_u",
+                   "event_transition_matrix"}
+    assert olap11_keys <= set(audits.QUERIES)
+    assert olap11_keys <= set(audits.ORACLE)
 
 
 def test_cusum_and_kruskal_are_oracled():
-    from stock_data_project_spark.plans import olap_next11, statistics
-
     assert "cusum_anomaly" in statistics.ORACLE
-    assert "kruskal_wallis" in olap_next11.ORACLE_NEXT
-
-
-def test_kruskal_wallis_parity(spark):
-    from stock_data_project_spark.plans import olap_next11
-
-    for sf in (SF_SMOKE, SF_ORACLE):
-        df = olap_next11.q_kruskal_wallis(spark, sf)
-        assert_gradable_schema(df, "kruskal_wallis")
-        assert df.count() == 1
-        compare(df, duckdb_run(olap_next11.ORACLE_NEXT["kruskal_wallis"], sf))
-
-
-def test_kruskal_wallis_matches_textbook(spark):
-    """Independent H computation (numpy textbook formula with average
-    ranks) on the real data, to 4dp."""
-    import numpy as np
-
-    from stock_data_project_spark.plans import olap_next11
-
-    (row,) = olap_next11.q_kruskal_wallis(spark, SF_ORACLE).collect()
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW customer AS SELECT * FROM "
-        f"read_parquet('{SF_ORACLE}/customer.parquet')"
-    )
-    data = con.sql(
-        "SELECT c_mktsegment, CAST(round(c_acctbal*100,0) AS BIGINT) FROM customer"
-    ).fetchall()
-    segs = sorted({s for s, _ in data})
-    all_vals = np.array([v for _, v in data], dtype=np.float64)
-    order = np.argsort(all_vals, kind="stable")
-    ranks = np.empty(len(all_vals))
-    sv = all_vals[order]
-    i = 0
-    pos = np.arange(1, len(sv) + 1, dtype=np.float64)
-    while i < len(sv):
-        j = i
-        while j + 1 < len(sv) and sv[j + 1] == sv[i]:
-            j += 1
-        ranks[order[i : j + 1]] = pos[i : j + 1].mean()
-        i = j + 1
-    n = len(all_vals)
-    h = 0.0
-    labels = np.array([s for s, _ in data])
-    for s in segs:
-        rs = ranks[labels == s]
-        h += rs.sum() ** 2 / len(rs)
-    h = 12.0 / (n * (n + 1)) * h - 3 * (n + 1)
-    assert abs(row["h_stat"] - h) < 1e-4, (row["h_stat"], h)
+    assert "kruskal_wallis" in audits.QUERIES
+    assert "kruskal_wallis" in audits.ORACLE
 
 
 def test_kruskal_wallis_planted_ties_parity(spark, tmp_path):
@@ -318,7 +225,6 @@ def test_kruskal_wallis_planted_ties_parity(spark, tmp_path):
     import duckdb as ddb
     import pandas as pd
 
-    from stock_data_project_spark.plans import olap_next11
 
     pdf = pd.DataFrame(
         {
@@ -337,10 +243,10 @@ def test_kruskal_wallis_planted_ties_parity(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(f"{d}/customer.parquet")
-    df = olap_next11.q_kruskal_wallis(spark, d)
+    df = audits.q_kruskal_wallis(spark, d)
     con = ddb.connect()
     con.sql(f"CREATE VIEW customer AS SELECT * FROM read_parquet('{d}/customer.parquet')")
-    od = con.sql(olap_next11.ORACLE_NEXT["kruskal_wallis"]).df()
+    od = con.sql(audits.ORACLE["kruskal_wallis"]).df()
     (srow,) = df.collect()
     assert len(od) == 1
     orow = od.iloc[0]

@@ -1,37 +1,28 @@
-"""Late-r10 keys staged for the r12 window (olap_next12 one_way_anova
-/ herfindahl_index, llm_next12 zipf_slope / flesch_reading_ease /
-containment_pairs, olap_next13 event_mutual_info): driver-identical
-parity plus independent implementation pins (numpy moments / OLS
-replays, a pure-``re`` readability recount, a planted sub-document
-containment construction). The runs/ljung_box/jarque_bera/sharpe/
+"""Late-r10 keys staged for the r12 window (llm_next12 zipf_slope /
+flesch_reading_ease / containment_pairs): driver-identical parity
+plus independent implementation pins (numpy OLS replays, a
+pure-``re`` readability recount, a planted sub-document containment
+construction). The one_way_anova / herfindahl_index /
+event_mutual_info pins live in tests/test_audits.py. The runs/ljung_box/jarque_bera/sharpe/
 hurst/variance_ratio/seasonality pins live in tests/test_statistics.py."""
 
 from __future__ import annotations
 
-import math
 import re
 
 import duckdb
 import numpy as np
 import pytest
 
-from stock_data_project_spark.plans import llm_next12, olap_next12
+from stock_data_project_spark.plans import audits, llm_next12
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
 
 def test_next12_keys_are_oracled():
-    assert set(olap_next12.QUERIES_NEXT) == set(olap_next12.ORACLE_NEXT)
+    for key in ("one_way_anova", "herfindahl_index"):
+        assert key in audits.QUERIES and key in audits.ORACLE
     assert set(llm_next12.QUERIES_NEXT) == set(llm_next12.ORACLE_NEXT)
-
-
-@pytest.mark.parametrize("key", sorted(olap_next12.QUERIES_NEXT))
-def test_olap_next12_parity(spark, key):
-    for sf in (SF_SMOKE, SF_ORACLE):
-        df = olap_next12.QUERIES_NEXT[key](spark, sf)
-        assert_gradable_schema(df, key)
-        assert df.count() > 0
-        compare(df, duckdb_run(olap_next12.ORACLE_NEXT[key], sf))
 
 
 @pytest.mark.parametrize("key", sorted(llm_next12.QUERIES_NEXT))
@@ -44,43 +35,6 @@ def test_llm_next12_parity(spark, key):
 
 
 # ------------------------------------------------------ semantic pins
-
-
-def test_one_way_anova_matches_numpy(spark):
-    row = olap_next12.q_one_way_anova(spark, SF_ORACLE).collect()[0]
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW customer AS SELECT * FROM "
-        f"read_parquet('{SF_ORACLE}/customer.parquet')"
-    )
-    df = con.sql(
-        "SELECT c_mktsegment AS seg,"
-        " CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents FROM customer"
-    ).df()
-    groups = [g["cents"].to_numpy(dtype=np.float64) for _, g in df.groupby("seg")]
-    allv = np.concatenate(groups)
-    ssb = sum(len(g) * (g.mean() - allv.mean()) ** 2 for g in groups)
-    ssw = sum(((g - g.mean()) ** 2).sum() for g in groups)
-    k, n = len(groups), len(allv)
-    f = (ssb / (k - 1)) / (ssw / (n - k))
-    eta = ssb / (ssb + ssw)
-    assert (row["k_groups"], row["n_total"]) == (k, n)
-    assert abs(row["f_stat"] - f) < 1e-5 * max(1.0, abs(f))
-    assert abs(row["eta_sq"] - eta) < 1e-6
-    assert abs(row["ss_between"] - ssb) < 1.0  # ~1e13-scale double sums
-    assert abs(row["ss_within"] - ssw) < 1.0
-
-
-def test_herfindahl_invariants(spark):
-    rows = olap_next12.q_herfindahl_index(spark, SF_ORACLE).collect()
-    assert rows
-    for r in rows:
-        n = r["n_suppliers"]
-        # HHI of n shares lies in [1/n, 1]; rounded shares drift by
-        # at most n·1e-6 off the simplex
-        assert 1.0 / n - 1e-4 <= r["hhi"] <= 1.0 + 1e-4, r
-        assert 1.0 / n - 1e-6 <= r["top_share"] <= 1.0
-        assert r["hhi"] <= r["top_share"] + 1e-6 or n == 1
 
 
 def test_zipf_slope_matches_numpy_and_is_zipfian(spark):
@@ -187,51 +141,11 @@ def test_containment_pairs_consistency_with_jaccard(spark):
         assert abs(1.0 / j - (1.0 / ca + 1.0 / cb - 1.0)) < 1e-3, (pair, ca, cb, j)
 
 
-# ------------------------------------ second late-r10 batch (olap_next13)
+# ----------------------------------------- second late-r10 batch (audits)
 
 
 def test_next12b_keys_are_oracled():
-    from stock_data_project_spark.plans import olap_next13
-
-    assert set(olap_next13.QUERIES_NEXT) == set(olap_next13.ORACLE_NEXT)
-
-
-@pytest.mark.parametrize("key", ["event_mutual_info"])
-def test_next12b_parity(spark, key):
-    from stock_data_project_spark.plans import olap_next13
-
-    for sf in (SF_SMOKE, SF_ORACLE):
-        df = olap_next13.QUERIES_NEXT[key](spark, sf)
-        assert_gradable_schema(df, key)
-        assert df.count() > 0
-        compare(df, duckdb_run(olap_next13.ORACLE_NEXT[key], sf))
+    assert "event_mutual_info" in audits.QUERIES
+    assert "event_mutual_info" in audits.ORACLE
 
 
-def test_event_mutual_info_matches_numpy(spark):
-    from stock_data_project_spark.plans import olap_next13
-
-    row = olap_next13.q_event_mutual_info(spark, SF_ORACLE).collect()[0]
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF_ORACLE}/events.parquet')"
-    )
-    cells = con.sql(
-        """SELECT event_type, CAST((epoch_us(ts) // 3600000000) % 24 AS INT) AS h,
-                  count(*) AS c
-           FROM events GROUP BY 1, 2"""
-    ).df()
-    n = cells["c"].sum()
-    cx = cells.groupby("event_type")["c"].sum()
-    cy = cells.groupby("h")["c"].sum()
-    mi = sum(
-        (r.c / n) * math.log(r.c * n / (cx[r.event_type] * cy[r.h]))
-        for r in cells.itertuples()
-    )
-    hx = -sum((v / n) * math.log(v / n) for v in cx)
-    hy = -sum((v / n) * math.log(v / n) for v in cy)
-    assert row["n_events"] == n and row["n_cells"] == len(cells)
-    assert abs(row["mi_nats"] - mi) < 1e-5
-    assert abs(row["h_type"] - hx) < 1e-5
-    assert abs(row["h_hour"] - hy) < 1e-5
-    assert abs(row["nmi"] - mi / min(hx, hy)) < 1e-4
-    assert 0.0 <= row["nmi"] <= 1.0 + 1e-9

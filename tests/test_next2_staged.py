@@ -1,31 +1,54 @@
-"""r5-built keys for the r6 window (indicators / llm_next2 /
-olap_next3 / stream_next2): the SAME value-level DuckDB comparison the
-driver runs, plus the semantic pins the rows-only key needs."""
+"""r5-built keys for the r6 window (llm_next2 / stream_next2): the
+SAME value-level DuckDB comparison the driver runs, plus the semantic
+pins the rows-only key needs. The indicator and OLAP-family keys
+staged with them are checked once by tests/test_oracle_parity.py."""
 
 from __future__ import annotations
 
 import pytest
 
 from stock_data_project_spark.plans import (
+    audits,
+    graph,
     indicators,
     llm_next2,
-    olap_next3,
+    olap,
     stream_next2,
 )
 from tests.conftest import SF_ORACLE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
-_INDICATOR_KEYS = ("williams_r", "mfi", "ulcer_index", "linear_interp")
+# Keys staged here that now live in the domain modules; their
+# parity runs in tests/test_oracle_parity.py.
+MOVED_KEYS = {
+    indicators: {
+        "williams_r",
+        "mfi",
+        "ulcer_index",
+        "linear_interp",
+    },
+    olap: {
+        "scd2_dim",
+        "scd2_asof",
+        "session_concurrency",
+        "snapshot_delta",
+        "salted_join_revenue",
+        "quantile_rollup",
+    },
+    audits: {
+        "data_quality_audit",
+        "expectation_gate",
+    },
+    graph: {
+        "user_influence",
+    },
+}
 ALL_Q = {
-    **{k: indicators.QUERIES[k] for k in _INDICATOR_KEYS},
     **llm_next2.QUERIES_NEXT,
-    **olap_next3.QUERIES_NEXT,
     **stream_next2.QUERIES_NEXT,
 }
 ALL_O = {
-    **{k: indicators.ORACLE[k] for k in _INDICATOR_KEYS},
     **llm_next2.ORACLE_NEXT,
-    **olap_next3.ORACLE_NEXT,
     **stream_next2.ORACLE_NEXT,
 }
 ROWS_ONLY = {
@@ -38,6 +61,8 @@ ROWS_ONLY = {
 
 def test_every_new_key_has_an_oracle():
     assert set(ALL_Q) - ROWS_ONLY == set(ALL_O)
+    for mod, keys in MOVED_KEYS.items():
+        assert keys <= set(mod.QUERIES) & set(mod.ORACLE), mod.__name__
 
 
 @pytest.mark.parametrize("key", sorted(ALL_Q))
@@ -96,46 +121,6 @@ def test_contamination_flags_catch_planted_partner(spark):
         """
     ).fetchone()[0]
     assert n >= 1
-
-
-def test_scd2_versions_are_contiguous(spark):
-    """SCD2 invariants: per user, valid_to chains to the next
-    version's valid_from, exactly one NULL-open current version, and
-    versions are dense from 1."""
-    rows = olap_next3.QUERIES_NEXT["scd2_dim"](spark, SF_ORACLE).collect()
-    by_user: dict[int, list] = {}
-    for r in rows:
-        by_user.setdefault(r["user_id"], []).append(r)
-    for user, vs in by_user.items():
-        vs.sort(key=lambda r: r["version"])
-        assert [v["version"] for v in vs] == list(range(1, len(vs) + 1))
-        assert sum(v["valid_to"] is None for v in vs) == 1
-        for a, b in zip(vs, vs[1:]):
-            assert a["valid_to"] == b["valid_from"], user
-        assert vs[-1]["valid_to"] is None
-
-
-def test_user_influence_is_a_distribution(spark):
-    """Rank mass ≈ 1 over the node set (6dp-rounding drift bounded by
-    n·5e-7), every rank positive, and the most-active users outrank
-    the median — the property PageRank exists to measure."""
-    rows = olap_next3.QUERIES_NEXT["user_influence"](spark, SF_ORACLE).collect()
-    ranks = [r["rank"] for r in rows]
-    assert all(r > 0 for r in ranks)
-    assert abs(sum(ranks) - 1.0) < len(ranks) * 5e-7 + 1e-3
-    assert max(ranks) > sorted(ranks)[len(ranks) // 2]
-
-
-def test_expectation_gate_clean_data_passes(spark):
-    """The generated TPC-H data satisfies every rule — the gate's
-    zero-violation report is itself the assertion (a rule regression
-    would show up as a nonzero count here before the driver sees
-    it)."""
-    rows = olap_next3.QUERIES_NEXT["expectation_gate"](spark, SF_ORACLE).collect()
-    assert len(rows) == 5
-    for r in rows:
-        assert r["n_violations"] == 0, (r["rule"], r["n_violations"])
-        assert r["n_rows"] > 0
 
 
 def test_pagerank_keeps_zero_indegree_nodes(spark):
@@ -201,44 +186,6 @@ def test_scd2_asof_drops_zero_width_versions(spark):
     # interval semantics: both facts fall in v3 (tier 0), never the
     # zero-width tier-1 version
     assert {(r["tier"], r["version"]) for r in out} == {(0, 3)}
-
-
-def test_quantile_rollup_accuracy_and_merge(spark):
-    """The histogram estimator is within one bin width of the exact
-    order statistic (the sketch's error bound), and the grand-total
-    row equals re-running the estimator over the merged corpus — the
-    mergeability theorem the key exists to demonstrate."""
-    import duckdb
-
-    from stock_data_project_spark.plans.olap_next3 import _QR_BINS
-
-    rows = olap_next3.QUERIES_NEXT["quantile_rollup"](spark, SF_ORACLE).collect()
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{SF_ORACLE}/events.parquet')"
-    )
-    lo, hi = con.sql(
-        "SELECT min(value), max(value) FROM events WHERE value IS NOT NULL"
-    ).fetchone()
-    width = (hi - lo) / _QR_BINS
-    for r in rows:
-        if r["is_total"]:
-            exact = con.sql(
-                f"SELECT quantile_disc(value, {r['p']}) FROM events"
-            ).fetchone()[0]
-        else:
-            exact = con.sql(
-                f"SELECT quantile_disc(value, {r['p']}) FROM events "
-                f"WHERE event_type = '{r['series_key']}'"
-            ).fetchone()[0]
-        assert abs(r["approx_value"] - exact) <= 2 * width + 1e-9, (
-            r["series_key"], r["p"], r["approx_value"], exact,
-        )
-    # totals row count = sum of per-type counts (merge loses nothing)
-    n_total = {r["p"]: r["n_values"] for r in rows if r["is_total"]}
-    per_type = sum(r["n_values"] for r in rows if not r["is_total"] and r["p"] == 0.5)
-    assert set(n_total.values()) == {per_type}
 
 
 def test_williams_r_never_emits_negative_zero(spark):

@@ -1,6 +1,7 @@
-"""r6-built keys for the r7 window (olap_next4 / llm_next3 /
-stream_next3): the SAME value-level DuckDB comparison the driver
-runs, plus per-key semantic pins."""
+"""r6-built keys for the r7 window (llm_next3 / stream_next3): the
+SAME value-level DuckDB comparison the driver runs, plus per-key
+semantic pins. The indicator and OLAP-family keys staged with them
+are checked once by tests/test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -8,24 +9,36 @@ import pytest
 from pyspark.sql import functions as F
 
 from stock_data_project_spark.plans import (
+    graph,
     indicators,
     llm_next3,
-    olap_next4,
+    olap,
     stream_next3,
 )
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
-_INDICATOR_KEYS = ("ema_cross", "roc_momentum")
+# Keys staged here that now live in the domain modules; their
+# parity runs in tests/test_oracle_parity.py.
+MOVED_KEYS = {
+    indicators: {
+        "ema_cross",
+        "roc_momentum",
+    },
+    olap: {
+        "tpch_q18",
+        "cohort_ltv",
+    },
+    graph: {
+        "frequent_pairs",
+        "triangle_count",
+    },
+}
 ALL_Q = {
-    **olap_next4.QUERIES_NEXT,
-    **{k: indicators.QUERIES[k] for k in _INDICATOR_KEYS},
     **llm_next3.QUERIES_NEXT,
     **stream_next3.QUERIES_NEXT,
 }
 ALL_O = {
-    **olap_next4.ORACLE_NEXT,
-    **{k: indicators.ORACLE[k] for k in _INDICATOR_KEYS},
     **llm_next3.ORACLE_NEXT,
     **stream_next3.ORACLE_NEXT,
 }
@@ -33,6 +46,8 @@ ALL_O = {
 
 def test_every_new_key_has_an_oracle():
     assert set(ALL_Q) == set(ALL_O)  # every staged key fully oracled
+    for mod, keys in MOVED_KEYS.items():
+        assert keys <= set(mod.QUERIES) & set(mod.ORACLE), mod.__name__
 
 
 @pytest.mark.parametrize("key", sorted(ALL_Q))
@@ -41,37 +56,6 @@ def test_new_key_parity(spark, key):
     assert_gradable_schema(df, key)
     assert df.count() > 0, f"{key}: empty result"
     compare(df, duckdb_run(ALL_O[key], SF_ORACLE))
-
-
-def test_triangle_count_matches_brute_force(spark):
-    """Degree-oriented counting vs hand-countable graph: K4 plus a
-    pendant — K4 has 4 triangles, the pendant adds none, and the
-    orientation must not double- or zero-count the shared edges."""
-    rows = [(a, b) for a in range(4) for b in range(a + 1, 4)] + [(3, 9)]
-    ev_rows = []
-    # encode the graph as a consecutive-event stream: one event_type
-    # per edge, two events per type → lag() recovers exactly that edge
-    for i, (a, b) in enumerate(rows):
-        ev_rows.append((2 * i, f"t{i}", a))
-        ev_rows.append((2 * i + 1, f"t{i}", b))
-    from datetime import datetime, timedelta
-
-    base = datetime(2024, 1, 1)
-    ev = spark.createDataFrame(
-        [
-            (eid, base + timedelta(minutes=eid), uid, et, 1.0, None)
-            for eid, et, uid in ev_rows
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    import os
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        ev.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
-        out = olap_next4.q_triangle_count(spark, d).collect()[0]
-    assert (out["n_nodes"], out["n_edges"], out["n_triangles"]) == (5, 7, 4)
 
 
 def test_stratified_sample_exact_quotas(spark):
@@ -102,33 +86,16 @@ def test_stratified_sample_exact_quotas(spark):
     assert again == sorted((r["lang"], r["doc_id"]) for r in rows)
 
 
-def test_frequent_pairs_apriori_consistent(spark):
-    """Every kept pair's parts are individually frequent (the prune
-    must be lossless for pairs at min support), and support never
-    exceeds either part's document frequency."""
-    out = olap_next4.QUERIES_NEXT["frequent_pairs"](spark, SF_ORACLE).collect()
-    assert out
-    df = duckdb_run(
-        "SELECT l_partkey, count(*) AS df FROM "
-        "(SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) GROUP BY 1",
-        SF_ORACLE,
-    ).set_index("l_partkey")["df"]
-    for r in out:
-        assert df[r["part_a"]] >= r["support"] >= olap_next4._PAIR_MIN_SUPPORT
-        assert df[r["part_b"]] >= r["support"]
-
-
 def test_stream_quantile_equals_batch(spark):
     """streaming == batch for the histogram sketch: identical output
     to quantile_rollup (shared estimator, stream-accumulated bins)."""
-    from stock_data_project_spark.plans import olap_next3
 
     got = sorted(
         map(tuple, stream_next3.QUERIES_NEXT["stream_quantile"](spark, SF_ORACLE).collect()),
         key=str,
     )
     want = sorted(
-        map(tuple, olap_next3.QUERIES_NEXT["quantile_rollup"](spark, SF_ORACLE).collect()),
+        map(tuple, olap.QUERIES["quantile_rollup"](spark, SF_ORACLE).collect()),
         key=str,
     )
     assert got == want
@@ -147,22 +114,6 @@ def test_decayed_revenue_cte_surface_agrees(spark):
     register_views(spark, SF_SMOKE)
     cte = sorted(map(tuple, spark.sql(_DECAYED_SQL).collect()))
     assert fold == cte
-
-
-def test_cohort_ltv_offset_zero_covers_all_customers(spark):
-    """Month-offset 0 rows must jointly cover every customer (the
-    first order is by definition in its own cohort month)."""
-    out = olap_next4.QUERIES_NEXT["cohort_ltv"](spark, SF_ORACLE)
-    n0 = (
-        out.filter(F.col("month_offset") == 0)
-        .agg(F.sum("n_customers"))
-        .collect()[0][0]
-    )
-    n_cust = duckdb_run(
-        "SELECT count(DISTINCT o_custkey) AS n FROM orders", SF_ORACLE
-    )["n"][0]
-    assert n0 == n_cust
-    assert out.filter(F.col("month_offset") < 0).count() == 0
 
 
 def test_topk_rollup_containment_and_bounds(spark):

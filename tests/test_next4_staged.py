@@ -1,31 +1,49 @@
 """r7-built keys staged for the r8 window (llm_next4 semantic_dedup,
-olap_next5 conversion_lag, stream_next4 stream_late_data): the SAME
-value-level DuckDB comparison the driver runs, plus each key's
-semantic pins."""
+stream_next4 stream_late_data): the SAME value-level DuckDB
+comparison the driver runs, plus each key's semantic pins. The OLAP
+keys staged with them are checked once by
+tests/test_oracle_parity.py."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from stock_data_project_spark.plans import llm_next4, olap_next5, stream_next4
+from stock_data_project_spark.plans import (
+    audits,
+    llm_next4,
+    olap,
+    stream_next4,
+)
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
+# Keys staged here that now live in the domain modules; their
+# parity runs in tests/test_oracle_parity.py.
+MOVED_KEYS = {
+    olap: {
+        "conversion_lag",
+        "funnel_attribution",
+        "bloom_join_prune",
+    },
+    audits: {
+        "skew_report",
+    },
+}
 ALL_Q = {
     **llm_next4.QUERIES_NEXT,
-    **olap_next5.QUERIES_NEXT,
     **stream_next4.QUERIES_NEXT,
 }
 ALL_O = {
     **llm_next4.ORACLE_NEXT,
-    **olap_next5.ORACLE_NEXT,
     **stream_next4.ORACLE_NEXT,
 }
 
 
 def test_every_new_key_is_fully_oracled():
     assert set(ALL_Q) == set(ALL_O)
+    for mod, keys in MOVED_KEYS.items():
+        assert keys <= set(mod.QUERIES) & set(mod.ORACLE), mod.__name__
 
 
 @pytest.mark.parametrize("key", sorted(ALL_Q))
@@ -76,35 +94,6 @@ def test_semantic_dedup_degrades_invalid_rows(spark):
     assert cell.rep_id in (1, 2) and cell.n_dup == 1  # cos(1,2) ≈ 0.994
 
 
-def test_conversion_lag_within_one_bin_of_exact(spark):
-    """Accuracy pin (quantile_rollup's bound applied to the third
-    estimator consumer): every histogram estimate is within one bin
-    width of the exact order-statistic percentile."""
-    exact = duckdb_run(
-        """
-        WITH lag AS (
-            SELECT o.o_orderpriority AS series_key,
-                   CAST(date_diff('day', o.o_orderdate, l.l_shipdate) AS DOUBLE) AS v
-            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        )
-        SELECT series_key, quantile_cont(v, 0.5) AS p50,
-               min(min(v)) OVER () AS lo, max(max(v)) OVER () AS hi
-        FROM lag GROUP BY series_key
-        """,
-        SF_ORACLE,
-    )
-    got = {
-        r.series_key: r.approx_value
-        for r in ALL_Q["conversion_lag"](spark, SF_ORACLE).collect()
-        if not r.is_total and r.p == 0.5
-    }
-    from stock_data_project_spark.plans.olap_next3 import _QR_BINS
-
-    for _, row in exact.iterrows():
-        width = (row.hi - row.lo) / _QR_BINS
-        assert abs(got[row.series_key] - row.p50) <= width + 1e-9, row.series_key
-
-
 def test_stream_late_data_excludes_heldback_rows(spark):
     """The sink's finalized windows exclude every withheld
     (~20-days-late) row: total emitted counts fall short of delivered
@@ -142,44 +131,3 @@ def test_semantic_dedup_runs_with_arrow_disabled(spark):
         spark.conf.set(key, old)
 
 
-def test_funnel_attribution_conserves_purchases(spark):
-    """Every purchase lands in exactly one attribution bucket (a day
-    or the NULL unattributed row), and attribution days are midnight
-    timestamps (the no-DATE-output parity rule)."""
-    from stock_data_project_spark.catalog import load_table
-
-    out = ALL_Q["funnel_attribution"](spark, SF_ORACLE).collect()
-    n_purchases = (
-        load_table(spark, SF_ORACLE, "events")
-        .filter(
-            (F.col("event_type") == "purchase")
-            & F.col("user_id").isNotNull()
-            & F.col("ts").isNotNull()
-        )
-        .count()
-    )
-    assert sum(r.n_conversions for r in out) == n_purchases
-    days = [r.attr_day for r in out if r.attr_day is not None]
-    assert days, "expected attributed conversions"
-    for d in days:
-        assert d.hour == 0 and d.minute == 0 and d.second == 0
-
-
-def test_skew_report_topk_is_takeordered_and_total(spark):
-    """The global top-K must compile to TakeOrderedAndProject
-    (per-partition local top-K + driver merge), never a
-    single-partition window sort; and the report's two parts must
-    agree (every top key's fanout appears in the histogram)."""
-    df = ALL_Q["skew_report"](spark, SF_ORACLE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrdered" in plan
-    rows = df.collect()
-    hist = {r.k: r.v for r in rows if r.kind == "fanout_hist"}
-    tops = [r for r in rows if r.kind == "top_key"]
-    from stock_data_project_spark.plans.olap_next5 import _SKEW_TOPK
-
-    assert len(tops) == _SKEW_TOPK
-    for t in tops:
-        assert t.v in hist  # the top key's fanout is a histogram bin
-    # top keys are the global maxima: no histogram bin above them
-    assert max(hist) == max(t.v for t in tops)

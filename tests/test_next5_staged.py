@@ -1,6 +1,7 @@
-"""r8-built keys staged for the r9 window (olap_next6, llm_next5,
-indicators, stream_next5): the SAME value-level DuckDB comparison
-the driver runs, plus each key's semantic pins."""
+"""r8-built keys staged for the r9 window (llm_next5, stream_next5):
+the SAME value-level DuckDB comparison the driver runs, plus each
+key's semantic pins. The indicator and OLAP keys staged with them are
+checked once by tests/test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -10,23 +11,32 @@ from pyspark.sql import functions as F
 from stock_data_project_spark.plans import (
     indicators,
     llm_next5,
-    olap_next6,
+    olap,
     stream_next5,
 )
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
-_INDICATOR_KEYS = ("aroon", "cmf", "keltner")
+# Keys staged here that now live in the domain modules; their
+# parity runs in tests/test_oracle_parity.py.
+MOVED_KEYS = {
+    indicators: {
+        "aroon",
+        "cmf",
+        "keltner",
+    },
+    olap: {
+        "skew_salted_revenue",
+        "order_gap_stats",
+        "cumulative_distinct_users",
+    },
+}
 ALL_Q = {
-    **olap_next6.QUERIES_NEXT,
     **llm_next5.QUERIES_NEXT,
-    **{k: indicators.QUERIES[k] for k in _INDICATOR_KEYS},
     **stream_next5.QUERIES_NEXT,
 }
 ALL_O = {
-    **olap_next6.ORACLE_NEXT,
     **llm_next5.ORACLE_NEXT,
-    **{k: indicators.ORACLE[k] for k in _INDICATOR_KEYS},
     **stream_next5.ORACLE_NEXT,
 }
 
@@ -38,6 +48,8 @@ _ROWS_ONLY = {"doc_compression_ratio"}
 
 def test_every_new_key_is_oracled_or_annotated():
     assert set(ALL_Q) - set(ALL_O) == _ROWS_ONLY
+    for mod, keys in MOVED_KEYS.items():
+        assert keys <= set(mod.QUERIES) & set(mod.ORACLE), mod.__name__
 
 
 @pytest.mark.parametrize("key", sorted(set(ALL_Q) - _ROWS_ONLY))
@@ -46,19 +58,6 @@ def test_new_key_parity(spark, key):
     assert_gradable_schema(df, key)
     assert df.count() > 0, f"{key}: empty result"
     compare(df, duckdb_run(ALL_O[key], SF_ORACLE))
-
-
-def test_skew_salted_revenue_hot_cold_split_is_exhaustive(spark):
-    """The report-driven split must not lose or duplicate rows: the
-    composed result's order count equals the plain join's, and the
-    hot-key list is the true fanout top-K."""
-    out = ALL_Q["skew_salted_revenue"](spark, SF_ORACLE).collect()
-    plain = duckdb_run(
-        """SELECT count(*) AS n FROM orders o
-           JOIN customer c ON o.o_custkey = c.c_custkey""",
-        SF_ORACLE,
-    )
-    assert sum(r.n_orders for r in out) == int(plain.n.iloc[0])
 
 
 def test_token_entropy_bounds_and_uniform_case(spark):
@@ -141,7 +140,7 @@ def test_aroon_extremes(spark):
     with tempfile.TemporaryDirectory() as d:
         ev.write.parquet(os.path.join(d, "events.parquet"))
         got = sorted(
-            ALL_Q["aroon"](spark, d).collect(), key=lambda r: r.date
+            indicators.QUERIES["aroon"](spark, d).collect(), key=lambda r: r.date
         )
     for i, r in enumerate(got):
         # highs strictly decrease: the max is always the FIRST frame row
@@ -151,7 +150,7 @@ def test_aroon_extremes(spark):
 
 
 def test_keltner_band_symmetry_and_center(spark):
-    rows = ALL_Q["keltner"](spark, SF_ORACLE).collect()
+    rows = indicators.QUERIES["keltner"](spark, SF_ORACLE).collect()
     assert rows
     for r in rows[:200]:
         assert r.kc_lower <= r.kc_center <= r.kc_upper
@@ -160,7 +159,7 @@ def test_keltner_band_symmetry_and_center(spark):
 
 def test_cmf_bounded(spark):
     """CMF is a volume-weighted average of multipliers in [-1, 1]."""
-    rows = ALL_Q["cmf"](spark, SF_ORACLE).collect()
+    rows = indicators.QUERIES["cmf"](spark, SF_ORACLE).collect()
     assert rows
     for r in rows:
         assert -1.0 - 1e-9 <= r.cmf <= 1.0 + 1e-9
@@ -283,27 +282,3 @@ def test_ngram_novelty_conservation_and_first_doc(spark):
     assert first.novelty == 1.0
 
 
-def test_cumulative_distinct_users_invariants(spark):
-    """cum_users is non-decreasing, ends at the total distinct user
-    count, and every day's actives are a subset of users seen so far
-    (active_users ≤ cum_users)."""
-    from stock_data_project_spark.catalog import load_table
-
-    rows = sorted(
-        ALL_Q["cumulative_distinct_users"](spark, SF_ORACLE).collect(),
-        key=lambda r: r.day,
-    )
-    assert rows
-    total = (
-        load_table(spark, SF_ORACLE, "events")
-        .filter(F.col("user_id").isNotNull())
-        .select("user_id")
-        .distinct()
-        .count()
-    )
-    assert rows[-1].cum_users == total
-    prev = 0
-    for r in rows:
-        assert r.cum_users >= prev and r.active_users <= r.cum_users
-        assert r.cum_users - prev == r.new_users
-        prev = r.cum_users

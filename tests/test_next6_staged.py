@@ -1,33 +1,49 @@
-"""Late-r8-built keys staged for the r9 window (indicators,
-olap_next7, llm_next6): the SAME value-level DuckDB comparison the
-driver runs, plus each key's semantic pins."""
+"""Late-r8-built keys staged for the r9 window (llm_next6,
+stream_next6): the SAME value-level DuckDB comparison the driver
+runs, plus each key's semantic pins. The indicator and OLAP-family
+keys staged with them are checked once by
+tests/test_oracle_parity.py."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from stock_data_project_spark.plans import (
+    audits,
+    graph,
     indicators,
     llm_next6,
-    olap_next7,
+    olap,
     stream_next6,
 )
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
-_INDICATOR_KEYS = ("trix", "adx")
+# Keys staged here that now live in the domain modules; their
+# parity runs in tests/test_oracle_parity.py.
+MOVED_KEYS = {
+    indicators: {
+        "trix",
+        "adx",
+    },
+    olap: {
+        "rfm_segmentation",
+        "pareto_revenue",
+    },
+    graph: {
+        "basket_lift",
+    },
+    audits: {
+        "mad_outliers",
+    },
+}
 ALL_Q = {
-    **{k: indicators.QUERIES[k] for k in _INDICATOR_KEYS},
-    **olap_next7.QUERIES_NEXT,
     **llm_next6.QUERIES_NEXT,
     **stream_next6.QUERIES_NEXT,
 }
 ALL_O = {
-    **{k: indicators.ORACLE[k] for k in _INDICATOR_KEYS},
-    **olap_next7.ORACLE_NEXT,
     **llm_next6.ORACLE_NEXT,
     **stream_next6.ORACLE_NEXT,
 }
@@ -35,6 +51,8 @@ ALL_O = {
 
 def test_every_new_key_is_oracled():
     assert set(ALL_Q) == set(ALL_O)
+    for mod, keys in MOVED_KEYS.items():
+        assert keys <= set(mod.QUERIES) & set(mod.ORACLE), mod.__name__
 
 
 @pytest.mark.parametrize("key", sorted(ALL_Q))
@@ -153,77 +171,6 @@ def test_decimal_fold_keys_run_with_arrow_disabled(spark):
         assert indicators.q_adx(spark, SF_SMOKE).count() > 0
     finally:
         spark.conf.set(key, old)
-
-
-# ----------------------------------------------------------------- olap
-
-
-def test_rfm_scores_partition_customers(spark):
-    out = olap_next7.q_rfm_segmentation(spark, SF_ORACLE)
-    total = out.agg(F.sum("n_customers")).collect()[0][0]
-    n_cust = duckdb_run(
-        "SELECT count(DISTINCT o_custkey) AS n FROM orders", SF_ORACLE
-    )["n"][0]
-    assert total == n_cust
-    # each score dimension is an exact ntile: bucket sizes differ <= 1
-    pdf = out.toPandas()
-    for col in ("r_score", "f_score", "m_score"):
-        sizes = pdf.groupby(col)["n_customers"].sum()
-        assert set(sizes.index) == {1, 2, 3, 4, 5}
-        assert sizes.max() - sizes.min() <= 1, col
-
-
-def test_pareto_invariants(spark):
-    pdf = olap_next7.q_pareto_revenue(spark, SF_ORACLE).toPandas()
-    assert (pdf["n_top_customers"] >= 1).all()
-    assert (pdf["n_top_customers"] <= pdf["n_customers"]).all()
-    # concentration: 80% of revenue never needs more than 80% of
-    # customers (revenues sorted desc)
-    assert (
-        pdf["n_top_customers"] <= np.ceil(0.8 * pdf["n_customers"]) + 1
-    ).all()
-
-
-def test_basket_lift_identities(spark):
-    pdf = olap_next7.q_basket_lift(spark, SF_ORACLE).toPandas()
-    assert (pdf["brand_a"] < pdf["brand_b"]).all()
-    n = duckdb_run(
-        """SELECT count(DISTINCT l_orderkey) AS n
-           FROM lineitem JOIN part ON p_partkey = l_partkey""",
-        SF_ORACLE,
-    )["n"][0]
-    # recompute conf = pair/supp_a and lift = pair*N/(supp_a*supp_b)
-    # from independently-derived supports
-    supp = duckdb_run(
-        """SELECT p_brand, count(*) AS supp FROM (
-               SELECT DISTINCT l_orderkey, p_brand
-               FROM lineitem JOIN part ON p_partkey = l_partkey)
-           GROUP BY 1""",
-        SF_ORACLE,
-    ).set_index("p_brand")["supp"]
-    sa = pdf["brand_a"].map(supp).to_numpy(dtype=float)
-    sb = pdf["brand_b"].map(supp).to_numpy(dtype=float)
-    assert np.allclose(pdf["conf_a_to_b"], pdf["pair_count"] / sa, atol=1e-6)
-    assert np.allclose(
-        pdf["lift"], pdf["pair_count"] * float(n) / (sa * sb), atol=1e-6
-    )
-
-
-def test_mad_outliers_matches_pandas_median(spark):
-    pdf = olap_next7.q_mad_outliers(spark, SF_ORACLE).toPandas()
-    ev = duckdb_run(
-        """SELECT event_type, date_trunc('week', ts) AS week, value
-           FROM events""",
-        SF_ORACLE,
-    )
-    for _, row in pdf.head(5).iterrows():
-        grp = ev[(ev["event_type"] == row["event_type"]) & (ev["week"] == row["week"])]
-        med = float(np.median(grp["value"]))
-        assert abs(row["median_value"] - round(med, 6)) < 1e-9
-        mad = float(np.median(np.abs(grp["value"] - med)))
-        assert abs(row["mad"] - round(mad, 6)) < 1e-9
-        n_out = int((np.abs(grp["value"] - med) > 3.0 * mad).sum())
-        assert row["n_outliers"] == n_out
 
 
 # ------------------------------------------------------------------ llm

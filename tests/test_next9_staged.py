@@ -1,7 +1,9 @@
-"""Keys staged for the r11 window (llm_next9, olap_next9,
-stream_next8, olap_next10): driver-identical parity plus per-operator
-semantic pins. The ultimate_oscillator / vortex / ichimoku /
-heikin_ashi / parabolic_sar pins live in tests/test_indicators.py."""
+"""Keys staged for the r11 window (llm_next9, stream_next8):
+driver-identical parity plus per-operator semantic pins. The
+ultimate_oscillator / vortex / ichimoku / heikin_ashi / parabolic_sar
+pins live in tests/test_indicators.py, the kcore / item_similarity
+pins in tests/test_graph.py and the ks / gini / benford / chi² pins in
+tests/test_audits.py."""
 
 from __future__ import annotations
 
@@ -118,90 +120,16 @@ def test_quality_classifier_token_counts_match_token_count_key(spark):
     assert got.count() == want.count()
 
 
-# ------------------------------------------------------------ olap_next9
+# ----------------------------------------------------------------- graph
 
-from stock_data_project_spark.plans import olap_next9  # noqa: E402
+from stock_data_project_spark.plans import graph  # noqa: E402
+
+OLAP9_KEYS = {"kcore_decomposition", "item_similarity"}
 
 
 def test_olap9_keys_are_oracled():
-    assert set(olap_next9.QUERIES_NEXT) == set(olap_next9.ORACLE_NEXT)
-
-
-@pytest.mark.parametrize("key", sorted(olap_next9.QUERIES_NEXT))
-def test_olap9_parity(spark, key):
-    df = olap_next9.QUERIES_NEXT[key](spark, SF_ORACLE)
-    assert_gradable_schema(df, key)
-    assert df.count() > 0
-    compare(df, duckdb_run(olap_next9.ORACLE_NEXT[key], SF_ORACLE))
-
-
-def _simulate_kcore(edges, k, rounds):
-    import collections
-
-    E = set(edges)
-    for _ in range(rounds):
-        deg = collections.Counter()
-        for a, b in E:
-            deg[a] += 1
-            deg[b] += 1
-        keep = {n for n, c in deg.items() if c >= k}
-        E2 = {(a, b) for a, b in E if a in keep and b in keep}
-        if E2 == E:
-            break
-        E = E2
-    deg = collections.Counter()
-    for a, b in E:
-        deg[a] += 1
-        deg[b] += 1
-    return dict(deg)
-
-
-@pytest.mark.parametrize("sf", [SF_SMOKE, SF_ORACLE])
-def test_kcore_matches_python_simulation(spark, sf):
-    """The graded R-round peel equals an independent in-memory
-    simulation — robust to testdata regeneration (no fixpoint claim
-    needed; both bound at R identically)."""
-    edges = [
-        (r.a, r.b)
-        for r in olap_next9._copurchase_edges(spark, sf).select("a", "b").collect()
-    ]
-    want = _simulate_kcore(edges, olap_next9._K, olap_next9._ROUNDS)
-    got = {
-        r.node: r.degree
-        for r in olap_next9.q_kcore_decomposition(spark, sf).collect()
-    }
-    assert got == want
-
-
-def test_kcore_peels_crafted_chain_off_clique(spark):
-    """A 4-clique with a pendant chain: the 2-core is exactly the
-    clique (chain peels one node per round — exercises multi-round
-    convergence and the early-exit)."""
-    clique = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
-    chain = [(4, 10), (10, 11), (11, 12)]
-    edges = spark.createDataFrame(clique + chain, "a long, b long")
-    import stock_data_project_spark.plans.olap_next9 as m
-
-    orig = m._copurchase_edges
-    m._copurchase_edges = lambda s, d: edges.withColumn(
-        "support", edges.a * 0 + 2
-    )
-    try:
-        got = {r.node: r.degree for r in m.q_kcore_decomposition(spark, "x").collect()}
-    finally:
-        m._copurchase_edges = orig
-    assert got == {1: 3, 2: 3, 3: 3, 4: 3}
-
-
-def test_item_similarity_bounds_and_symmetric_df(spark):
-    """jaccard in (0, 1]; support <= min(df_a, df_b)."""
-    import pyspark.sql.functions as F
-
-    df = olap_next9.q_item_similarity(spark, SF_SMOKE)
-    assert df.filter((F.col("jaccard") <= 0) | (F.col("jaccard") > 1)).count() == 0
-    assert df.filter(
-        F.col("support") > F.least("df_a", "df_b")
-    ).count() == 0
+    assert OLAP9_KEYS <= set(graph.QUERIES)
+    assert OLAP9_KEYS <= set(graph.ORACLE)
 
 
 # ----------------------------------------------------------- stream_next8
@@ -377,92 +305,20 @@ def test_ndcg_relevance_is_language_match(spark):
     assert float(dcg) == pytest.approx(out[qid].dcg, abs=1e-9)
 
 
-# ------------------------------------------------------------ olap_next10
+# ---------------------------------------------------------------- audits
 
-from stock_data_project_spark.plans import olap_next10  # noqa: E402
+from stock_data_project_spark.plans import audits  # noqa: E402
+
+OLAP10_KEYS = {
+    "ks_statistic",
+    "gini_coefficient",
+    "benford_deviation",
+    "categorical_association",
+}
 
 
 def test_olap10_keys_are_oracled():
-    assert set(olap_next10.QUERIES_NEXT) == set(olap_next10.ORACLE_NEXT)
+    assert OLAP10_KEYS <= set(audits.QUERIES)
+    assert OLAP10_KEYS <= set(audits.ORACLE)
 
 
-@pytest.mark.parametrize("key", sorted(olap_next10.QUERIES_NEXT))
-def test_olap10_parity(spark, key):
-    df = olap_next10.QUERIES_NEXT[key](spark, SF_ORACLE)
-    assert_gradable_schema(df, key)
-    assert df.count() > 0
-    compare(df, duckdb_run(olap_next10.ORACLE_NEXT[key], SF_ORACLE))
-
-
-def test_ks_matches_scipy_style_reference(spark):
-    """Independent in-memory KS over the same cents samples."""
-    row = olap_next10.q_ks_statistic(spark, SF_SMOKE).collect()[0]
-    a = sorted(
-        r.cents
-        for r in olap_next10._seg_cents(
-            spark, SF_SMOKE, olap_next10._KS_SEG_A
-        ).collect()
-    )
-    b = sorted(
-        r.cents
-        for r in olap_next10._seg_cents(
-            spark, SF_SMOKE, olap_next10._KS_SEG_B
-        ).collect()
-    )
-    n, m = len(a), len(b)
-    assert (row.n, row.m) == (n, m)
-    import bisect
-
-    d_num = max(
-        abs(bisect.bisect_right(a, v) * m - bisect.bisect_right(b, v) * n)
-        for v in set(a) | set(b)
-    )
-    assert row.d_num == d_num
-    assert 0 <= row.ks <= 1
-
-
-def test_gini_bounds_and_uniform_zero(spark):
-    """G in [0, 1); a crafted equal-revenue segment ginis to ~0
-    ((n-1)-free exactness: 2Σi·x = (n+1)Σx when all x equal)."""
-    import pyspark.sql.functions as F
-
-    df = olap_next10.q_gini_coefficient(spark, SF_SMOKE)
-    assert df.filter((F.col("gini") < 0) | (F.col("gini") >= 1)).count() == 0
-    # exactness pin: equal values -> numerator exactly 0
-    n, x = 7, 12345
-    a = 2 * sum(i * x for i in range(1, n + 1)) - (n + 1) * n * x
-    assert a == 0
-
-
-def test_benford_shares_and_digits(spark):
-    import pyspark.sql.functions as F
-
-    df = olap_next10.q_benford_deviation(spark, SF_SMOKE)
-    rows = df.collect()
-    assert all(1 <= r.digit <= 9 for r in rows)
-    total_share = sum(r.obs_share for r in rows)
-    assert abs(total_share - 1.0) <= 9 * 5e-7
-    # pinned literals are the canonical log10(1 + 1/d)
-    import math
-
-    for d, w in olap_next10._BENFORD_EXP.items():
-        assert w == pytest.approx(math.log10(1 + 1 / d), abs=5e-7)
-
-
-def test_chi2_cells_reconstruct_totals(spark):
-    """Observed cell counts sum to the corpus size; every expected
-    value is positive; chi2 >= 0."""
-    import pyspark.sql.functions as F
-
-    from stock_data_project_spark.catalog import load_table
-
-    df = olap_next10.q_categorical_association(spark, SF_SMOKE)
-    n = load_table(spark, SF_SMOKE, "documents").count()
-    agg = df.agg(
-        F.sum("observed").alias("tot"),
-        F.min("expected").alias("emin"),
-        F.min("chi2_cell").alias("cmin"),
-    ).collect()[0]
-    assert agg.tot == n
-    assert agg.emin > 0
-    assert agg.cmin >= 0

@@ -1,87 +1,36 @@
-"""Staged r5 OLAP + streaming keys: the SAME value-level DuckDB
-comparison the driver runs (see plans/olap_next2.py and
-plans/stream_next.py for the window timing)."""
+"""Staged r5 streaming keys: the SAME value-level DuckDB comparison
+the driver runs (see plans/stream_next.py for the window timing). The
+OLAP keys staged with them live in plans/olap.py; their parity runs
+in tests/test_oracle_parity.py and their pins in tests/test_olap.py."""
 
 from __future__ import annotations
 
 import pytest
 
-from stock_data_project_spark.plans import olap_next2, stream_next
+from stock_data_project_spark.plans import olap, stream_next
 from tests.conftest import SF_ORACLE
 from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
 
-ALL_Q = {**olap_next2.QUERIES_NEXT, **stream_next.QUERIES_NEXT}
-ALL_O = {**olap_next2.ORACLE_NEXT, **stream_next.ORACLE_NEXT}
+OLAP_KEYS = {
+    "grouping_sets_sales",
+    "revenue_share",
+    "monthly_running_revenue",
+    "range_join_clicks",
+    "props_variant",
+    "hll_rollup",
+}
 ROWS_ONLY = {"hll_rollup"}  # sketch estimates have no DuckDB twin
 
 
 def test_every_staged_key_has_an_oracle():
-    assert set(ALL_Q) - ROWS_ONLY == set(ALL_O)
+    assert set(stream_next.QUERIES_NEXT) == set(stream_next.ORACLE_NEXT)
+    assert OLAP_KEYS <= set(olap.QUERIES)
+    assert OLAP_KEYS - ROWS_ONLY <= set(olap.ORACLE)
 
 
-@pytest.mark.parametrize("key", sorted(ALL_Q))
+@pytest.mark.parametrize("key", sorted(stream_next.QUERIES_NEXT))
 def test_staged_parity(spark, key):
-    df = ALL_Q[key](spark, SF_ORACLE)
+    df = stream_next.QUERIES_NEXT[key](spark, SF_ORACLE)
     assert_gradable_schema(df, key)
     assert df.count() > 0, f"{key}: empty result"
-    if key not in ROWS_ONLY:
-        compare(df, duckdb_run(ALL_O[key], SF_ORACLE))
-
-
-def test_hll_rollup_accuracy_and_merge_consistency(spark):
-    """The sketch estimates must track exact distincts within ±5%,
-    and the ALL row (union of per-type sketches) must agree with the
-    estimate a direct global sketch would give — the mergeability
-    property the rollup exists for."""
-    from pyspark.sql import functions as F
-
-    from stock_data_project_spark.catalog import load_table
-
-    rows = olap_next2.QUERIES_NEXT["hll_rollup"](spark, SF_ORACLE).collect()
-    out = {
-        (r["series_key"] if not r["is_total"] else None): r["approx_users"]
-        for r in rows
-    }
-    assert sum(r["is_total"] for r in rows) == 1
-    ev = load_table(spark, SF_ORACLE, "events")
-    exact = {r["event_type"]: r["n"]
-             for r in ev.groupBy("event_type")
-                        .agg(F.countDistinct("user_id").alias("n")).collect()}
-    exact[None] = ev.agg(F.countDistinct("user_id")).first()[0]
-    for k, e in exact.items():
-        assert abs(out[k] - e) / e < 0.05, (k, out[k], e)
-    direct = ev.agg(
-        F.hll_sketch_estimate(F.hll_sketch_agg("user_id"))
-    ).first()[0]
-    assert abs(out[None] - direct) / direct < 0.01
-
-
-def test_grouping_sets_granularities(spark):
-    """The three set granularities are all present and the grand
-    total row equals the sum of the per-nation rows."""
-    from pyspark.sql import functions as F
-
-    df = olap_next2.QUERIES_NEXT["grouping_sets_sales"](spark, SF_ORACLE).cache()
-    try:
-        flags = {
-            (r["g_nation"], r["g_year"])
-            for r in df.select("g_nation", "g_year").distinct().collect()
-        }
-        assert flags == {(0, 0), (0, 1), (1, 1)}
-        total = df.filter("g_nation = 1").agg(F.sum("n_orders")).first()[0]
-        per_nation = df.filter("g_nation = 0 AND g_year = 1").agg(
-            F.sum("n_orders")
-        ).first()[0]
-        assert total == per_nation
-    finally:
-        df.unpersist()
-
-
-def test_revenue_shares_sum_to_one(spark):
-    from pyspark.sql import functions as F
-
-    df = olap_next2.QUERIES_NEXT["revenue_share"](spark, SF_ORACLE)
-    sums = df.groupBy("r_name").agg(F.sum("share").alias("s")).collect()
-    for r in sums:
-        assert abs(r["s"] - 1.0) < 1e-4, r
-
+    compare(df, duckdb_run(stream_next.ORACLE_NEXT[key], SF_ORACLE))

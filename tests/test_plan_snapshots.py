@@ -13,7 +13,7 @@ import re
 
 from pyspark.sql import functions as F  # noqa: F401
 
-from stock_data_project_spark.plans import bars, olap
+from stock_data_project_spark.plans import bars, graph, olap
 from tests.conftest import SF_SMOKE
 
 
@@ -133,10 +133,8 @@ def test_olap_next_q8_q9_dims_broadcast(spark):
     """The prebuilt Q8/Q9 shapes: every dimension hop rides a
     broadcast join; the only hash exchanges belong to the
     fact⋈orders join and the final aggregate."""
-    from stock_data_project_spark.plans.olap_next import QUERIES_NEXT
-
     for key, min_bc in (("tpch_q8", 3), ("tpch_q9", 2)):
-        plan = _plan(QUERIES_NEXT[key](spark, SF_SMOKE))
+        plan = _plan(olap.QUERIES[key](spark, SF_SMOKE))
         assert plan.count("BroadcastHashJoin") >= min_bc, key
         assert "CartesianProduct" not in plan, key
         assert _n_exchanges(plan) <= 4, (key, plan)
@@ -145,17 +143,13 @@ def test_olap_next_q8_q9_dims_broadcast(spark):
 def test_olap_next_q20_semi_join_chain(spark):
     """Q20's nested-IN chain must plan as semi joins (no fact
     fan-out), with the part filter pushed into its scan."""
-    from stock_data_project_spark.plans.olap_next import QUERIES_NEXT
-
-    plan = _plan(QUERIES_NEXT["tpch_q20"](spark, SF_SMOKE))
+    plan = _plan(olap.QUERIES["tpch_q20"](spark, SF_SMOKE))
     assert "LeftSemi" in plan
     assert "CartesianProduct" not in plan
 
 
 def test_tpch_q18_big_orders_broadcast(spark):
-    from stock_data_project_spark.plans import olap_next4
-
-    plan = _plan(olap_next4.QUERIES_NEXT["tpch_q18"](spark, SF_SMOKE))
+    plan = _plan(olap.QUERIES["tpch_q18"](spark, SF_SMOKE))
     # the rare big-order set must ride a broadcast into the orders
     # scan — a shuffle join here would re-shuffle the whole fact
     assert "BroadcastHashJoin" in plan
@@ -163,9 +157,7 @@ def test_tpch_q18_big_orders_broadcast(spark):
 
 
 def test_frequent_pairs_prune_before_pairing(spark):
-    from stock_data_project_spark.plans import olap_next4
-
-    plan = _plan(olap_next4.QUERIES_NEXT["frequent_pairs"](spark, SF_SMOKE))
+    plan = _plan(graph.QUERIES["frequent_pairs"](spark, SF_SMOKE))
     # the apriori prune is a semi join that must sit BELOW the
     # pairing self-join in the plan (prune first, pair second), and
     # the pairing is an equi-join on the order key, never a cartesian
@@ -174,9 +166,7 @@ def test_frequent_pairs_prune_before_pairing(spark):
 
 
 def test_quantile_rollup_single_fact_scan_shape(spark):
-    from stock_data_project_spark.plans import olap_next3
-
-    plan = _plan(olap_next3.QUERIES_NEXT["quantile_rollup"](spark, SF_SMOKE))
+    plan = _plan(olap.QUERIES["quantile_rollup"](spark, SF_SMOKE))
     # binning groupBy partial-aggregates map-side; the estimator tail
     # runs on sketch-sized data. The domain probe is the one extra
     # single-row aggregate (broadcast, scalar-subquery pattern).

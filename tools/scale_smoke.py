@@ -467,9 +467,7 @@ def main() -> None:
         from stock_data_project_spark.plans.llm_next import (
             QUERIES_NEXT as LLM_NEXT,
         )
-        from stock_data_project_spark.plans.olap_next2 import (
-            QUERIES_NEXT as OLAP_NEXT2,
-        )
+        from stock_data_project_spark.plans.olap import QUERIES as OLAP
 
         t0 = time.perf_counter()
         LLM_NEXT["ann_pq"](spark, out_dir).write.mode("overwrite").format(
@@ -478,7 +476,7 @@ def main() -> None:
         timings["ann_pq_embeddings"] = round(time.perf_counter() - t0, 2)
 
         t0 = time.perf_counter()
-        OLAP_NEXT2["range_join_clicks"](spark, out_dir).write.mode(
+        OLAP["range_join_clicks"](spark, out_dir).write.mode(
             "overwrite"
         ).format("noop").save()
         timings["range_join_events"] = round(time.perf_counter() - t0, 2)
