@@ -1,18 +1,18 @@
 """Invariant pins for the co-purchase / co-activity graph keys of
-plans/graph.py: brute-force triangle and k-core replays, apriori
-consistency of the pair mining, PageRank mass, basket-lift identities
-and the entity-resolution block arithmetic. Value parity of every key,
+plans/graph.py: a brute-force triangle replay, apriori consistency of
+the pair mining, PageRank mass and basket-lift identities. The
+entity-resolution, k-core and item-similarity pins stay in
+tests/test_next8_staged.py and tests/test_next9_staged.py under their
+names. Value parity of every key,
 its graded schema and a non-empty result are ``test_oracle_parity``
 at sf0.01."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
 from stock_data_project_spark.plans import graph
-from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.conftest import SF_ORACLE
 from tests.oracle_utils import duckdb_run
 
 
@@ -101,159 +101,3 @@ def test_basket_lift_identities(spark):
     assert np.allclose(
         pdf["lift"], pdf["pair_count"] * float(n) / (sa * sb), atol=1e-6
     )
-
-
-def test_entity_resolution_invariants(spark):
-
-    pdf = graph.q_entity_resolution(spark, SF_ORACLE).toPandas()
-    # matches are a subset of the block's pairs; min_matched_lev is
-    # only defined (and <= threshold) where matches exist
-    assert (pdf["n_matched_pairs"] <= pdf["n_block_pairs"]).all()
-    has_match = pdf["n_matched_pairs"] > 0
-    assert (pdf.loc[has_match, "min_matched_lev"] <= 2).all()
-    assert pdf.loc[~has_match, "min_matched_lev"].isna().all()
-    # block-pair totals == sum over blocks of C(block_size, 2),
-    # recomputed independently
-    import duckdb
-
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW customer AS SELECT * FROM "
-        f"read_parquet('{SF_ORACLE}/customer.parquet')"
-    )
-    (want,) = con.sql(
-        """SELECT CAST(sum(n * (n - 1) / 2) AS BIGINT) FROM (
-               SELECT count(*) AS n FROM customer
-               GROUP BY c_nationkey, c_mktsegment)"""
-    ).fetchone()
-    assert int(pdf["n_block_pairs"].sum()) == want
-
-
-def _lev(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(
-                min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
-            )
-        prev = cur
-    return prev[-1]
-
-
-def test_entity_resolution_exact_family_collapse_is_exact(spark, tmp_path):
-    """r11 verdict item 2: the collapse-exact-first pre-pass must keep
-    the output EQUAL to the full within-block enumeration on a corpus
-    with real exact families (TPC-H names are all-distinct, so the
-    graded path never exercises the expansion arithmetic — this
-    planted corpus does: lev-0 family pairs, cross-family lev-1
-    matches weighted m_a*m_b, and the min_matched_lev=0 branch)."""
-
-    rows = [
-        # block (1, 'A'): two exact families + a near name + a far name
-        (1, "Customer#000000001", 1, "A"),
-        (2, "Customer#000000001", 1, "A"),
-        (3, "Customer#000000001", 1, "A"),
-        (4, "Customer#000000002", 1, "A"),  # lev 1 vs family 1
-        (5, "Customer#000000002", 1, "A"),
-        (6, "Customer#000099002", 1, "A"),  # lev 3 vs 002, lev 3 vs 001
-        # block (2, 'B'): no exact dups, one lev-2 pair
-        (7, "Customer#000000010", 2, "B"),
-        (8, "Customer#000000943", 2, "B"),
-        (9, "Customer#000011010", 2, "B"),  # lev 2 vs id 7
-        # block (3, 'C'): singleton — no pairs at all
-        (10, "Customer#000000099", 3, "C"),
-    ]
-    df = spark.createDataFrame(
-        rows, "c_custkey int, c_name string, c_nationkey int, c_mktsegment string"
-    )
-    df.write.mode("overwrite").parquet(f"{tmp_path}/customer.parquet")
-    got = {
-        (r["nationkey"], r["mktsegment"]): r
-        for r in graph.q_entity_resolution(spark, str(tmp_path)).collect()
-    }
-    # brute-force expectation
-    import itertools
-    from collections import defaultdict
-
-    blocks = defaultdict(list)
-    for cid, name, nk, seg in rows:
-        blocks[(nk, seg)].append(name)
-    for bk, names in blocks.items():
-        pairs = list(itertools.combinations(names, 2))
-        levs = [_lev(a, b) for a, b in pairs]
-        matched = [d for d in levs if d <= 2]
-        r = got[bk]
-        assert r["n_block_pairs"] == len(pairs), bk
-        assert r["n_matched_pairs"] == len(matched), (bk, r)
-        want_min = min(matched) if matched else None
-        assert r["min_matched_lev"] == want_min, (bk, r)
-
-
-def _simulate_kcore(edges, k, rounds):
-    import collections
-
-    E = set(edges)
-    for _ in range(rounds):
-        deg = collections.Counter()
-        for a, b in E:
-            deg[a] += 1
-            deg[b] += 1
-        keep = {n for n, c in deg.items() if c >= k}
-        E2 = {(a, b) for a, b in E if a in keep and b in keep}
-        if E2 == E:
-            break
-        E = E2
-    deg = collections.Counter()
-    for a, b in E:
-        deg[a] += 1
-        deg[b] += 1
-    return dict(deg)
-
-
-@pytest.mark.parametrize("sf", [SF_SMOKE, SF_ORACLE])
-def test_kcore_matches_python_simulation(spark, sf):
-    """The graded R-round peel equals an independent in-memory
-    simulation — robust to testdata regeneration (no fixpoint claim
-    needed; both bound at R identically)."""
-    edges = [
-        (r.a, r.b)
-        for r in graph._copurchase_edges(spark, sf).select("a", "b").collect()
-    ]
-    want = _simulate_kcore(edges, graph._K, graph._ROUNDS)
-    got = {
-        r.node: r.degree
-        for r in graph.q_kcore_decomposition(spark, sf).collect()
-    }
-    assert got == want
-
-
-def test_kcore_peels_crafted_chain_off_clique(spark):
-    """A 4-clique with a pendant chain: the 2-core is exactly the
-    clique (chain peels one node per round — exercises multi-round
-    convergence and the early-exit)."""
-    clique = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
-    chain = [(4, 10), (10, 11), (11, 12)]
-    edges = spark.createDataFrame(clique + chain, "a long, b long")
-    import stock_data_project_spark.plans.graph as m
-
-    orig = m._copurchase_edges
-    m._copurchase_edges = lambda s, d: edges.withColumn(
-        "support", edges.a * 0 + 2
-    )
-    try:
-        got = {r.node: r.degree for r in m.q_kcore_decomposition(spark, "x").collect()}
-    finally:
-        m._copurchase_edges = orig
-    assert got == {1: 3, 2: 3, 3: 3, 4: 3}
-
-
-def test_item_similarity_bounds_and_symmetric_df(spark):
-    """jaccard in (0, 1]; support <= min(df_a, df_b)."""
-    import pyspark.sql.functions as F
-
-    df = graph.q_item_similarity(spark, SF_SMOKE)
-    assert df.filter((F.col("jaccard") <= 0) | (F.col("jaccard") > 1)).count() == 0
-    assert df.filter(
-        F.col("support") > F.least("df_a", "df_b")
-    ).count() == 0

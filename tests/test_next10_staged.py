@@ -3,8 +3,8 @@ ann_recall_eval, stream_next9 stream_full_join): driver-identical
 parity plus per-operator semantic pins, and the planted-ties
 kruskal_wallis parity (the testdata is tie-free on cents). The
 acf/seasonal/holt/cusum/theil_sen pins live in
-tests/test_statistics.py, the Welch and Kruskal replays in
-tests/test_audits.py."""
+tests/test_statistics.py; the Welch and Kruskal replays here test
+plans/audits.py."""
 
 from __future__ import annotations
 
@@ -217,6 +217,76 @@ def test_cusum_and_kruskal_are_oracled():
     assert "kruskal_wallis" in audits.ORACLE
 
 
+def test_welch_ttest_matches_scipy_formula(spark):
+    """Semantic pin vs an independent Welch computation (numpy,
+    textbook formulas) to 4dp."""
+    import numpy as np
+
+    rows = audits.q_welch_ttest(spark, SF_ORACLE).collect()
+    import duckdb
+
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW customer AS SELECT * FROM "
+        f"read_parquet('{SF_ORACLE}/customer.parquet')"
+    )
+    data = con.sql(
+        "SELECT c_mktsegment, CAST(round(c_acctbal * 100, 0) AS BIGINT)"
+        " FROM customer"
+    ).fetchall()
+    by_seg: dict[str, list[int]] = {}
+    for seg, cents in data:
+        by_seg.setdefault(seg, []).append(cents)
+    for row in rows:
+        a = np.array(by_seg[row["seg_a"]], dtype=np.float64)
+        b = np.array(by_seg[row["seg_b"]], dtype=np.float64)
+        va, vb = a.var(ddof=1), b.var(ddof=1)
+        se2 = va / len(a) + vb / len(b)
+        t = (a.mean() - b.mean()) / np.sqrt(se2)
+        dfw = se2**2 / (
+            (va / len(a)) ** 2 / (len(a) - 1) + (vb / len(b)) ** 2 / (len(b) - 1)
+        )
+        assert abs(row["t_stat"] - t) < 1e-4, (row, t)
+        assert abs(row["df_welch"] - dfw) < 1e-2 * max(1.0, dfw), (row, dfw)
+
+
+def test_kruskal_wallis_matches_textbook(spark):
+    """Independent H computation (numpy textbook formula with average
+    ranks) on the real data, to 4dp."""
+    import numpy as np
+
+    (row,) = audits.q_kruskal_wallis(spark, SF_ORACLE).collect()
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW customer AS SELECT * FROM "
+        f"read_parquet('{SF_ORACLE}/customer.parquet')"
+    )
+    data = con.sql(
+        "SELECT c_mktsegment, CAST(round(c_acctbal*100,0) AS BIGINT) FROM customer"
+    ).fetchall()
+    segs = sorted({s for s, _ in data})
+    all_vals = np.array([v for _, v in data], dtype=np.float64)
+    order = np.argsort(all_vals, kind="stable")
+    ranks = np.empty(len(all_vals))
+    sv = all_vals[order]
+    i = 0
+    pos = np.arange(1, len(sv) + 1, dtype=np.float64)
+    while i < len(sv):
+        j = i
+        while j + 1 < len(sv) and sv[j + 1] == sv[i]:
+            j += 1
+        ranks[order[i : j + 1]] = pos[i : j + 1].mean()
+        i = j + 1
+    n = len(all_vals)
+    h = 0.0
+    labels = np.array([s for s, _ in data])
+    for s in segs:
+        rs = ranks[labels == s]
+        h += rs.sum() ** 2 / len(rs)
+    h = 12.0 / (n * (n + 1)) * h - 3 * (n + 1)
+    assert abs(row["h_stat"] - h) < 1e-4, (row["h_stat"], h)
+
+
 def test_kruskal_wallis_planted_ties_parity(spark, tmp_path):
     """The tie machinery (half-unit average ranks + t³−t correction)
     is not exercised by the tie-free testdata — plant heavy ties in a
@@ -224,7 +294,6 @@ def test_kruskal_wallis_planted_ties_parity(spark, tmp_path):
     h_corrected > h_stat."""
     import duckdb as ddb
     import pandas as pd
-
 
     pdf = pd.DataFrame(
         {

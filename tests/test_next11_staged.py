@@ -2,9 +2,9 @@
 dsir_importance, stream_next10 stream_chained_agg): driver-identical
 parity plus independent implementation pins (pure-Python DSIR
 replay) and a planted-ties Mann-Whitney construction (the testdata is
-tie-free on cents, so the tie machinery needs its own table). The
-mann_whitney_u / event_transition_matrix replays live in
-tests/test_audits.py."""
+tie-free on cents, so the tie machinery needs its own table), and
+the mann_whitney_u / event_transition_matrix replays of
+plans/audits.py."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ import numpy as np
 
 from stock_data_project_spark.plans import audits, llm_next11
 from tests.conftest import SF_ORACLE, SF_SMOKE
-from tests.oracle_utils import assert_gradable_schema, compare, duckdb_run
+from tests.oracle_utils import assert_gradable_schema, avg_ranks, compare, duckdb_run
 
 
 def test_next11_keys_are_oracled():
@@ -31,6 +31,67 @@ def test_dsir_parity(spark):
 
 
 # ------------------------------------------------------ semantic pins
+
+
+def test_mann_whitney_matches_textbook(spark):
+    """Independent U and z per pair (numpy average ranks over the
+    pair's combined sample + the tie-corrected normal approximation),
+    to 4dp on the real data."""
+    rows = {
+        (r["seg_a"], r["seg_b"]): r
+        for r in audits.q_mann_whitney_u(spark, SF_ORACLE).collect()
+    }
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW customer AS SELECT * FROM "
+        f"read_parquet('{SF_ORACLE}/customer.parquet')"
+    )
+    data = con.sql(
+        "SELECT c_mktsegment, CAST(round(c_acctbal*100,0) AS BIGINT) FROM customer"
+    ).fetchall()
+    segs = sorted({s for s, _ in data})
+    by_seg = {s: np.array([v for t, v in data if t == s], dtype=np.float64) for s in segs}
+    assert len(rows) == len(segs) * (len(segs) - 1) // 2
+    for i, a in enumerate(segs):
+        for b in segs[i + 1 :]:
+            xa, xb = by_seg[a], by_seg[b]
+            comb = np.concatenate([xa, xb])
+            ranks = avg_ranks(comb)
+            r_a = ranks[: len(xa)].sum()
+            u = r_a - len(xa) * (len(xa) + 1) / 2.0
+            n = len(comb)
+            _, t_counts = np.unique(comb, return_counts=True)
+            tie = float((t_counts**3 - t_counts).sum())
+            sigma = np.sqrt(
+                len(xa) * len(xb) / 12.0 * ((n + 1) - tie / (n * (n - 1)))
+            )
+            z = (u - len(xa) * len(xb) / 2.0) / sigma
+            row = rows[(a, b)]
+            assert abs(row["u_stat"] - u) < 1e-9, (a, b, row["u_stat"], u)
+            assert abs(row["z_stat"] - z) < 1e-4, (a, b, row["z_stat"], z)
+
+
+def test_event_transition_invariants(spark):
+    """Counts account for every non-first event; per-prev
+    probabilities are the exact HALF_UP ratios and sum to ~1."""
+    rows = audits.q_event_transition_matrix(spark, SF_ORACLE).collect()
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF_ORACLE}/events.parquet')"
+    )
+    n_events, n_users = con.sql(
+        "SELECT count(*), count(DISTINCT user_id) FROM events"
+    ).fetchone()
+    assert sum(r["n_trans"] for r in rows) == n_events - n_users
+    by_prev: dict[str, list] = {}
+    for r in rows:
+        by_prev.setdefault(r["prev_type"], []).append(r)
+    for prev, grp in by_prev.items():
+        n_from = grp[0]["n_from"]
+        assert all(g["n_from"] == n_from for g in grp)
+        assert sum(g["n_trans"] for g in grp) == n_from
+        p_sum = sum(g["p_trans"] for g in grp)
+        assert abs(p_sum - 1.0) < len(grp) * 5e-7 + 1e-12, (prev, p_sum)
 
 
 def test_mann_whitney_planted_ties_parity(spark, tmp_path):

@@ -2,12 +2,13 @@
 flesch_reading_ease / containment_pairs): driver-identical parity
 plus independent implementation pins (numpy OLS replays, a
 pure-``re`` readability recount, a planted sub-document containment
-construction). The one_way_anova / herfindahl_index /
-event_mutual_info pins live in tests/test_audits.py. The runs/ljung_box/jarque_bera/sharpe/
+construction), and the one_way_anova / herfindahl_index /
+event_mutual_info pins of plans/audits.py. The runs/ljung_box/jarque_bera/sharpe/
 hurst/variance_ratio/seasonality pins live in tests/test_statistics.py."""
 
 from __future__ import annotations
 
+import math
 import re
 
 import duckdb
@@ -35,6 +36,43 @@ def test_llm_next12_parity(spark, key):
 
 
 # ------------------------------------------------------ semantic pins
+
+
+def test_one_way_anova_matches_numpy(spark):
+    row = audits.q_one_way_anova(spark, SF_ORACLE).collect()[0]
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW customer AS SELECT * FROM "
+        f"read_parquet('{SF_ORACLE}/customer.parquet')"
+    )
+    df = con.sql(
+        "SELECT c_mktsegment AS seg,"
+        " CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents FROM customer"
+    ).df()
+    groups = [g["cents"].to_numpy(dtype=np.float64) for _, g in df.groupby("seg")]
+    allv = np.concatenate(groups)
+    ssb = sum(len(g) * (g.mean() - allv.mean()) ** 2 for g in groups)
+    ssw = sum(((g - g.mean()) ** 2).sum() for g in groups)
+    k, n = len(groups), len(allv)
+    f = (ssb / (k - 1)) / (ssw / (n - k))
+    eta = ssb / (ssb + ssw)
+    assert (row["k_groups"], row["n_total"]) == (k, n)
+    assert abs(row["f_stat"] - f) < 1e-5 * max(1.0, abs(f))
+    assert abs(row["eta_sq"] - eta) < 1e-6
+    assert abs(row["ss_between"] - ssb) < 1.0  # ~1e13-scale double sums
+    assert abs(row["ss_within"] - ssw) < 1.0
+
+
+def test_herfindahl_invariants(spark):
+    rows = audits.q_herfindahl_index(spark, SF_ORACLE).collect()
+    assert rows
+    for r in rows:
+        n = r["n_suppliers"]
+        # HHI of n shares lies in [1/n, 1]; rounded shares drift by
+        # at most n·1e-6 off the simplex
+        assert 1.0 / n - 1e-4 <= r["hhi"] <= 1.0 + 1e-4, r
+        assert 1.0 / n - 1e-6 <= r["top_share"] <= 1.0
+        assert r["hhi"] <= r["top_share"] + 1e-6 or n == 1
 
 
 def test_zipf_slope_matches_numpy_and_is_zipfian(spark):
@@ -147,5 +185,34 @@ def test_containment_pairs_consistency_with_jaccard(spark):
 def test_next12b_keys_are_oracled():
     assert "event_mutual_info" in audits.QUERIES
     assert "event_mutual_info" in audits.ORACLE
+
+
+def test_event_mutual_info_matches_numpy(spark):
+
+    row = audits.q_event_mutual_info(spark, SF_ORACLE).collect()[0]
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF_ORACLE}/events.parquet')"
+    )
+    cells = con.sql(
+        """SELECT event_type, CAST((epoch_us(ts) // 3600000000) % 24 AS INT) AS h,
+                  count(*) AS c
+           FROM events GROUP BY 1, 2"""
+    ).df()
+    n = cells["c"].sum()
+    cx = cells.groupby("event_type")["c"].sum()
+    cy = cells.groupby("h")["c"].sum()
+    mi = sum(
+        (r.c / n) * math.log(r.c * n / (cx[r.event_type] * cy[r.h]))
+        for r in cells.itertuples()
+    )
+    hx = -sum((v / n) * math.log(v / n) for v in cx)
+    hy = -sum((v / n) * math.log(v / n) for v in cy)
+    assert row["n_events"] == n and row["n_cells"] == len(cells)
+    assert abs(row["mi_nats"] - mi) < 1e-5
+    assert abs(row["h_type"] - hx) < 1e-5
+    assert abs(row["h_hour"] - hy) < 1e-5
+    assert abs(row["nmi"] - mi / min(hx, hy)) < 1e-4
+    assert 0.0 <= row["nmi"] <= 1.0 + 1e-9
 
 

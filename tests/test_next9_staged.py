@@ -1,9 +1,9 @@
 """Keys staged for the r11 window (llm_next9, stream_next8):
 driver-identical parity plus per-operator semantic pins. The
 ultimate_oscillator / vortex / ichimoku / heikin_ashi / parabolic_sar
-pins live in tests/test_indicators.py, the kcore / item_similarity
-pins in tests/test_graph.py and the ks / gini / benford / chi² pins in
-tests/test_audits.py."""
+pins live in tests/test_indicators.py. The kcore / item_similarity
+pins test plans/graph.py and the ks / gini / benford / chi² pins
+plans/audits.py."""
 
 from __future__ import annotations
 
@@ -130,6 +130,75 @@ OLAP9_KEYS = {"kcore_decomposition", "item_similarity"}
 def test_olap9_keys_are_oracled():
     assert OLAP9_KEYS <= set(graph.QUERIES)
     assert OLAP9_KEYS <= set(graph.ORACLE)
+
+
+def _simulate_kcore(edges, k, rounds):
+    import collections
+
+    E = set(edges)
+    for _ in range(rounds):
+        deg = collections.Counter()
+        for a, b in E:
+            deg[a] += 1
+            deg[b] += 1
+        keep = {n for n, c in deg.items() if c >= k}
+        E2 = {(a, b) for a, b in E if a in keep and b in keep}
+        if E2 == E:
+            break
+        E = E2
+    deg = collections.Counter()
+    for a, b in E:
+        deg[a] += 1
+        deg[b] += 1
+    return dict(deg)
+
+
+@pytest.mark.parametrize("sf", [SF_SMOKE, SF_ORACLE])
+def test_kcore_matches_python_simulation(spark, sf):
+    """The graded R-round peel equals an independent in-memory
+    simulation — robust to testdata regeneration (no fixpoint claim
+    needed; both bound at R identically)."""
+    edges = [
+        (r.a, r.b)
+        for r in graph._copurchase_edges(spark, sf).select("a", "b").collect()
+    ]
+    want = _simulate_kcore(edges, graph._K, graph._ROUNDS)
+    got = {
+        r.node: r.degree
+        for r in graph.q_kcore_decomposition(spark, sf).collect()
+    }
+    assert got == want
+
+
+def test_kcore_peels_crafted_chain_off_clique(spark):
+    """A 4-clique with a pendant chain: the 2-core is exactly the
+    clique (chain peels one node per round — exercises multi-round
+    convergence and the early-exit)."""
+    clique = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    chain = [(4, 10), (10, 11), (11, 12)]
+    edges = spark.createDataFrame(clique + chain, "a long, b long")
+    import stock_data_project_spark.plans.graph as m
+
+    orig = m._copurchase_edges
+    m._copurchase_edges = lambda s, d: edges.withColumn(
+        "support", edges.a * 0 + 2
+    )
+    try:
+        got = {r.node: r.degree for r in m.q_kcore_decomposition(spark, "x").collect()}
+    finally:
+        m._copurchase_edges = orig
+    assert got == {1: 3, 2: 3, 3: 3, 4: 3}
+
+
+def test_item_similarity_bounds_and_symmetric_df(spark):
+    """jaccard in (0, 1]; support <= min(df_a, df_b)."""
+    import pyspark.sql.functions as F
+
+    df = graph.q_item_similarity(spark, SF_SMOKE)
+    assert df.filter((F.col("jaccard") <= 0) | (F.col("jaccard") > 1)).count() == 0
+    assert df.filter(
+        F.col("support") > F.least("df_a", "df_b")
+    ).count() == 0
 
 
 # ----------------------------------------------------------- stream_next8
@@ -320,5 +389,79 @@ OLAP10_KEYS = {
 def test_olap10_keys_are_oracled():
     assert OLAP10_KEYS <= set(audits.QUERIES)
     assert OLAP10_KEYS <= set(audits.ORACLE)
+
+
+def test_ks_matches_scipy_style_reference(spark):
+    """Independent in-memory KS over the same cents samples."""
+    row = audits.q_ks_statistic(spark, SF_SMOKE).collect()[0]
+    a = sorted(
+        r.cents
+        for r in audits._seg_cents(
+            spark, SF_SMOKE, audits._KS_SEG_A
+        ).collect()
+    )
+    b = sorted(
+        r.cents
+        for r in audits._seg_cents(
+            spark, SF_SMOKE, audits._KS_SEG_B
+        ).collect()
+    )
+    n, m = len(a), len(b)
+    assert (row.n, row.m) == (n, m)
+    import bisect
+
+    d_num = max(
+        abs(bisect.bisect_right(a, v) * m - bisect.bisect_right(b, v) * n)
+        for v in set(a) | set(b)
+    )
+    assert row.d_num == d_num
+    assert 0 <= row.ks <= 1
+
+
+def test_gini_bounds_and_uniform_zero(spark):
+    """G in [0, 1); a crafted equal-revenue segment ginis to ~0
+    ((n-1)-free exactness: 2Σi·x = (n+1)Σx when all x equal)."""
+    import pyspark.sql.functions as F
+
+    df = audits.q_gini_coefficient(spark, SF_SMOKE)
+    assert df.filter((F.col("gini") < 0) | (F.col("gini") >= 1)).count() == 0
+    # exactness pin: equal values -> numerator exactly 0
+    n, x = 7, 12345
+    a = 2 * sum(i * x for i in range(1, n + 1)) - (n + 1) * n * x
+    assert a == 0
+
+
+def test_benford_shares_and_digits(spark):
+    import pyspark.sql.functions as F
+
+    df = audits.q_benford_deviation(spark, SF_SMOKE)
+    rows = df.collect()
+    assert all(1 <= r.digit <= 9 for r in rows)
+    total_share = sum(r.obs_share for r in rows)
+    assert abs(total_share - 1.0) <= 9 * 5e-7
+    # pinned literals are the canonical log10(1 + 1/d)
+    import math
+
+    for d, w in audits._BENFORD_EXP.items():
+        assert w == pytest.approx(math.log10(1 + 1 / d), abs=5e-7)
+
+
+def test_chi2_cells_reconstruct_totals(spark):
+    """Observed cell counts sum to the corpus size; every expected
+    value is positive; chi2 >= 0."""
+    import pyspark.sql.functions as F
+
+    from stock_data_project_spark.catalog import load_table
+
+    df = audits.q_categorical_association(spark, SF_SMOKE)
+    n = load_table(spark, SF_SMOKE, "documents").count()
+    agg = df.agg(
+        F.sum("observed").alias("tot"),
+        F.min("expected").alias("emin"),
+        F.min("chi2_cell").alias("cmin"),
+    ).collect()[0]
+    assert agg.tot == n
+    assert agg.emin > 0
+    assert agg.cmin >= 0
 
 
